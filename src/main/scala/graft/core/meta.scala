@@ -245,6 +245,7 @@ object SnapshotManager {
   /** Parsed-schema cache keyed by table root + schema id (immutable). */
   private[core] val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, TableSchema]()
+  private[core] val log = org.slf4j.LoggerFactory.getLogger(classOf[SnapshotManager])
 }
 
 /**
@@ -258,7 +259,8 @@ object SnapshotManager {
 class SnapshotManager(val tableRoot: String, hadoopConf: Configuration,
                       val branch: Option[String] = None) {
   private val root = new Path(tableRoot)
-  def fs: FileSystem = root.getFileSystem(hadoopConf)
+  private lazy val localFs = graft.NoForkLocalFileSystem.localFor(root, hadoopConf)
+  def fs: FileSystem = localFs.getOrElse(root.getFileSystem(hadoopConf))
 
   def schemaDir = new Path(root, "schema")
   /** Branches keep their own snapshot chain under branch/<name>/snapshot,
@@ -359,7 +361,23 @@ class SnapshotManager(val tableRoot: String, hadoopConf: Configuration,
     SnapshotManager.schemaCache.put(key, s)
     s
   }
-  def latestSchemaId: Long = listIds(schemaDir, "schema-", ".json").max
+  // the newest schema id this manager has seen. Ids are written in
+  // sequence, so a later call checks that one is still there and probes
+  // the ids after it (two stats) instead of listing the directory; a table
+  // replaced under it falls back to the listing
+  @volatile private var knownSchemaId = -1L
+  def latestSchemaId: Long = {
+    def path(id: Long) = new Path(schemaDir, s"schema-$id.json")
+    val k = knownSchemaId
+    val id =
+      if (k >= 0 && fs.exists(path(k))) {
+        var i = k
+        while (fs.exists(path(i + 1))) i += 1
+        i
+      } else listIds(schemaDir, "schema-", ".json").max
+    knownSchemaId = id
+    id
+  }
   def latestSchema: TableSchema = readSchema(latestSchemaId)
   def tableExists: Boolean = fs.exists(schemaDir)
 
@@ -624,14 +642,16 @@ class SnapshotManager(val tableRoot: String, hadoopConf: Configuration,
         deltaBytes = Some(delta.filter(_.kind == 0).map(_.fileSize).sum))
       if (casWrite(snapshotPath(nextId), Json.write(snap))) {
         writeHint(new Path(snapshotDir, "LATEST"), nextId.toString)
-        GraftMetrics.recordCommit(tableRoot,
-          (System.nanoTime() - commitT0) / 1000000L, attempt + 1L, kind,
+        val ms = (System.nanoTime() - commitT0) / 1000000L
+        GraftMetrics.recordCommit(tableRoot, ms, attempt + 1L, kind,
           addFiles, delFiles, changelog.size.toLong)
+        SnapshotManager.log.info(s"commit table=$tableRoot snapshot=$nextId kind=$kind " +
+          s"attempts=${attempt + 1} files_added=$addFiles files_deleted=$delFiles ms=$ms")
         // post-commit callback (iceberg metadata export) — a hook failure
         // must not fail the commit; the snapshot is already durable
         postCommitHook.foreach(h =>
           try h(snap) catch { case e: Exception =>
-            System.err.println(s"[graft] post-commit hook failed: ${e.getMessage}") })
+            SnapshotManager.log.warn(s"post-commit hook failed: ${e.getMessage}", e) })
         return snap
       }
       attempt += 1

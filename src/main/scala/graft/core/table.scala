@@ -4,7 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.GraftAggs
 import java.util.UUID
@@ -698,13 +700,11 @@ class GraftTable private (
                  // ManifestEntry.totalBuckets on the produced entries
                  totalBucketsByPt: Map[String, Int] = Map.empty): Seq[ManifestEntry] = {
     val commitSeq = commitSeqOverride.getOrElse(nextCommitSeq)
+    // pre-merged frames carry the envelope; the routing projection below
+    // keeps exactly the file columns
     var df =
-      if (preMerged) {
-        val cols = (dataSchema.fields.map(f => col(f.name)) ++
-          shredFields.map(f => col(f.name)) ++
-          Seq(col(SEQ), col(SEQ2), col(COMMIT), col(POS), col(KIND)))
-        dfIn.select(cols.toIndexedSeq: _*)
-      } else {
+      if (preMerged) dfIn
+      else {
         // a pre-assigned row id (compaction rewrite) passes through intact
         var d = align(dfIn, keep = if (isRowTracking) Seq(ROW_ID) else Nil)
         // materialize variant shred columns (typed extractions with stats) —
@@ -748,11 +748,6 @@ class GraftTable private (
                 .otherwise(lit(KIND_INSERT))
             case _ => lit(KIND_INSERT)
           }
-          d = d.withColumn(SEQ, seqExpr(commitSeq))
-            .withColumn(SEQ2, seq2Expr)
-            .withColumn(COMMIT, lit(commitSeq))
-            .withColumn(POS, monotonically_increasing_id())
-            .withColumn(KIND, kindExpr)
           // count aggregator: convert raw inputs to their 0/1 contribution
           // at ingestion, so every STORED value is a partial count and the
           // merge is a plain (associative) sum — a read-time "count the
@@ -760,29 +755,24 @@ class GraftTable private (
           // rows into accumulators. (The reference sidesteps this by having
           // no count agg at all — its docs say emulate with sum over 0/1,
           // aggregation.mdx:77-81 — this is that emulation built in.)
-          if (config.mergeEngine == "aggregation" ||
-              config.mergeEngine == "partial-update") {
-            dataSchema.fields.filterNot(f => pks.contains(f.name)).foreach { f =>
-              // partial-update only aggregates explicitly-marked fields;
+          val counted = dataSchema.fieldNames.filter(c => !pks.contains(c) &&
+            (config.mergeEngine match {
               // the aggregation engine falls back to the table default
-              val fn =
-                if (config.mergeEngine == "aggregation")
-                  config.fieldAggregates.getOrElse(f.name,
-                    config.defaultAggregate.getOrElse("last_non_null_value"))
-                else config.fieldAggregates.getOrElse(f.name, "")
-              if (fn == "count")
-                d = d.withColumn(f.name,
-                  when(col(f.name).isNotNull, lit(1)).otherwise(lit(0))
-                    .cast(f.dataType))
-            }
-          }
-          // within-batch pre-merge for the deduplicate engine
-          if (config.mergeEngine == "deduplicate") {
-            val w = Window.partitionBy(pks.map(col).toIndexedSeq: _*)
-              .orderBy(col(SEQ).desc, col(SEQ2).desc, col(POS).desc)
-            d = d.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn")
-          }
+              case "aggregation" => config.fieldAggregates.getOrElse(c,
+                config.defaultAggregate.getOrElse("last_non_null_value")) == "count"
+              // partial-update only aggregates explicitly-marked fields
+              case "partial-update" => config.fieldAggregates.get(c).contains("count")
+              case _ => false
+            })).toSet
+          // the LSM envelope and the count conversions in ONE projection:
+          // over a local input the optimizer evaluates every projection on
+          // the driver (ConvertToLocalRelation), a pass over the batch each
+          d = d.select((d.schema.fields.map { f =>
+            if (!counted(f.name)) col(f.name)
+            else when(col(f.name).isNotNull, lit(1)).otherwise(lit(0)).cast(f.dataType).as(f.name)
+          } ++ Seq(seqExpr(commitSeq).as(SEQ), seq2Expr.as(SEQ2),
+            lit(commitSeq).as(COMMIT), monotonically_increasing_id().as(POS),
+            kindExpr.as(KIND))).toIndexedSeq: _*)
         }
         d
       }
@@ -804,89 +794,102 @@ class GraftTable private (
 
     // partition + bucket routing. PT is a filesystem-safe 64-bit hash of the
     // partition values (real values live inside the files and in manifest
-    // stats) — avoids Hive path-escaping roundtrip issues entirely.
+    // stats) — avoids Hive path-escaping roundtrip issues entirely. One
+    // projection keeps exactly the file columns and adds PT and BUCKET.
     val partCols = config.partitionKeys
-    df = df.withColumn(PT, ptExpr)
-    df = if (isDynamicBucket) assignDynamicBuckets(df)
-         else df.withColumn(BUCKET,
-           bucketOverride.getOrElse(bucketExpr(forCompact = preMerged)))
+    val fileCols = fileSchema.fieldNames.toSeq.map(col)
+    df = if (isDynamicBucket) assignDynamicBuckets(df.select(fileCols :+ ptExpr.as(PT): _*))
+         else df.select(fileCols ++ Seq(ptExpr.as(PT),
+           bucketOverride.getOrElse(bucketExpr(forCompact = preMerged)).as(BUCKET)): _*)
+    // within-batch pre-merge for the deduplicate engine: the newest version
+    // of each key wins. When the key fixes partition and bucket, it is
+    // partitioned by (PT, BUCKET, pks), so it rides the routing shuffle below
+    // and its sort (PT, BUCKET, pks, newest first) already is the file order
+    def dedupBatch(d: DataFrame): DataFrame =
+      if (!isPk || preMerged || config.mergeEngine != "deduplicate") d
+      else d.withColumn("__rn", row_number().over(Window.partitionBy(
+          ((if (partCols.forall(pks.contains)) Seq(col(PT), col(BUCKET)) else Nil) ++
+            pks.map(col)): _*).orderBy(col(SEQ).desc, col(SEQ2).desc, col(POS).desc)))
+        .filter(col("__rn") === 1).drop("__rn")
+    // the routing shuffle: all rows of a (partition, bucket) in one task.
+    // Unpartitioned fixed-bucket tables send bucket b straight to task
+    // b mod n, n = min(buckets, shuffle partitions), so the buckets of a
+    // small batch still write in parallel (AQE coalesces a by-column
+    // repartition of a small batch into one task that writes every bucket
+    // in turn); a pass-through id on BUCKET also clusters the dedup window
+    def route(d: DataFrame): DataFrame =
+      if (partCols.isEmpty && fixedBucketKeys.isDefined && bucketOverride.isEmpty)
+        d.repartitionById(math.min(config.numBuckets,
+          spark.sessionState.conf.numShufflePartitions), col(BUCKET))
+      else d.repartition((partCols.map(col) :+ col(BUCKET)): _*)
     if (isPk && (!isPostpone || preMerged || bucketOverride.isDefined)) {
-      val routeCols = partCols.map(col) :+ col(BUCKET)
       // pk-clustering-override: physical order = clustering columns, so
       // scans filtering on them prune by file stats; PK uniqueness is
       // unaffected (MOR merge + DVs are order-independent)
-      val sortCols =
-        if (clusteringOverride.nonEmpty) clusteringOverride else pks
-      // key order: (PT, BUCKET, data sort) — the writer's required
-      // (PT, BUCKET) prefix first, so the write needs NO sort of its own
-      // and every file comes out data-sorted within its (pt, bucket)
-      // directory. In-file data order is a CORRECTNESS invariant (the
-      // k-way MOR merge and the multi-file ordering report both consume
-      // it), which is why saves below run with the PLANNED-WRITE rewrite
-      // disabled: V1Writes (Spark 3.4+) re-plans the write's ordering
-      // requirement logically and, for window-shaped frames (compaction's
-      // merge) or frames whose sort keys fold differently than the
-      // requirement's, replaces this local sort with its own
-      // partition-columns-only Sort — scrambling data order inside each
-      // directory. The legacy runtime path compares the CHILD's physical
-      // ordering against the requirement and keeps our sort when it
-      // matches. tools/ProbeWriteSort reproduces the failure modes;
-      // CoreTableSpec pins file-sortedness across
-      // plain/merge-into/compaction/rolled.
-      df = df.repartition(routeCols: _*)
-        .sortWithinPartitions(
-          (Seq(col(PT), col(BUCKET)) ++ sortCols.map(col)).toIndexedSeq: _*)
+      val sortCols = if (clusteringOverride.nonEmpty) clusteringOverride else pks
+      // one shuffle per (partition, bucket); the local sort leads with the
+      // writer's partition columns (PT, BUCKET), so FileFormatWriter keeps
+      // it and every file comes out data-sorted — a CORRECTNESS invariant
+      // the k-way MOR merge consumes, pinned by CoreTableSpec "every PK
+      // data file is written pk-sorted: plain, merge-into, compaction, rolled"
+      df = dedupBatch(route(df))
+        .sortWithinPartitions((Seq(col(PT), col(BUCKET)) ++ sortCols.map(col)): _*)
     } else if (!isPk && fixedBucketKeys.isDefined) {
       // bucketed append: co-locate each bucket's rows so a write emits one
       // file per (partition, bucket), not tasks × buckets small files
-      df = df.repartition((partCols.map(col) :+ col(BUCKET)).toIndexedSeq: _*)
+      df = route(df)
+    } else {
+      // postpone fresh writes keep the INPUT partitioning: no routing
+      // shuffle, files land under bucket -2 awaiting compaction
+      df = dedupBatch(df)
     }
-    // postpone fresh writes keep the INPUT partitioning: zero shuffle,
-    // files land under bucket -2 awaiting compaction
 
     val commitDir = s"data/c-${UUID.randomUUID().toString.take(12)}"
     val stagingAbs = new Path(location, commitDir).toString
-    // format-prefixed table options flow to the writer — e.g.
-    // parquet.bloom.filter.enabled#<col>=true adds file-local bloom filters
-    // (capability of paimon's bloom-filter file index, SURVEY §2.2)
-    // file rolling: bound output file size so a hot bucket's compaction
-    // never produces one huge file (paimon write.target-file-size rolling;
-    // rolled files of one pass are key-disjoint, so the raw path survives)
-    val writer = df.write.options(fmtOptions)
-    config.options.get("write.max-records-per-file")
-      .foreach(n => writer.option("maxRecordsPerFile", n))
-    // planned-write OFF for the save: see the routing-sort comment above —
-    // the legacy write path is what keeps the per-(pt, bucket) data sort
-    // (scoped set/restore; graft writes are driver-side and sequential
-    // per session)
-    val pwKey = "spark.sql.optimizer.plannedWrite.enabled"
-    val pwPrev = spark.conf.getOption(pwKey)
-    spark.conf.set(pwKey, "false")
-    try writer.partitionBy(PT, BUCKET).format(formatProvider).save(stagingAbs)
-    finally pwPrev match {
-      case Some(v) => spark.conf.set(pwKey, v)
-      case None => spark.conf.unset(pwKey)
-    }
+    // format-prefixed table options flow to the writer (e.g. parquet bloom
+    // filters, SURVEY §2.2); file rolling bounds a hot bucket's compaction
+    // output (rolled files of one pass are key-disjoint). csv/json keep
+    // microseconds and edge whitespace (Spark's text writers drop them), so
+    // a reader gets back exactly the values the stats were taken over
+    val writeOpts = fmtOptions ++
+      config.options.get("write.max-records-per-file").map("maxRecordsPerFile" -> _) ++
+      (if (fileFormat == "csv" || fileFormat == "json")
+        Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+          "timestampNTZFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+          "ignoreLeadingWhiteSpace" -> "false", "ignoreTrailingWhiteSpace" -> "false")
+      else Map.empty)
+    val dataCols = StructType(df.schema.fields.filterNot(f => f.name == PT || f.name == BUCKET))
+    val tracker = new FileStatsTracker(dataCols, dataCols.fieldNames.map(statsModeFor(_, level)),
+      spark.conf.get("spark.sql.session.timeZone"),
+      spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+    SparkShims.writeFiles(df, formatProvider, stagingAbs, Seq(PT, BUCKET), writeOpts, Seq(tracker))
 
-    val entries = collectStats(stagingAbs, level)
-    // per-file secondary indexes (bloom/bitmap/bsi) for the new files —
-    // a second distributed pass, payloads written straight from executors
-    FileIndexes.build(this, stagingAbs)
-    // stamp the routing layout each real-bucket file was written under
-    // (ManifestEntry.totalBuckets): explicit per-partition counts from a
-    // postpone fixed-bucket route, else the table-wide fixed layout
-    entries.map { e =>
-      val tb =
-        if (e.bucket < 0) 0
-        else totalBucketsByPt.get(GraftTable.ptOfPath(e.path)) match {
+    val now = System.currentTimeMillis()
+    val entries = tracker.files.map { f =>
+      // partition values are constant within a file (partitionBy on PT)
+      val partition = config.partitionKeys.map(pc => pc -> f.stats(pc).min).toMap
+      val (minSeq, maxSeq) =
+        if (isPk) (f.stats(SEQ).min.toLong, f.stats(SEQ).max.toLong) else (0L, 0L)
+      // the routing layout each real-bucket file was written under
+      // (ManifestEntry.totalBuckets): explicit per-partition counts from a
+      // postpone fixed-bucket route, else the table-wide fixed layout
+      val totalBuckets =
+        if (f.bucket < 0) 0
+        else totalBucketsByPt.get(GraftTable.ptOfPath(f.relPath)) match {
           case Some(n) => n
           case None =>
             if (isPostpone) postponeBuckets // legacy compact routing count
             else if (fixedBucketKeys.isDefined) config.numBuckets
             else 0
         }
-      if (tb == e.totalBuckets) e else e.copy(totalBuckets = tb)
+      ManifestEntry(0, s"$commitDir/${f.relPath}", partition, f.bucket,
+        f.rowCount, f.size, minSeq, maxSeq, level = level, stats = f.stats,
+        schemaId = schema.id, creationTime = now, totalBuckets = totalBuckets)
     }
+    // per-file secondary indexes (bloom/bitmap/bsi) for the new files —
+    // a second distributed pass, payloads written straight from executors
+    FileIndexes.build(this, stagingAbs)
+    entries
   }
 
   /** `metadata.stats-mode` (paimon CoreOptions.METADATA_STATS_MODE, default
@@ -900,7 +903,7 @@ class GraftTable private (
     * primary-key and sequence columns always collect full stats: partition
     * values and PK/SEQ ranges are structural (routing, raw-convertibility,
     * point lookups), matching paimon's always-collected key stats. */
-  private def statsModeFor(fieldName: String, level: Int): String = {
+  private[graft] def statsModeFor(fieldName: String, level: Int): String = {
     if (config.partitionKeys.contains(fieldName) ||
         config.primaryKeys.contains(fieldName) ||
         fieldName == SEQ || fieldName == KIND || fieldName == ROW_ID)
@@ -917,80 +920,6 @@ class GraftTable private (
         .toMap
       perLevel.getOrElse(level.toString,
         config.option("metadata.stats-mode", "truncate(16)"))
-    }
-  }
-
-  private val TruncateMode = """truncate\((\d+)\)""".r
-
-  /** Smallest string that is > every string with prefix `s` (clip-increment:
-    * bump the last non-￿ char, drop the tail); None if unbounded. */
-  private def incrementString(s: String): Option[String] = {
-    val i = s.lastIndexWhere(_ != Char.MaxValue)
-    if (i < 0) None else Some(s.substring(0, i) + (s.charAt(i) + 1).toChar)
-  }
-
-  /** Distributed per-file stats: one aggregation pass over the new files. */
-  private def collectStats(stagingAbs: String, level: Int): Seq[ManifestEntry] = {
-    val written = readDataFiles(
-      StructType(fileSchema.fields ++ Array(
-        StructField(PT, StringType), StructField(BUCKET, IntegerType))),
-      Seq(stagingAbs), basePath = Some(stagingAbs))
-    val statCols = fileSchema.fields.flatMap { f =>
-      // TimestampType stats as epoch-micros: cast-to-string renders in the
-      // SESSION timezone, so a reader under a different zone would prune
-      // wrongly. Micros are zone-free; StatsPrune.cmp parses either form.
-      // VARIANT (and other unorderable types) carry null min/max — pruning
-      // treats them as unknown, null counts still collected.
-      def statVal(c: Column): Column = f.dataType match {
-        case _: TimestampType => unix_micros(c).cast(StringType)
-        case _ => c.cast(StringType)
-      }
-      val orderable = org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .isOrderable(f.dataType)
-      val mode = statsModeFor(f.name, level)
-      val (mn, mx) =
-        if (orderable && mode != "none" && mode != "counts")
-          (statVal(min(col(f.name))), statVal(max(col(f.name))))
-        else (lit(null).cast(StringType), lit(null).cast(StringType))
-      val nc =
-        if (mode == "none") lit(-1L)
-        else sum(when(col(f.name).isNull, 1L).otherwise(0L))
-      Seq(mn.as(s"min__${f.name}"), mx.as(s"max__${f.name}"),
-          nc.as(s"nc__${f.name}"))
-    }
-    val agg = written
-      .groupBy(input_file_name().as("__file"), col(BUCKET).as("__b"))
-      .agg(count(lit(1)).as("__rc"), statCols.toIndexedSeq: _*)
-      .collect()
-
-    val fsys = sm.fs
-    val locUri = new Path(location).toUri.getPath
-    agg.toSeq.map { row =>
-      val full = new Path(new java.net.URI(row.getAs[String]("__file"))).toUri.getPath
-      val rel = full.stripPrefix(locUri).stripPrefix("/")
-      val stats = fileSchema.fields.map { f =>
-        val mn0 = row.getAs[String](s"min__${f.name}")
-        val mx0 = row.getAs[String](s"max__${f.name}")
-        val nc = row.getAs[Long](s"nc__${f.name}")
-        f.name -> (statsModeFor(f.name, level) match {
-          case TruncateMode(nStr) if f.dataType == StringType =>
-            val n = nStr.toInt
-            val mn = if (mn0 != null && mn0.length > n) mn0.take(n) else mn0
-            val mx = if (mx0 != null && mx0.length > n)
-              incrementString(mx0.take(n)).orNull else mx0
-            ColStat(mn, mx, nc, inexact = (mn ne mn0) || (mx ne mx0))
-          case _ => ColStat(mn0, mx0, nc)
-        })
-      }.toMap
-      val partition = config.partitionKeys.map { pc =>
-        pc -> stats(pc).min // constant within a file (partitionBy on PT)
-      }.toMap
-      val size = fsys.getFileStatus(new Path(location, rel)).getLen
-      val (minSeq, maxSeq) =
-        if (isPk) (stats(SEQ).min.toLong, stats(SEQ).max.toLong) else (0L, 0L)
-      ManifestEntry(0, rel, partition, row.getAs[Int]("__b"),
-        row.getAs[Long]("__rc"), size, minSeq, maxSeq, level = level, stats = stats,
-        schemaId = schema.id, creationTime = System.currentTimeMillis())
     }
   }
 

@@ -3,13 +3,14 @@ package graft.dsv2
 import graft.core._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
 
@@ -34,7 +35,8 @@ import java.util.OptionalLong
  * Value filters are NOT pushed into the parquet readers: dropping a newer
  * non-matching version pre-merge would resurrect an older matching one.
  * Merge-safe conjuncts (primary-key / partition columns — constant across
- * a key's versions) do push; Spark re-applies every filter post-scan
+ * a key's versions) do push, and their `=`/`IN` ones drop the rows of
+ * other keys before the merge; Spark re-applies every filter post-scan
  * (GraftScanBuilder.pushFilters keeps all filters residual).
  */
 class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
@@ -150,16 +152,19 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val wideTypes = wideSchema.fields.map(_.dataType)
-    GraftMorReaderFactory(
-      GraftBatchScan.parquetFactory(t, wideSchema, safePushed),
-      // DV files read WITHOUT pushdown (row index = running count)
-      GraftBatchScan.parquetFactory(t, wideSchema, Array.empty),
+    val pf = GraftBatchScan.parquetFactory(t, wideSchema, safePushed)
+    GraftMorReaderFactory(pf,
+      // DV files read WITHOUT pushdown (row index = running count); with no
+      // vector outstanding it is never used, so no second factory (each one
+      // broadcasts the Hadoop configuration)
+      if (dv.isEmpty) pf else GraftBatchScan.parquetFactory(t, wideSchema, Array.empty),
       pkIdx = t.config.primaryKeys.map(idx).toArray,
       seqIdx = idx(GraftTable.SEQ), seq2Idx = idx(GraftTable.SEQ2),
       commitIdx = idx(GraftTable.COMMIT),
       posIdx = idx(GraftTable.POS), kindIdx = idx(GraftTable.KIND),
       outIdx = outSchema.fieldNames.map(idx),
-      wideTypes = wideTypes, latestFirst = latestFirst)
+      wideTypes = wideTypes, latestFirst = latestFirst,
+      keyTest = GraftMorReaderFactory.keyTest(safePushed, wideSchema))
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -214,6 +219,29 @@ object GraftMorReaderFactory {
     bos.toByteArray
   }
 
+  /** The merge-safe pushed filters that are `=` or `IN` over an integral,
+    * date or string column of the wide row, as a row test. Other shapes
+    * stay with the post-scan filter only. */
+  private[dsv2] def keyTest(filters: Array[Filter], wide: StructType): KeyTest =
+    KeyTest(filters.toSeq.flatMap {
+      case EqualTo(a, v) => keyValues(wide, a, Seq(v))
+      case In(a, vs) => keyValues(wide, a, vs.toSeq)
+      case _ => None
+    })
+
+  private def keyValues(wide: StructType, name: String, vs: Seq[Any])
+      : Option[(Int, DataType, Set[Any])] =
+    Some(wide.fieldNames.indexOf(name)).filter(_ >= 0).flatMap { i =>
+      wide(i).dataType match {
+        case dt @ (ByteType | ShortType | IntegerType | LongType | DateType) =>
+          scala.util.Try(vs.filter(_ != null).map(Literal.create(_, dt).value)).toOption
+            .map(cvs => (i, dt, cvs.toSet))
+        case dt: StringType if dt == StringType =>
+          Some((i, dt, vs.filter(_ != null).map(v => UTF8String.fromString(v.toString)).toSet))
+        case _ => None
+      }
+    }
+
   private[dsv2] def fromBytes(bytes: Array[Byte]): ParquetPartitionReaderFactory = {
     val ois = new java.io.ObjectInputStream(
       new java.io.ByteArrayInputStream(bytes))
@@ -226,13 +254,15 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
                                  dvDelegate: ParquetPartitionReaderFactory,
                                  pkIdx: Array[Int], seqIdx: Int, seq2Idx: Int, commitIdx: Int,
                                  posIdx: Int, kindIdx: Int, outIdx: Array[Int],
-                                 wideTypes: Array[DataType], latestFirst: Boolean)
+                                 wideTypes: Array[DataType], latestFirst: Boolean,
+                                 keyTest: KeyTest)
     extends PartitionReaderFactory {
 
   // pristine clone blueprints, captured while the delegates are untouched
   // (see GraftMorReaderFactory.toBytes)
   private val delegateBlueprint: Array[Byte] = GraftMorReaderFactory.toBytes(delegate)
-  private val dvBlueprint: Array[Byte] = GraftMorReaderFactory.toBytes(dvDelegate)
+  private val dvBlueprint: Array[Byte] =
+    if (dvDelegate eq delegate) delegateBlueprint else GraftMorReaderFactory.toBytes(dvDelegate)
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
@@ -313,7 +343,11 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
         val headPks = new Array[UnsafeRow](n) // its projected pk
         val flip = new Array[Boolean](n)
         def advance(i: Int): Boolean = {
-          if (readers(i).next()) {
+          var more = readers(i).next()
+          // a row the key filters reject cannot win for a key they accept
+          // (a key's versions share its pk): skip it before the merge
+          while (more && !keyTest(readers(i).get())) more = readers(i).next()
+          if (more) {
             // the reader's row buffer stays valid until ITS next next() —
             // reader i advances only while outside the heap, so the head
             // needs no copy (winners copy in offer)
@@ -467,5 +501,13 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
         openReaders = null
       }
     }
+  }
+}
+
+/** Conjuncts (column index, type, accepted values) a merged row's key must
+  * meet; no conjuncts accept every row. */
+case class KeyTest(conjuncts: Seq[(Int, DataType, Set[Any])]) {
+  def apply(row: InternalRow): Boolean = conjuncts.forall { case (i, dt, vs) =>
+    !row.isNullAt(i) && vs.contains(row.get(i, dt))
   }
 }

@@ -1,7 +1,13 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat, FileFormatWriter, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 
 /**
@@ -10,7 +16,7 @@ import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
  * reference uses (paimon-spark keeps shims under org.apache.spark.sql.paimon,
  * e.g. paimon-spark/paimon-spark-common/src/main/scala/org/apache/spark/sql/paimon/shims).
  * Kept to the minimum: plan→DataFrame and Expression→Column for the SQL
- * row-level command rewrites.
+ * row-level command rewrites, and the data-file write.
  */
 object SparkShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -55,4 +61,44 @@ object SparkShims {
     ds.sqlContext.asInstanceOf[classic.SQLContext]
       .internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)
   }
+
+  /** Write `df` under `outputPath` as `format` files, hive-partitioned by
+    * `partitionCols`, through Spark's FileFormatWriter (as Delta Lake's
+    * TransactionalWrite does): it keeps a child ordering that starts with
+    * the partition columns, and `trackers` see every file and row in the
+    * write tasks. One job after the stages of `df`'s own exchanges. On the
+    * stock local FS its files and directories get their permissions
+    * without a `chmod` process each ([[graft.NoForkLocalFileSystem]]). */
+  def writeFiles(df: DataFrame, format: String, outputPath: String,
+                 partitionCols: Seq[String], options: Map[String, String],
+                 trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    val fileFormat = DataSource.lookupDataSource(format, session.sessionState.conf)
+      .getConstructor().newInstance() match {
+      case v2: FileDataSourceV2 => v2.fallbackFileFormat.getConstructor().newInstance()
+      case f: FileFormat => f
+    }
+    SQLExecution.withNewExecutionId(qe, Some(s"graft write $outputPath")) {
+      val plan = qe.executedPlan
+      val committer = FileCommitProtocol.instantiate(
+        session.sessionState.conf.fileCommitProtocolClass,
+        java.util.UUID.randomUUID().toString, outputPath)
+      val hadoopConf = session.sessionState.newHadoopConfWithOptions(options)
+      if (graft.NoForkLocalFileSystem.isStockLocal(new Path(outputPath), hadoopConf))
+        graft.NoForkLocalFileSystem.configure(hadoopConf)
+      FileFormatWriter.write(session, plan, fileFormat, committer,
+        FileFormatWriter.OutputSpec(outputPath, Map.empty, plan.output), hadoopConf,
+        partitionCols.map(c => plan.output.find(_.name == c).get),
+        None, trackers, options)
+    }
+  }
+
+  /** Add a write task's output to its task metrics, as Spark's own writers do. */
+  def recordTaskOutput(bytes: Long, records: Long): Unit =
+    Option(TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
 }

@@ -19,7 +19,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.extensions", "graft.dsv2.GraftSparkExtensions")
     // no-fork local FS: Hadoop's chmod shell-out per checkpoint mkdir/create
-    // can die on a loaded host (r13 driver run) — see TestLocalFs.scala
+    // can die on a loaded host (r13 driver run) — see graft/LocalFs.scala
     .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       classOf[NoForkLocalFs].getName)
@@ -1388,11 +1388,11 @@ class CoreTableSpec extends SparkTestBase {
   test("every PK data file is written pk-sorted: plain, merge-into, compaction, rolled") {
     // in-file PK order is a CORRECTNESS invariant — the k-way MOR merge
     // and the multi-file ordering report both consume it. The hazard this
-    // pins: a DETERMINISTIC write frame (no nondeterministic POS
-    // projection) lets the V1 writer replace our local sort with its own
-    // non-stable (pt, bucket) sort, scrambling data order inside each
-    // directory — exactly what the prefix-matched (pt, bucket, pks)
-    // arrangement prevents (tools/ProbeWriteSort)
+    // pins: a writer that imposes its own non-stable (pt, bucket) sort
+    // (Spark's planned-write rewrite does, for deterministic frames such as
+    // merge-into's) scrambles data order inside each directory. writeFiles
+    // calls FileFormatWriter directly under a (pt, bucket, pks) local sort,
+    // which the writer keeps because it starts with the partition columns
     val rnd = new scala.util.Random(11)
     val loc = tmpLoc("wsort")
     val data = rnd.shuffle((0L until 200L).toList)

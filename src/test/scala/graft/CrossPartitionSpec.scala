@@ -40,6 +40,17 @@ class CrossPartitionSpec extends SparkTestBase {
     assert(t.read().groupBy("k").count().filter(col("count") > 1).isEmpty)
   }
 
+  test("one batch holding a key in two partitions keeps only its last row") {
+    // the in-batch dedup must key on the pk alone here: the partition is
+    // not a function of the key, so two rows of k=6 land in different
+    // partitions and buckets and only the last input row may survive
+    val t = mkTable("xp-batch-dup")
+    t.write(Seq((6L, "A", 60.0), (7L, "B", 70.0), (6L, "C", 61.0))
+      .toDF("k", "seg", "v"))
+    assertSameRows(t.read().filter(col("k") >= 6L),
+      Seq((6L, "C", 61.0), (7L, "B", 70.0)).toDF("k", "seg", "v"))
+  }
+
   test("chained moves and move-back converge; compaction preserves state") {
     val t = mkTable("xp-chain")
     t.write(Seq((1L, "B", 11.0)).toDF("k", "seg", "v")) // A→B

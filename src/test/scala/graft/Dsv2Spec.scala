@@ -2176,6 +2176,44 @@ class Dsv2Spec extends SparkTestBase {
       .as[(Long, String)].collect().toSet == Set((1L, "first"), (2L, "z")))
   }
 
+  test("merge-in-scan key filters: = and IN on the key drop other keys before the merge") {
+    import graft.core._
+    import graft.core.RowOps._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
+    // keys have versions in several files (updates, rowkind tombstones) and
+    // a DV delete; the filtered reads must pick the unfiltered read's winners
+    def check(table: String, engine: String, keyType: String, key: Int => String): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS graft.db.$table")
+      spark.sql(s"""CREATE TABLE graft.db.$table (k $keyType, v STRING, rk STRING)
+                    TBLPROPERTIES ('primary-key'='k', 'bucket'='2',
+                      'rowkind.field'='rk', 'merge-engine'='$engine')""")
+      Seq(("a", "+I", 0 until 40), ("b", "+U", 10 until 40 by 2), ("c", "-D", 30 until 40 by 3))
+        .foreach { case (v, rk, ks) =>
+          spark.sql(s"INSERT INTO graft.db.$table VALUES " +
+            ks.map(i => s"(${key(i)}, '$v$i', '$rk')").mkString(","))
+        }
+      GraftTable.load(spark, s"$wh/db.db/$table").deleteDv(expr(s"k = ${key(12)}"))
+      def rows(where: String): Set[(String, String)] =
+        spark.sql(s"SELECT k, v FROM graft.db.$table $where").collect()
+          .map(r => r.get(0).toString -> r.getString(1)).toSet
+      val all = rows("")
+      def named(i: Int) = key(i).stripPrefix("'").stripSuffix("'")
+      val keys = Seq(1, 12, 14, 15, 30, 33, 39, 77)
+      // key 14 has versions in two files: its lookup merges in the scan
+      assert(spark.sql(s"SELECT k, v FROM graft.db.$table WHERE k = ${key(14)}")
+        .queryExecution.executedPlan.toString.contains("GraftMorScan"))
+      keys.foreach { i =>
+        val where = s"WHERE k = ${key(i)}"
+        assert(rows(where) == all.filter(_._1 == named(i)), s"$table $where")
+      }
+      assert(rows(keys.map(key).mkString("WHERE k IN (", ",", ")")) ==
+        all.filter(r => keys.map(named).contains(r._1)), s"$table IN")
+    }
+    check("kf1", "deduplicate", "BIGINT", _.toString)
+    check("kf2", "deduplicate", "STRING", i => s"'k$i'")
+    check("kf3", "first-row", "INT", _.toString)
+  }
+
   test("CTAS and RTAS: CREATE/REPLACE TABLE AS SELECT with table properties") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("DROP TABLE IF EXISTS graft.db.ctas1")

@@ -259,6 +259,41 @@ class MetadataPlaneSpec extends SparkTestBase {
     assert(ex.getMessage.contains(victim.path))
   }
 
+  test("every commit logs one INFO line: table, snapshot, kind, attempts, files, ms") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("commit-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.INFO && e.getLoggerName == classOf[SnapshotManager].getName)
+          lines.add(e.getMessage.getFormattedMessage)
+    }
+    spark.sparkContext // Spark may replace the log4j configuration as it starts
+    val logger = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    val prevLevel = logger.getLevel
+    app.start()
+    logger.addAppender(app)
+    logger.setLevel(Level.INFO)
+    val loc = tmpLoc("commit-log")
+    try {
+      val t = GraftTable.create(spark, loc, spark.range(1).toDF("k").schema,
+        TableConfig(primaryKeys = Seq("k"), numBuckets = 2))
+      t.write(spark.range(10).toDF("k"))
+      t.write(spark.range(5).toDF("k"))
+    } finally {
+      logger.removeAppender(app)
+      logger.setLevel(prevLevel)
+    }
+    import scala.jdk.CollectionConverters._
+    val mine = lines.asScala.toSeq.filter(_.contains(s"table=$loc "))
+    assert(mine.size == 2, mine)
+    assert(mine.last.matches(
+      s"commit table=\\Q$loc\\E snapshot=2 kind=APPEND attempts=1 " +
+        "files_added=\\d+ files_deleted=0 ms=\\d+"), mine.last)
+  }
+
   test("compact_manifest stamps creationTime: migrated legacy table plans with zero per-file stats") {
     val loc = tmpLoc("legacy-ct")
     val df = spark.range(100).select((col("id") % 4).cast("int").as("p"),

@@ -293,4 +293,71 @@ class ScalePostureSpec extends SparkTestBase {
       s"opens must be bounded by distinct packs: opens=$opens packs=$packs")
     assert(opens < n / 4, s"opens=$opens must be far below values=$n")
   }
+
+  test("a fixed-bucket PK upsert is one pass: 2 jobs, one exchange, no listing; " +
+       "compaction runs at most 3 jobs") {
+    // per-file stats come out of the write tasks and the in-batch dedup
+    // rides the routing shuffle: no read-back job, no second window
+    // shuffle, no listing of the new files. Job counts are exact, so this
+    // trips on any extra pass at test scale.
+    import graft.core.{GraftTable, TableConfig}
+    import graft.core.RowOps._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted, SparkListenerTaskEnd}
+    // jobs, stages run, stages that wrote shuffle output, listing jobs —
+    // of this thread's job group only, so no other session work counts
+    case class Jobs(n: Int, stages: Int, shuffleStages: Int, listing: Int)
+    def jobsDuring(body: => Unit): Jobs = {
+      val group = s"one-pass-${System.nanoTime()}"
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val stages = new java.util.concurrent.atomic.AtomicInteger
+      val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+            jobs.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+            e.stageIds.foreach(mine.add)
+          }
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          if (mine.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (mine.contains(e.stageId) && e.taskMetrics != null &&
+              e.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+            shuffleStages.add(e.stageId)
+      }
+      spark.sparkContext.addSparkListener(l)
+      spark.sparkContext.setJobGroup(group, "one-pass write", interruptOnCancel = false)
+      try {
+        body
+        org.apache.spark.sql.graft.SparkShims.waitListenerBus(spark)
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(l)
+      }
+      import scala.jdk.CollectionConverters._
+      Jobs(jobs.size, stages.get, shuffleStages.size,
+        jobs.asScala.count(_.contains("Listing leaf files")))
+    }
+    def batch(from: Int, n: Int) = (from until from + n)
+      .map(i => (i.toLong % 700, s"v$i", i * 0.5)).toDF("k", "v", "p")
+    val loc = tmpLoc("onepass")
+    val t = GraftTable.create(spark, loc, batch(0, 1).schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 4))
+    t.write(batch(0, 1000))
+    val pw = "spark.sql.optimizer.plannedWrite.enabled"
+    assert(!spark.conf.getAll.contains(pw), "a write must not leave plannedWrite set")
+    // duplicate keys inside the batch: the dedup must still run
+    val up = jobsDuring(GraftTable.load(spark, loc).write(batch(1000, 1500)))
+    assert(up == Jobs(2, 2, 1, 0), s"upsert: $up")
+    assert(t.read().count() == 700)
+    assert(t.read().filter(col("k") === 299L).select("v").as[String].head() == "v2399")
+    withSQLConf(pw -> "true") {
+      t.write(batch(3000, 10))
+      assert(spark.conf.getAll.get(pw).contains("true"), "a write must keep plannedWrite")
+    }
+    val compact = jobsDuring(GraftTable.load(spark, loc).compact())
+    assert(compact.n <= 3 && compact.listing == 0, s"compact: $compact")
+    assert(t.read().count() == 700)
+  }
 }

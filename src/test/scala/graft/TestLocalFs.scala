@@ -1,62 +1,13 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.DelegateToFileSystem
 
 import java.net.URI
-import java.nio.file.attribute.PosixFilePermission
-import java.nio.file.attribute.PosixFilePermission._
 
-/**
- * Local filesystems for the TEST JVM that apply permissions via java.nio
- * instead of Hadoop's `chmod` shell-out.
- *
- * Why: without native libhadoop, `RawLocalFileSystem.setPermission` forks a
- * `chmod` process for EVERY mkdir/create that carries a permission — the
- * streaming checkpoint path (FileContext mkdir + createAtomic per
- * offset/commit/state file) does this hundreds of times per suite. On a
- * loaded host the fork/exec can fail (`Shell$ExitCodeException` inside
- * `RawLocalFileSystem.setPermission → mkdirs`), which is exactly how the
- * round-13 driver run lost StreamingSinkSpec's delta-replay fuzz. Setting
- * POSIX permissions through `Files.setPosixFilePermissions` keeps the
- * semantics (same bits applied) with zero subprocesses.
- *
- * Wired into the shared test sessions via
- *   spark.hadoop.fs.file.impl                 → [[NoForkLocalFileSystem]]
- *   spark.hadoop.fs.AbstractFileSystem.file.impl → [[NoForkLocalFs]]
- * (the latter covers the FileContext-based streaming CheckpointFileManager,
- * which resolves `file:` through AbstractFileSystem, not FileSystem).
- */
-object NoForkChmod {
-  private val bitToPerm: Seq[(Int, PosixFilePermission)] = Seq(
-    0x100 -> OWNER_READ, 0x80 -> OWNER_WRITE, 0x40 -> OWNER_EXECUTE,
-    0x20 -> GROUP_READ, 0x10 -> GROUP_WRITE, 0x8 -> GROUP_EXECUTE,
-    0x4 -> OTHERS_READ, 0x2 -> OTHERS_WRITE, 0x1 -> OTHERS_EXECUTE)
-
-  /** Apply `permission`'s 9 POSIX bits to `file` with no subprocess.
-    * Best-effort like the shell path (a failed chmod on a just-deleted
-    * temp dir must not kill the job that already moved on). */
-  def set(file: java.io.File, permission: FsPermission): Unit = {
-    val bits = permission.toShort.toInt
-    val set = new java.util.HashSet[PosixFilePermission]()
-    bitToPerm.foreach { case (bit, p) => if ((bits & bit) != 0) set.add(p) }
-    try java.nio.file.Files.setPosixFilePermissions(file.toPath, set)
-    catch { case _: java.io.IOException | _: SecurityException => () }
-  }
-}
-
-/** [[RawLocalFileSystem]] whose setPermission never forks. */
-class NoForkRawLocalFileSystem extends RawLocalFileSystem {
-  override def setPermission(p: Path, permission: FsPermission): Unit =
-    NoForkChmod.set(pathToFile(p), permission)
-}
-
-/** Checksummed local FS (the stock `file:` semantics) over the no-fork raw
-  * FS — drop-in for `fs.file.impl`. */
-class NoForkLocalFileSystem extends LocalFileSystem(new NoForkRawLocalFileSystem)
-
-/** AbstractFileSystem flavor for `fs.AbstractFileSystem.file.impl` (the
-  * FileContext path the streaming checkpoint manager uses). */
+/** AbstractFileSystem flavor of [[NoForkLocalFileSystem]] for
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl`: the test sessions route
+  * the FileContext-based streaming CheckpointFileManager (which resolves
+  * `file:` through AbstractFileSystem, not FileSystem) through it too. */
 class NoForkLocalFs(uri: URI, conf: Configuration)
     extends DelegateToFileSystem(uri, new NoForkRawLocalFileSystem, conf, "file", false)

@@ -349,10 +349,10 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     * extraction anywhere rejects the batch and the query answers through
     * the decode path. Rejection LATCHES for the rest of this scan build:
     * after a rejection Spark retries with a NARROWER offer — the `$` root
-    * plus only the fields used in FILTERS (observed protocol; probe:
-    * graft.tools.ProbeVariantReject) — and accepting that subset crashes
-    * VariantInRelation.rewriteExpr with "key not found" when the PROJECT
-    * list still holds an extraction outside the offer (the fuzz case
+    * plus only the fields used in FILTERS (observed protocol; VariantSqlSpec
+    * "unshredded path falls back to decode" runs it) — and accepting that
+    * subset crashes VariantInRelation.rewriteExpr with "key not found" when
+    * the PROJECT list still holds an extraction outside the offer (the fuzz case
     * `SELECT g($.a), g($.c) WHERE g($.a) > 5` with only $.a shredded: the
     * fallback offer is [$, $.a], and Spark never routes the $.c rewrite
     * through the accepted root field). Each extraction must match a

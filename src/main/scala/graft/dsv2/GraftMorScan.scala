@@ -202,8 +202,10 @@ object GraftMorReaderFactory {
     * (driver side, before any reader exists). Isolated readers are built
     * by deserializing these bytes ([[fromBytes]]): two readers created
     * from ONE ParquetPartitionReaderFactory corrupt each other when their
-    * next() calls interleave (ProbeMorInterleave reproduces it — the
-    * factory keeps per-reader lazy state it never expects to share), and
+    * next() calls interleave (the k-way merge's access pattern, run by
+    * Dsv2Spec "merge-on-read inside the scan" and "merge-in-scan key
+    * filters" and CrossPartitionSpec "chained moves" — the factory keeps
+    * per-reader lazy state it never expects to share), and
     * serializing the LIVE factory on demand is not safe either: one Spark
     * task can drain SEVERAL key groups (DataSourceRDD packs multiple
     * input partitions per task), so a raw group streamed through the

@@ -66,13 +66,6 @@ object Dedup {
   private def bandKeyBin(sig: Column, b: Int, rpb: Int): Column =
     unhex(TextOps.bandKey(sig, b, rpb))
 
-  /** False under `spark.graft.dedup.materialize=false` (plan-inspection
-    * mode): the pipelines then return LAZY and keep their persists alive —
-    * the r13 behavior — so the dumped plan shows the cache reuse the
-    * materialized execution actually has. Default: materialize + release. */
-  private def materializeEnabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.dedup.materialize", "true") != "false"
-
   private def sortedIntersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.SparkShims.column(
       graft.functions.SortedIntersectCount(
@@ -121,7 +114,7 @@ object Dedup {
     val perDoc = minhashSignatures(df, idCol, textCol, shingleN, sigLen)
       .persist()
     val out = pairsFromSignatures(perDoc, idCol, sigLen, nBands, threshold, maxBucketIds)
-    if (materializeEnabled(perDoc)) perDoc.unpersist(false)
+    perDoc.unpersist(false)
     out
   }
 
@@ -139,13 +132,7 @@ object Dedup {
     * and every invocation pays its full declared computation (guide §5;
     * r13 verdict "What's wrong #2"). The checkpoint blocks holding the
     * RESULT (pair rows — tiny next to the corpus) free when the returned
-    * frame is garbage-collected.
-    *
-    * Plan-inspection opt-out: `spark.graft.dedup.materialize=false` skips
-    * the checkpoint and returns the LAZY pipeline (so `explain` shows the
-    * physical operators instead of the checkpoint's RDD scan — PlanDump
-    * sets it). The callers' unpersists still run, so lazy mode recomputes
-    * instead of leaking cache; results are identical either way. */
+    * frame is garbage-collected. */
   private def pairsFromSignatures(perDoc: DataFrame, idCol: String,
                                   sigLen: Int, nBands: Int, threshold: Double,
                                   maxBucketIds: Int,
@@ -237,9 +224,6 @@ object Dedup {
     }
     val out = cross.unionByName(within)
       .select(col("v1"), col("v2"), round(col("jac"), 4).as("jac"))
-    if (perDoc.sparkSession.conf.get(
-        "spark.graft.dedup.materialize", "true") == "false")
-      return out // plan-inspection mode (see scaladoc)
     val mat = out.localCheckpoint(true) // materialization boundary
     reps.unpersist(false)
     mat
@@ -317,7 +301,7 @@ object Dedup {
       sortedSet(col("hsd")).as("__hsd"), col("sig").as("__sig"), col("n").as("__n"))
       .persist()
     val out = pairsFromSignatures(perDoc, idCol, sigLen, nBands, threshold, maxBucketIds)
-    if (materializeEnabled(perDoc)) perDoc.unpersist(false)
+    perDoc.unpersist(false)
     out
   }
 
@@ -369,7 +353,7 @@ object Dedup {
       sortedSet(col("hsd")).as("__hsd"), col("sig").as("__sig"), col("n").as("__n"))
     val out = pairsFromSignatures(perDoc, idCol, sigLen, nBands, threshold, maxBucketIds,
       touch = Some((delta.select(col(idCol)), deltaKeys)))
-    if (materializeEnabled(perDoc)) { delta.unpersist(false); deltaKeys.unpersist(false) }
+    delta.unpersist(false); deltaKeys.unpersist(false)
     out
   }
 
@@ -438,16 +422,17 @@ object Dedup {
   /**
    * Connected components over a duplicate-pair graph: iterative minimum-
    * label propagation, one equi-join + aggregation per round, lineage cut
-   * by localCheckpoint so the plan stays flat. Converges in O(component
-   * diameter) rounds (near-dup components are cliques or short chains, so
-   * a handful); `maxIter` bounds pathological graphs. Returns
+   * by localCheckpoint so the plan stays flat. Rounds repeat until no label
+   * changes: a round that changes anything strictly lowers at least one
+   * label, so the loop ends after at most (largest component diameter + 1)
+   * rounds (near-dup components are cliques or short chains, so a
+   * handful) and never returns a partially propagated labeling. Returns
    * (node, component) where component = the smallest node id reachable.
    * This is the cluster step after any pair generator
    * (minhash/simhash/embedding) — 100-TB shape: every round is one
    * shuffle on the EDGE set, never an all-pairs product.
    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 15): DataFrame = {
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint(true)
@@ -462,9 +447,8 @@ object Dedup {
     val changedAcc = spark.sparkContext.longAccumulator("cc-changed")
     val bump = udf { (ch: Boolean) => if (ch) changedAcc.add(1); ch }
       .asNondeterministic()
-    var i = 0
     var changed = true
-    while (changed && i < maxIter) {
+    while (changed) {
       val nbrMin = edges
         .join(labels.select(col("node").as("dst"), col("component").as("dc")), "dst")
         .groupBy("src").agg(min("dc").as("nmin"))
@@ -478,7 +462,6 @@ object Dedup {
         .localCheckpoint(true)
       changed = changedAcc.value > 0
       labels = updated.drop("__chg")
-      i += 1
     }
     labels
   }

@@ -439,8 +439,7 @@ object Similarity {
     // Like Dedup.pairsFromSignatures (r14 cache hygiene): the pair set
     // MATERIALIZES eagerly and the persist is released before returning —
     // no plan-keyed cache outlives the call, every invocation pays its
-    // full computation (`spark.graft.dedup.materialize=false` keeps the
-    // lazy r13 shape for plan inspection).
+    // full computation.
     val sig = df
       .select((Seq(col(idCol), col(embedCol)) ++ blockCols.map(col)): _*)
       .withColumn("__sig", signSignature(col(embedCol), dim))
@@ -457,9 +456,6 @@ object Similarity {
       .filter(col("__sim") >= threshold)
       .select(col(s"a.$idCol").as("v1"), col(s"b.$idCol").as("v2"),
         col("__sim").as("sim"))
-    if (df.sparkSession.conf.get(
-        "spark.graft.dedup.materialize", "true") == "false")
-      return out // plan-inspection mode: keep lazy, keep the persist
     val mat = out.localCheckpoint(true)
     sig.unpersist(false)
     mat

@@ -8,7 +8,11 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Dump `.explain("formatted")` for headline (or named) SparkEntry queries
   * to one file per query — the plan evidence committed under plans/rNN/.
   * Session config mirrors Bench exactly so the captured plan is the plan
-  * the bench times. Usage:
+  * the bench times. The dedup pair pipelines (minhash, cosine near-dup)
+  * run their pair set eagerly through `localCheckpoint` while the query is
+  * built, so their dumped plans show the checkpoint's RDD scan: the
+  * boundary execution actually crosses, not the operators that computed
+  * the pairs. Usage:
   *   runMain graft.tools.PlanDump <outDir> <suffix> [name ...]
   * e.g. runMain graft.tools.PlanDump plans/r13 before
   */
@@ -31,11 +35,6 @@ object PlanDump {
       .config("spark.sql.extensions", "graft.dsv2.GraftSparkExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // dedup pair pipelines materialize eagerly (cache-hygiene boundary,
-    // r14); for PLAN EVIDENCE we want the physical operators, not the
-    // checkpoint's RDD scan — lazy mode computes the identical result
-    // through the identical operators, it just skips the checkpoint
-    spark.conf.set("spark.graft.dedup.materialize", "false")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

@@ -119,6 +119,14 @@ class PipelineSpec extends SparkTestBase {
     val canon = Dedup.canonicalize(allDocs, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(canon(99L) == 99L && canon(4L) == 1L && canon(11L) == 10L)
+    // a 41-node path with the minimum at one end: its label needs 40 rounds
+    // to reach the far end, and a loop that stops after a fixed round count
+    // returns the path split into several components
+    val path = (0L until 40L).map(i => (i + 1, i)).toDF("v1", "v2")
+    val pathCc = Dedup.connectedComponents(path, "v1", "v2")
+      .as[(Long, Long)].collect().toMap
+    assert(pathCc.keySet == (0L to 40L).toSet)
+    assert(pathCc.values.toSet == Set(0L), s"components: ${pathCc.values.toSet.size}")
   }
 
   test("connected components: ONE driver action per propagation round " +

@@ -90,6 +90,16 @@ class VariantSqlSpec extends SparkTestBase {
     assert(df.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq ==
       Seq((0L, 11, "en"), (1L, 22, "de"), (2L, 33, "en"), (3L, 44, "fr")))
     assert(planOf(df).contains("variant_get"))
+    // the same rejected projection with a filter on the SHREDDED path: after
+    // the rejection Spark re-offers only [$, $.lang] (the filter's fields);
+    // accepting that narrowed offer would crash the $.text_len rewrite
+    val filtered = spark.sql(
+      s"""SELECT doc_id, variant_get(meta, '$$.text_len', 'int') AS tl,
+         |  variant_get(meta, '$$.lang', 'string') AS lang
+         |FROM $tbl WHERE variant_get(meta, '$$.lang', 'string') = 'en'
+         |ORDER BY doc_id""".stripMargin)
+    assert(filtered.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq ==
+      Seq((0L, 11, "en"), (2L, 33, "en")))
   }
 
   test("try_variant_get and filters push through the variant scan") {

@@ -26,6 +26,9 @@ import java.util.UUID
  *    (procedure/CompactProcedure.java:113).
  */
 object RowOps {
+  /** One INFO line per compaction (see `recordCompaction`). */
+  private[core] val log = org.slf4j.LoggerFactory.getLogger("graft.core.RowOps")
+
   /** Extensions data files may carry under data/ (file.format option). */
   private[core] val dataFileExts = Seq(".parquet", ".orc", ".csv", ".json")
 
@@ -76,7 +79,7 @@ object RowOps {
     /** Drop rows older than `record-level.expire-time` by
       * `record-level.time-field` (timestamp, epoch-millis long, or
       * epoch-seconds int); NULL time fields never expire. */
-    private def recordLevelExpire(df: DataFrame): DataFrame =
+    private[core] def recordLevelExpire(df: DataFrame): DataFrame =
       cfg.options.get("record-level.expire-time") match {
         case None => df
         case Some(d) =>
@@ -144,6 +147,41 @@ object RowOps {
 
     private def parseDurationMs(s: String): Long = RowOps.parseDurationMs(s)
 
+    /** Why compaction of this table merges in the relational plan, or None
+      * when the merge-in-scan reader serves it (deduplicate/first-row
+      * parquet, the read path's own predicate; postpone tables route to
+      * new buckets and keep the relational plan). */
+    private def relationalCompactionReason: Option[String] =
+      if (t.isPostpone) Some("postpone") else t.morPlan().left.toOption
+
+    /** The merged rows of `entries` with the LSM envelope kept. In the scan
+      * (`inScan`): [[graft.dsv2.GraftMorScan]] merges each (partition,
+      * bucket) in one task — deletion vectors applied per file, winners by
+      * (seq, seq2, commit, pos), tombstones dropped — with no shuffle.
+      * Otherwise the relational MergeEngines window over the V1 read. */
+    private def mergedEnvelope(entries: Seq[ManifestEntry],
+                               dv: Map[String, Array[Byte]],
+                               inScan: Boolean): DataFrame =
+      if (inScan)
+        org.apache.spark.sql.graft.SparkShims.scanRows(spark,
+          new graft.dsv2.GraftMorScan(t, entries, Array.empty, Some(t.fileSchema), dv))
+          // as readEntries: files written before __seq2 existed read null
+          .withColumn(SEQ2, coalesce(col(SEQ2), lit(0L)))
+      else MergeEngines.merge(t.readEntries(entries, withInternal = true, dv),
+        cfg, t.dataSchema)
+
+    /** One compaction's metrics and its structured INFO line. */
+    private def recordCompaction(scope: String, reason: Option[String],
+                                 in: Seq[ManifestEntry], out: Seq[ManifestEntry],
+                                 t0: Long): Unit = {
+      val ms = (System.nanoTime() - t0) / 1000000L
+      GraftMetrics.recordCompaction(t.location, ms, in.size.toLong, out.size.toLong)
+      RowOps.log.info(s"compact table=${t.location} scope=$scope " +
+        reason.fold("path=in-scan")(r => s"path=relational reason=$r") +
+        s" files_in=${in.size} bytes_in=${in.map(_.fileSize).sum}" +
+        s" files_out=${out.size} bytes_out=${out.map(_.fileSize).sum} ms=$ms")
+    }
+
     /** Full compaction: merge every bucket to a single level-1 file set.
       * No-op when the table is already fully compacted. */
     def compact(): Option[SnapshotMeta] = {
@@ -172,14 +210,14 @@ object RowOps {
           val counts = t.postponeCompactCounts(live)
           (Some(t.postponeRouteExpr(counts, t.postponeBuckets)), counts)
         } else (None, Map.empty[String, Int])
+      val reason = relationalCompactionReason
       val adds =
         if (t.isPk) {
           // record-level expire (paimon compaction.md record-level.expire):
           // rows whose time field is older than the retention drop during
           // the rewrite — best-effort by design (expiry happens when
           // compaction runs; trigger a full compaction to force it)
-          val merged = recordLevelExpire(MergeEngines.merge(
-            t.readEntries(live, withInternal = true, dv), cfg, t.dataSchema))
+          val merged = recordLevelExpire(mergedEnvelope(live, dv, reason.isEmpty))
           // full-compaction changelog producer: emit exact -U/+U/+I/-D for
           // everything since the previous produced point, at the moment the
           // merged state exists anyway (paimon
@@ -190,7 +228,8 @@ object RowOps {
             clFiles = files; clBase = base
           }
           t.writeFiles(merged, preMerged = true, level = 1,
-            bucketOverride = bucketOv, totalBucketsByPt = tbByPt)
+            bucketOverride = bucketOv, totalBucketsByPt = tbByPt,
+            bucketLocal = bucketLocal(live, reason))
         } else {
           // row-tracking tables carry their ids through the rewrite;
           // outstanding column patches materialize into the rewrite
@@ -205,11 +244,15 @@ object RowOps {
         s"compact-${UUID.randomUUID().toString.take(8)}",
         t.schema.id, dvAction = Some(None), changelog = clFiles,
         changelogBase = clBase, patchAction = Some(Nil))
-      GraftMetrics.recordCompaction(t.location,
-        (System.nanoTime() - compactT0) / 1000000L,
-        live.size.toLong, adds.size.toLong)
+      recordCompaction("full", reason, live, adds, compactT0)
       Some(snap)
     }
+
+    /** An in-scan merge of `entries` writes each bucket from its own task
+      * when they were all routed under the current bucket count; a pending
+      * rescale moves keys to other buckets, so it keeps the routing shuffle. */
+    private def bucketLocal(entries: Seq[ManifestEntry], reason: Option[String]): Boolean =
+      reason.isEmpty && entries.forall(_.totalBuckets == cfg.numBuckets)
 
     /** PARTIAL compaction: merge only the buckets holding an entry that
       * matches `victimPred` (paimon CompactProcedure `where` / the LSM's
@@ -219,6 +262,7 @@ object RowOps {
       * forward. Changelog production is full-compaction-only — `changelog()`
       * falls back to the exact diff where files are absent. */
     def compactWhere(victimPred: ManifestEntry => Boolean): Option[SnapshotMeta] = {
+      val compactT0 = System.nanoTime()
       val all = t.allLiveEntries().filter(_.bucket != -2)
       if (all.isEmpty) return None
       val dv = t.dvFor(None)
@@ -233,8 +277,8 @@ object RowOps {
       val vEntries = victims.values.flatten.toSeq
       require(!t.isRowTracking || t.patchesFor(None).isEmpty,
         "partial compaction with outstanding column patches: run compact()")
-      val merged = recordLevelExpire(MergeEngines.merge(
-        t.readEntries(vEntries, withInternal = true, dv), cfg, t.dataSchema))
+      val reason = relationalCompactionReason
+      val merged = recordLevelExpire(mergedEnvelope(vEntries, dv, reason.isEmpty))
       // postpone: victims are real buckets — keep each partition's layout
       val (pBucketOv, pTbByPt) =
         if (t.isPostpone) {
@@ -242,7 +286,8 @@ object RowOps {
           (Some(t.postponeRouteExpr(counts, t.postponeBuckets)), counts)
         } else (None, Map.empty[String, Int])
       val adds = t.writeFiles(merged, preMerged = true, level = 1,
-        bucketOverride = pBucketOv, totalBucketsByPt = pTbByPt)
+        bucketOverride = pBucketOv, totalBucketsByPt = pTbByPt,
+        bucketLocal = bucketLocal(vEntries, reason))
       // DV index: drop vectors of rewritten files, keep the rest
       val victimPaths = vEntries.map(_.path).toSet
       val remaining = t.sm.latestSnapshot.flatMap(_.dvIndex)
@@ -251,9 +296,11 @@ object RowOps {
         .getOrElse(Map.empty)
       val dvAction: Option[Option[String]] =
         Some(if (remaining.isEmpty) None else Some(t.sm.writeDvIndex(remaining)))
-      Some(t.sm.commit(vEntries.map(_.copy(kind = 1)) ++ adds, "COMPACT",
+      val snap = t.sm.commit(vEntries.map(_.copy(kind = 1)) ++ adds, "COMPACT",
         s"compact-part-${UUID.randomUUID().toString.take(8)}",
-        t.schema.id, dvAction = dvAction))
+        t.schema.id, dvAction = dvAction)
+      recordCompaction("partial", reason, vEntries, adds, compactT0)
+      Some(snap)
     }
 
     /** Write-time compaction trigger (paimon num-sorted-run.compaction-

@@ -698,7 +698,11 @@ class GraftTable private (
                  bucketOverride: Option[Column] = None,
                  // PT-hash → bucket count the override routed with; stamps
                  // ManifestEntry.totalBuckets on the produced entries
-                 totalBucketsByPt: Map[String, Int] = Map.empty): Seq[ManifestEntry] = {
+                 totalBucketsByPt: Map[String, Int] = Map.empty,
+                 // every input partition already holds the rows of one
+                 // (partition, bucket) of the current layout (a compaction
+                 // read in the merge-in-scan reader): no routing shuffle
+                 bucketLocal: Boolean = false): Seq[ManifestEntry] = {
     val commitSeq = commitSeqOverride.getOrElse(nextCommitSeq)
     // pre-merged frames carry the envelope; the routing projection below
     // keeps exactly the file columns
@@ -832,7 +836,7 @@ class GraftTable private (
       // it and every file comes out data-sorted — a CORRECTNESS invariant
       // the k-way MOR merge consumes, pinned by CoreTableSpec "every PK
       // data file is written pk-sorted: plain, merge-into, compaction, rolled"
-      df = dedupBatch(route(df))
+      df = dedupBatch(if (bucketLocal) df else route(df))
         .sortWithinPartitions((Seq(col(PT), col(BUCKET)) ++ sortCols.map(col)): _*)
     } else if (!isPk && fixedBucketKeys.isDefined) {
       // bucketed append: co-locate each bucket's rows so a write emits one
@@ -1263,6 +1267,13 @@ class GraftTable private (
       (live.size - out.size).toLong)
     out
   }
+
+  /** Live files of a snapshot (latest when None): what a scan's skipped
+    * file count is taken against. */
+  private[graft] def liveFileCount(snapshotId: Option[Long]): Long =
+    snapshotId.map(sm.readSnapshot).orElse(sm.latestSnapshot)
+      .map(s => s.liveFilesLong.getOrElse(sm.liveEntries(s).size.toLong))
+      .getOrElse(0L)
 
   /** Columns safe for merge-on-read file pruning: constant across all stored
     * versions of a key, so dropping a file can never unbalance the merge. */
@@ -1890,30 +1901,37 @@ class GraftTable private (
     * evolution, column patches, fallback branch, non-parquet). */
   private[graft] def morPlanEntries(snapshotId: Option[Long] = None,
                                     filter: Option[Column] = None)
-      : Option[Seq[ManifestEntry]] = {
-    if (!isPk) return None
+      : Option[Seq[ManifestEntry]] = morPlan(snapshotId, filter).toOption
+
+  /** [[morPlanEntries]] with the reason a plan is not servable in the scan
+    * (Left) — compaction logs it. */
+  private[graft] def morPlan(snapshotId: Option[Long] = None,
+                             filter: Option[Column] = None)
+      : Either[String, Seq[ManifestEntry]] = {
+    if (!isPk) return Left("append-table")
     if (config.mergeEngine != "deduplicate" && config.mergeEngine != "first-row")
-      return None
-    if (fileFormat != "parquet") return None
-    if (isRowTracking && patchesFor(snapshotId).nonEmpty) return None
+      return Left(s"merge-engine:${config.mergeEngine}")
+    if (fileFormat != "parquet") return Left(s"format:$fileFormat")
+    if (isRowTracking && patchesFor(snapshotId).nonEmpty) return Left("column-patches")
     // pk-clustering-override files are CLUSTERING-sorted, not pk-sorted —
     // the in-scan k-way merge requires pk order, so those tables merge
     // through the V1 relational plan (their raw compacted reads are
     // unaffected; uncompacted merge reads are the rare state the
     // override trades away for value-column file skipping)
-    if (config.option("pk-clustering-override", "false") == "true") return None
+    if (config.option("pk-clustering-override", "false") == "true")
+      return Left("pk-clustering-override")
     // visible postpone staging (-2) needs the V1 merge plan
-    if (stagedMorEntries(snapshotId, None).nonEmpty) return None
+    if (stagedMorEntries(snapshotId, None).nonEmpty) return Left("postpone-staging")
     if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
-      return None
+      return Left("fallback-branch")
     val entries = planFiles(snapshotId, filter)
-    if (entries.isEmpty) return None
+    if (entries.isEmpty) return Left("no-files")
     // old-schema files need the field-id remap (V1 evolution read)
-    if (entries.exists(_.schemaId != schema.id)) return None
+    if (entries.exists(_.schemaId != schema.id)) return Left("schema-evolution")
     // mixed routing layouts: a pk may span buckets — the per-bucket in-scan
     // merge would miss the cross-bucket duplicate; V1's global merge wins
-    if (mixedLayoutParts(entries).nonEmpty) return None
-    Some(entries)
+    if (mixedLayoutParts(entries).nonEmpty) return Left("mixed-layouts")
+    Right(entries)
   }
 
   def rawPlan(snapshotId: Option[Long] = None,

@@ -82,6 +82,14 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
 
   def bucketedScanDisabled: Boolean = bucketedDisabled
 
+  /** Live files of the planned snapshot this scan's planning dropped (stats,
+    * partition, index, top-N and limit pruning); set by the scan builder. */
+  private[dsv2] var planSkippedFiles = 0L
+
+  /** Files this scan does not read: the planning skips plus the runtime
+    * filter's. */
+  def skippedFiles: Long = planSkippedFiles + initial.size - entries.size
+
   /** True when this scan actually reports a key-grouped layout — the only
     * scans the AQE disable rule may rewrite. */
   def reportsBucketedLayout: Boolean =
@@ -104,6 +112,7 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
   def disableBucketedScan(): GraftBatchScan = {
     val s = freshCopy(entries)
     s.bucketedDisabled = true
+    s.planSkippedFiles = skippedFiles
     s
   }
 
@@ -381,13 +390,10 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
         override def name(): String = n
         override def value(): Long = v
       }
-    val skipped = graft.core.GraftMetrics.forTable(t.location)
-      .rows.collectFirst {
-        case ("lastScanSkippedTableFiles", _, v) => v.toLong }.getOrElse(0L)
     Array(
       m("plannedFiles", entries.size.toLong),
       m("plannedBytes", entries.map(_.fileSize).sum),
-      m("skippedFiles", skipped),
+      m("skippedFiles", skippedFiles),
       m("deletionVectorFiles",
         entries.count(e => dv.contains(graft.core.GraftTable.dvKey(e.path))).toLong))
   }

@@ -689,7 +689,9 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
             }
           }
         }
-        new GraftBatchScan(t, entries, pushed, required, readOptions, dv)
+        val scan = new GraftBatchScan(t, entries, pushed, required, readOptions, dv)
+        scan.planSkippedFiles = t.liveFileCount(snapshotId) - entries.size
+        scan
       case None =>
         // merge-in-scan for deduplicate/first-row PK tables: one task per
         // (partition, bucket) key group, zero exchanges (GraftMorScan)

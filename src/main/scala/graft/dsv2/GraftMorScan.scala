@@ -152,12 +152,15 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val wideTypes = wideSchema.fields.map(_.dataType)
-    val pf = GraftBatchScan.parquetFactory(t, wideSchema, safePushed)
+    // requested as nullable: a file written before an envelope column
+    // existed (__seq2) reads it as null instead of failing the task
+    val fileRead = StructType(wideSchema.fields.map(_.copy(nullable = true)))
+    val pf = GraftBatchScan.parquetFactory(t, fileRead, safePushed)
     GraftMorReaderFactory(pf,
       // DV files read WITHOUT pushdown (row index = running count); with no
       // vector outstanding it is never used, so no second factory (each one
       // broadcasts the Hadoop configuration)
-      if (dv.isEmpty) pf else GraftBatchScan.parquetFactory(t, wideSchema, Array.empty),
+      if (dv.isEmpty) pf else GraftBatchScan.parquetFactory(t, fileRead, Array.empty),
       pkIdx = t.config.primaryKeys.map(idx).toArray,
       seqIdx = idx(GraftTable.SEQ), seq2Idx = idx(GraftTable.SEQ2),
       commitIdx = idx(GraftTable.COMMIT),

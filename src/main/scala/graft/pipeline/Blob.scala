@@ -364,17 +364,40 @@ object Blob {
     * previously EVERY value paid the global `blobStreamLock` twice (packLen
     * get + chunk get) and 32 scan threads serialized on it. Misses fall
     * through to the shared bounded caches unchanged; chunk byte arrays are
-    * immutable once loaded, so memoizing references is safe. */
+    * immutable once loaded, so memoizing references is safe. The memoized
+    * chunk sits outside the pack budget, so only a task holds one, and its
+    * completion releases it: a pooled executor thread keeps no 4 MB slice
+    * between tasks. */
   private final class ThreadBlobMemo {
     var lenUri: String = null
     var len: Long = -1L
     var chunkUri: String = null
     var chunkIdx: Long = -1L
     var chunk: Array[Byte] = null
+    private var task = -1L // attempt whose completion releases the chunk
+
+    def hold(uri: String, idx: Long, c: Array[Byte],
+             tc: org.apache.spark.TaskContext): Unit = synchronized {
+      if (task != tc.taskAttemptId()) {
+        task = tc.taskAttemptId()
+        tc.addTaskCompletionListener[Unit](_ => release())
+      }
+      memoPinned.addAndGet(c.length.toLong - (if (chunk == null) 0 else chunk.length))
+      chunkUri = uri; chunkIdx = idx; chunk = c
+    }
+
+    def release(): Unit = synchronized {
+      if (chunk != null) memoPinned.addAndGet(-chunk.length.toLong)
+      chunkUri = null; chunkIdx = -1L; chunk = null
+    }
   }
   private val threadMemo = new ThreadLocal[ThreadBlobMemo] {
     override def initialValue(): ThreadBlobMemo = new ThreadBlobMemo
   }
+  private val memoPinned = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Chunk bytes the per-thread memos hold right now. */
+  def memoPinnedBytes: Long = memoPinned.get()
 
   private def packLen(uri: String, conf: Configuration): Long = {
     val memo = threadMemo.get()
@@ -470,7 +493,8 @@ object Blob {
             memo.chunk
           } else {
             val c = loadChunk(uri, ci, plen, conf)
-            memo.chunkUri = uri; memo.chunkIdx = ci; memo.chunk = c
+            val tc = org.apache.spark.TaskContext.get()
+            if (tc != null) memo.hold(uri, ci, c, tc)
             c
           }
         val inChunk = (pos % PackChunkBytes).toInt

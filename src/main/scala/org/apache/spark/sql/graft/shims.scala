@@ -62,6 +62,20 @@ object SparkShims {
       .internalCreateDataFrame(ds.queryExecution.toRdd, ds.schema)
   }
 
+  /** A DSv2 batch scan's rows as a DataFrame, one task per input
+    * partition, without a catalog table or an optimizer pass over the scan
+    * (its nullability is relaxed: a reader may fill columns a file lacks
+    * with nulls). */
+  def scanRows(spark: SparkSession,
+               scan: org.apache.spark.sql.connector.read.Scan): DataFrame = {
+    val batch = scan.toBatch
+    val rdd = new org.apache.spark.sql.execution.datasources.v2.DataSourceRDD(
+      spark.sparkContext, batch.planInputPartitions().toSeq.map(Seq(_)),
+      batch.createReaderFactory(), false, Map.empty)
+    spark.asInstanceOf[classic.SparkSession].sqlContext
+      .internalCreateDataFrame(rdd, scan.readSchema().asNullable)
+  }
+
   /** Write `df` under `outputPath` as `format` files, hive-partitioned by
     * `partitionCols`, through Spark's FileFormatWriter (as Delta Lake's
     * TransactionalWrite does): it keeps a child ordering that starts with

@@ -1419,6 +1419,29 @@ class Dsv2Spec extends SparkTestBase {
     }
   }
 
+  test("scan metrics: each scan of a self-join reports its own skipped files") {
+    val loc = tmpLoc("skip-self")
+    val df0 = spark.range(400).select((col("id") % 4).cast("int").as("p"), col("id").as("k"))
+    val t = GraftTable.create(spark, loc, df0.schema,
+      TableConfig(partitionKeys = Seq("p"), numBuckets = 1))
+    t.write(df0)
+    val live = t.planFiles().size
+    val keepA = t.planFiles(None, Some(col("p") === 0)).size
+    val keepB = t.planFiles(None, Some(col("p") <= 2)).size
+    assert(keepA < keepB && keepB < live, (keepA, keepB, live))
+    val all = spark.read.format("graft").load(loc)
+    val j = all.filter(col("p") === 0).as("a")
+      .join(all.filter(col("p") <= 2).as("b"), Seq("k"))
+    assert(j.collect().length == 100) // runs THIS plan, whose nodes hold the metrics
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val skipped = helper.collect(j.queryExecution.executedPlan) {
+      case b: BatchScanExec if b.scan.isInstanceOf[graft.dsv2.GraftBatchScan] =>
+        b.metrics("skippedFiles").value
+    }
+    assert(skipped.sorted == Seq(live - keepB, live - keepA).map(_.toLong), skipped)
+  }
+
   test("deletion vectors apply inside the native columnar scan (no V1 fallback)") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.db")
     spark.sql("""CREATE TABLE graft.db.dvnat (k BIGINT, s STRING, p DOUBLE)

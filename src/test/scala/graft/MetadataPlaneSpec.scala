@@ -294,6 +294,57 @@ class MetadataPlaneSpec extends SparkTestBase {
         "files_added=\\d+ files_deleted=0 ms=\\d+"), mine.last)
   }
 
+  test("every compaction logs one INFO line: table, scope, path and reason, files, bytes, ms") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("compact-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.INFO && e.getLoggerName == "graft.core.RowOps")
+          lines.add(e.getMessage.getFormattedMessage)
+    }
+    spark.sparkContext // Spark may replace the log4j configuration as it starts
+    val logger = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    val prevLevel = logger.getLevel
+    app.start()
+    logger.addAppender(app)
+    logger.setLevel(Level.INFO)
+    val dedup = tmpLoc("compact-log")
+    val partial = tmpLoc("compact-log-pu")
+    try {
+      val t = GraftTable.create(spark, dedup, spark.range(1).toDF("k").schema,
+        TableConfig(primaryKeys = Seq("k"), numBuckets = 2))
+      t.write(spark.range(10).toDF("k"))
+      t.write(spark.range(5).toDF("k"))
+      t.compact()
+      t.write(spark.range(3).toDF("k"))
+      t.compactWhere(_ => true)
+      val pu = GraftTable.create(spark, partial, spark.range(1).toDF("k").schema,
+        TableConfig(primaryKeys = Seq("k"), numBuckets = 2, mergeEngine = "partial-update"))
+      pu.write(spark.range(10).toDF("k"))
+      pu.compact()
+    } finally {
+      logger.removeAppender(app)
+      logger.setLevel(prevLevel)
+    }
+    import scala.jdk.CollectionConverters._
+    def of(loc: String) = lines.asScala.toSeq.filter(_.contains(s"table=$loc "))
+    val counts = "files_in=\\d+ bytes_in=\\d+ files_out=\\d+ bytes_out=\\d+ ms=\\d+"
+    val Seq(full, part) = of(dedup)
+    assert(full.matches(s"compact table=\\Q$dedup\\E scope=full path=in-scan $counts"), full)
+    assert(full.contains(" files_in=4 ") && full.contains(" files_out=2 "), full)
+    assert(part.matches(s"compact table=\\Q$dedup\\E scope=partial path=in-scan $counts"), part)
+    val Seq(rel) = of(partial)
+    assert(rel.matches(s"compact table=\\Q$partial\\E scope=full path=relational " +
+      s"reason=merge-engine:partial-update $counts"), rel)
+    // the partial compaction counts as a compaction too
+    def metric(name: String) = GraftMetrics.forTable(dedup).rows
+      .collectFirst { case (`name`, _, v) => v }.getOrElse(0.0)
+    assert(metric("totalCompactions") == 2.0)
+  }
+
   test("compact_manifest stamps creationTime: migrated legacy table plans with zero per-file stats") {
     val loc = tmpLoc("legacy-ct")
     val df = spark.range(100).select((col("id") % 4).cast("int").as("p"),

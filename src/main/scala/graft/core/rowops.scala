@@ -49,7 +49,6 @@ object RowOps {
     import GraftTable._
     private def spark = t.spark
     private def cfg = t.config
-    private def dataCols: Seq[String] = t.dataSchema.fields.map(_.name).toSeq
 
     // ----------------------------------------------------------------
     // COMPACTION
@@ -218,18 +217,20 @@ object RowOps {
           // the rewrite — best-effort by design (expiry happens when
           // compaction runs; trigger a full compaction to force it)
           val merged = recordLevelExpire(mergedEnvelope(live, dv, reason.isEmpty))
+          val out = t.writeFiles(merged, preMerged = true, level = 1,
+            bucketOverride = bucketOv, totalBucketsByPt = tbByPt,
+            bucketLocal = bucketLocal(live, reason))
           // full-compaction changelog producer: emit exact -U/+U/+I/-D for
           // everything since the previous produced point, at the moment the
           // merged state exists anyway (paimon
-          // FullChangelogMergeTreeCompactRewriter)
+          // FullChangelogMergeTreeCompactRewriter). The state is read back
+          // from the files just written, so the merge runs once.
           if (cfg.option("changelog-producer", "none") == "full-compaction") {
-            val cur = merged.select(dataCols.map(col).toIndexedSeq: _*)
-            val (files, base) = t.fullCompactionChangelog(cur)
+            val (files, base) = t.fullCompactionChangelog(
+              t.readEntries(out, withInternal = false))
             clFiles = files; clBase = base
           }
-          t.writeFiles(merged, preMerged = true, level = 1,
-            bucketOverride = bucketOv, totalBucketsByPt = tbByPt,
-            bucketLocal = bucketLocal(live, reason))
+          out
         } else {
           // row-tracking tables carry their ids through the rewrite;
           // outstanding column patches materialize into the rewrite

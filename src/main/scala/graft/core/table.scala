@@ -465,6 +465,23 @@ class GraftTable private (
       .filter { case (_, es) => es.map(_.totalBuckets).distinct.size > 1 }
       .keySet
 
+  /** Partitions whose files were routed under more than one bucket layout
+    * (bucket count and routing keys of each file's writer schema): a
+    * `rescale` whose rewrite has not committed, or a routing option change
+    * (`bucket.key-layout`, `bucket-key`) followed by writes. A key's
+    * versions may sit in two buckets there, so no bucket is final alone. */
+  private def routingSplitParts(entries: Seq[ManifestEntry])
+      : Set[Map[String, String]] = {
+    val layout = entries.map(_.schemaId).distinct.map { sid =>
+      val c = sm.readSchema(sid).config
+      sid -> (c.numBuckets, GraftTable.routingKeys(c))
+    }.toMap
+    if (layout.values.toSet.size <= 1) Set.empty
+    else entries.groupBy(_.partition).collect {
+      case (p, es) if es.map(e => layout(e.schemaId)).distinct.size > 1 => p
+    }.toSet
+  }
+
   /** Bounded existence probe for real-bucket entries: driver fold below
     * the plan threshold, executor limit-1 above it — never a full live-set
     * materialization (the fixed-bucket direct-path gate at 10^7 files). */
@@ -1757,7 +1774,11 @@ class GraftTable private (
       sm.fs.getFileStatus(new Path(location, e.path)).getModificationTime
     }
 
-  private def readMain(filter: Option[Column], snapshotId: Option[Long]): DataFrame = {
+  private def readMain(filter: Option[Column], snapshotId0: Option[Long]): DataFrame = {
+    // one snapshot for every planning call below and for the connector
+    // bounce: a commit landing in between must not pair one snapshot's
+    // files with another's deletion vectors
+    val snapshotId = snapshotId0.orElse(sm.latestSnapshotId)
     val patches = if (isRowTracking) patchesFor(snapshotId) else Nil
     if (patches.nonEmpty) return readPatched(filter, snapshotId, patches)
     // scan.file-creation-time-millis (batch form): only files created at or
@@ -1788,9 +1809,10 @@ class GraftTable private (
         // A partition with visible staging can't serve ANY bucket raw: a
         // staged version of a key must merge against its real-bucket rows.
         // Same for a partition with MIXED routing layouts (concurrent
-        // fixed-bucket append vs rescale): a pk may span two buckets.
+        // fixed-bucket append vs rescale, or a routing change no rewrite
+        // has followed yet): a pk may span two buckets.
         val stagedParts = stagedMor.map(_.partition).toSet ++
-          mixedLayoutParts(entries)
+          mixedLayoutParts(entries) ++ routingSplitParts(entries)
         val (rawB, mergeB) = byBucket.partition { case ((p, _), es) =>
           rawBucket(es) && !stagedParts.contains(p) }
         // merge work needed + merge-in-scan eligible → route THIS read
@@ -1874,6 +1896,29 @@ class GraftTable private (
     filter.foldLeft(out)((d, c) => d.filter(c))
   }
 
+  /** True when every entry was written under a schema that lays files out
+    * as the current one does: the same fields (id, name, type,
+    * nullability), shredded columns, file format and bucket routing (bucket
+    * count and routing keys, as [[sameRoutingLayout]] checks). An option
+    * change writes a new schema id over an unchanged layout, so such files
+    * still read by the current column names and hold every version of a
+    * key in that key's bucket; an added, dropped, renamed or retyped column
+    * needs the field-id remap, and a routing change (`rescale`,
+    * `bucket.key-layout`, `bucket-key`) splits a key's versions across
+    * buckets, which only the global merge joins again. */
+  private[graft] def currentLayout(entries: Seq[ManifestEntry]): Boolean = {
+    val cur = schema
+    def layout(s: TableSchema) = (
+      s.fields.map(f => (f.id, f.name, f.dataType, f.nullable, f.nestedIdMap)),
+      s.config.options.filter { case (k, _) =>
+        k.startsWith("fields.") && (k.endsWith(".shred") || k.endsWith(".shred-keys")) },
+      s.config.option("file.format", "parquet"),
+      s.config.numBuckets, GraftTable.routingKeys(s.config))
+    lazy val curLayout = layout(cur)
+    entries.iterator.map(_.schemaId).distinct.forall(sid =>
+      sid == cur.id || layout(sm.readSchema(sid)) == curLayout)
+  }
+
   /** Entries iff this snapshot+filter plan is servable RAW — every bucket a
     * single merged (or dedup level-0) file, no tombstones. The native DSv2
     * columnar scan takes this path; anything else needs the DataFrame merge
@@ -1904,9 +1949,12 @@ class GraftTable private (
       : Option[Seq[ManifestEntry]] = morPlan(snapshotId, filter).toOption
 
   /** [[morPlanEntries]] with the reason a plan is not servable in the scan
-    * (Left) — compaction logs it. */
+    * (Left) — compaction logs it. `planned` = the entries
+    * `planFiles(snapshotId, filter)` already returned (planned once by the
+    * caller). */
   private[graft] def morPlan(snapshotId: Option[Long] = None,
-                             filter: Option[Column] = None)
+                             filter: Option[Column] = None,
+                             planned: Option[Seq[ManifestEntry]] = None)
       : Either[String, Seq[ManifestEntry]] = {
     if (!isPk) return Left("append-table")
     if (config.mergeEngine != "deduplicate" && config.mergeEngine != "first-row")
@@ -1924,10 +1972,10 @@ class GraftTable private (
     if (stagedMorEntries(snapshotId, None).nonEmpty) return Left("postpone-staging")
     if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
       return Left("fallback-branch")
-    val entries = planFiles(snapshotId, filter)
+    val entries = planned.getOrElse(planFiles(snapshotId, filter))
     if (entries.isEmpty) return Left("no-files")
-    // old-schema files need the field-id remap (V1 evolution read)
-    if (entries.exists(_.schemaId != schema.id)) return Left("schema-evolution")
+    // files of another layout need the field-id remap (V1 evolution read)
+    if (!currentLayout(entries)) return Left("schema-evolution")
     // mixed routing layouts: a pk may span buckets — the per-bucket in-scan
     // merge would miss the cross-bucket duplicate; V1's global merge wins
     if (mixedLayoutParts(entries).nonEmpty) return Left("mixed-layouts")
@@ -1936,7 +1984,8 @@ class GraftTable private (
 
   def rawPlan(snapshotId: Option[Long] = None,
               filter: Option[Column] = None,
-              allowDv: Boolean = false): Option[Seq[ManifestEntry]] = {
+              allowDv: Boolean = false,
+              planned: Option[Seq[ManifestEntry]] = None): Option[Seq[ManifestEntry]] = {
     if (!allowDv && dvFor(snapshotId).nonEmpty) return None
     // outstanding column patches need the patch-join plan
     if (isRowTracking && patchesFor(snapshotId).nonEmpty) return None
@@ -1945,10 +1994,10 @@ class GraftTable private (
     // fallback-branch reads compose two tables — DataFrame plan only
     if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
       return None
-    val entries = planFiles(snapshotId, filter)
-    // files from older schema versions need the field-id remap (V1 path);
-    // the native columnar scan reads strictly by current column names
-    if (entries.exists(_.schemaId != schema.id)) return None
+    val entries = planned.getOrElse(planFiles(snapshotId, filter))
+    // files of another layout need the field-id remap (V1 path); the
+    // native columnar scan reads strictly by current column names
+    if (!currentLayout(entries)) return None
     if (!isPk) return Some(entries)
     val ok = mixedLayoutParts(entries).isEmpty &&
       entries.groupBy(e => (e.partition, e.bucket))

@@ -51,11 +51,16 @@ import java.util.OptionalLong
  * parquet row index) and deleted positions are dropped inside each columnar
  * batch via a position-remapping vector view — the scan stays columnar for
  * every file, DV'd or clean.
+ *
+ * A key-pinned read whose filters the scan builder claimed (`exact`) reads
+ * rows instead: the filter columns are read too, the filters run on each
+ * row and the survivors are projected to the read schema.
  */
 class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
                      pushed: Array[Filter], required: Option[StructType],
                      readOptions: Map[String, String] = Map.empty,
-                     dv: Map[String, Array[Byte]] = Map.empty)
+                     dv: Map[String, Array[Byte]] = Map.empty,
+                     private[dsv2] val exact: Option[ExactFilter] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportOrdering {
@@ -100,7 +105,7 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
     * GraftBatchScan copy would silently drop, crashing the columnar read
     * with a VariantType→StructType cast). */
   protected def freshCopy(es: Seq[ManifestEntry]): GraftBatchScan =
-    new GraftBatchScan(t, es, pushed, required, readOptions, dv)
+    new GraftBatchScan(t, es, pushed, required, readOptions, dv, exact)
 
   /** A copy of this scan with the bucketed layout turned off — used by the
     * AQE query-stage-prep rule when no downstream operator cares about the
@@ -357,14 +362,13 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
       }.toArray
   }
 
-  private def mkParquetFactory(filters: Array[Filter]): ParquetPartitionReaderFactory =
-    GraftBatchScan.parquetFactory(t, readSchema(), filters)
-
   override def createReaderFactory(): PartitionReaderFactory = {
     // DV files read through a NO-pushdown delegate: parquet row-group/page
-    // skipping would break the position count that maps rows to vector bits
-    val dvFactory = if (dv.isEmpty) null else mkParquetFactory(Array.empty)
-    GraftReaderFactory(mkParquetFactory(pushed), dvFactory)
+    // skipping would break the position count that maps rows to vector bits.
+    // Claimed (exact) filters need their columns read, then drop them.
+    val fileRead = exact.fold(readSchema())(_.widen(readSchema(), t.dataSchema))
+    val (pf, dvf) = GraftBatchScan.parquetFactories(t, fileRead, pushed, dv.nonEmpty)
+    GraftReaderFactory(pf, dvf, exact.map(_.rows(fileRead, readSchema())))
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -462,27 +466,30 @@ object GraftBatchScan {
     }
   }
 
-  /** Build Spark's vectorized parquet reader factory for graft files.
-    * Delegates construction to Spark's own ParquetScan so the hadoopConf
-    * carries the full reader setup (ReadSupport class, requested schema,
-    * timezone, rebase modes). dataSchema = on-disk schema (incl. the LSM
-    * envelope for PK tables); `readSchema` = pruned projection; no
+  /** Spark's vectorized parquet reader factories for graft files, built
+    * ONCE per scan through Spark's own ParquetScan, so the Hadoop
+    * configuration carries the full reader set-up (ReadSupport class,
+    * requested schema, timezone, rebase modes): the factory that pushes
+    * `filters` into parquet, and a copy of it sharing its broadcast that
+    * files under a deletion vector read through — without pushdown when
+    * `withDv` (their running row count must be the parquet row index), else
+    * the same factory, never used. dataSchema = on-disk schema (incl. the
+    * LSM envelope for PK tables); `readSchema` = pruned projection; no
     * hive-style partition columns (partition values live inside files). */
-  private[dsv2] def parquetFactory(t: GraftTable, readSchema: StructType,
-                                   filters: Array[Filter])
-      : ParquetPartitionReaderFactory = {
+  private[dsv2] def parquetFactories(t: GraftTable, readSchema: StructType,
+                                     filters: Array[Filter], withDv: Boolean)
+      : (ParquetPartitionReaderFactory, ParquetPartitionReaderFactory) = {
     val spark = t.spark
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val emptyIndex = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
       spark, Nil, Map.empty, Some(t.fileSchema),
       org.apache.spark.sql.execution.datasources.FileStatusCache.getOrCreate(spark),
       None, None)
-    val pscan = org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
-      spark, hadoopConf, emptyIndex, t.fileSchema, readSchema,
+    val pf = org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
+      spark, spark.sessionState.newHadoopConf(), emptyIndex, t.fileSchema, readSchema,
       new StructType(), filters,
       org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(), None, Nil, Nil,
-      Array.empty)
-    pscan.createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+      Array.empty).createReaderFactory().asInstanceOf[ParquetPartitionReaderFactory]
+    (pf, if (withDv && filters.nonEmpty) pf.copy(filters = Array.empty) else pf)
   }
 
   /** Typed (Catalyst-internal) value from a manifest stat string. */
@@ -565,11 +572,21 @@ case class GraftInputPartition(files: Array[PartitionedFile], key: InternalRow,
   * columnar; reference applies DVs per-reader the same way,
   * deletionvectors/ApplyDeletionVectorReader.java). */
 case class GraftReaderFactory(delegate: ParquetPartitionReaderFactory,
-                              dvDelegate: ParquetPartitionReaderFactory = null)
+                              dvDelegate: ParquetPartitionReaderFactory,
+                              exact: Option[ExactRows] = None)
     extends PartitionReaderFactory {
   private def fp(p: InputPartition): FilePartition =
     FilePartition(0, p.asInstanceOf[GraftInputPartition].files)
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+  /** Claimed filters: the rows of the columnar batches (views, no copy)
+    * that pass, projected to the read schema. */
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    exact match {
+      case Some(x) =>
+        x(if (delegate.supportColumnarReads(fp(p))) new BatchRows(createColumnarReader(p), null)
+          else rowReader(p))
+      case None => rowReader(p)
+    }
+  private def rowReader(p: InputPartition): PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GraftInputPartition]
     if (gp.dvBytes == null) return delegate.createReader(fp(p))
     val bm = DvCache.bitmapFp(gp.dvFp, gp.dvBytes) // once per task, cached per executor
@@ -630,7 +647,7 @@ case class GraftReaderFactory(delegate: ParquetPartitionReaderFactory,
   // all partitions answer alike (delegate and dvDelegate share schema+conf),
   // satisfying DataSourceV2ScanExecBase.supportsColumnar's agreement rule
   override def supportColumnarReads(p: InputPartition): Boolean =
-    delegate.supportColumnarReads(fp(p))
+    exact.isEmpty && delegate.supportColumnarReads(fp(p))
 }
 
 /** Column-vector view exposing only SURVIVING row positions of a batch
@@ -742,10 +759,7 @@ class GraftVariantBatchScan(t: GraftTable, entries: Seq[ManifestEntry],
   override def readSchema(): StructType = logicalSchema
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val pf = GraftBatchScan.parquetFactory(t, physicalSchema, pushedF)
-    val dvf =
-      if (dvMap.isEmpty) null
-      else GraftBatchScan.parquetFactory(t, physicalSchema, Array.empty)
+    val (pf, dvf) = GraftBatchScan.parquetFactories(t, physicalSchema, pushedF, dvMap.nonEmpty)
     GraftVariantReaderFactory(GraftReaderFactory(pf, dvf),
       physicalSchema, logicalSchema, variantCols)
   }
@@ -817,10 +831,7 @@ class GraftMapShredBatchScan(t: GraftTable, entries: Seq[ManifestEntry],
   override def readSchema(): StructType = logicalSchema
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val pf = GraftBatchScan.parquetFactory(t, physicalSchema, pushedF)
-    val dvf =
-      if (dvMap.isEmpty) null
-      else GraftBatchScan.parquetFactory(t, physicalSchema, Array.empty)
+    val (pf, dvf) = GraftBatchScan.parquetFactories(t, physicalSchema, pushedF, dvMap.nonEmpty)
     GraftVariantReaderFactory(GraftReaderFactory(pf, dvf),
       physicalSchema, logicalSchema, mapCols)
   }

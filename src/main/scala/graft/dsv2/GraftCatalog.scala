@@ -58,6 +58,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     sessionOpt.foreach { s =>
       GraftMapShredRule.register(s) // before the prune rule: it swaps in the
       GraftVariantPrune.register(s) // prunable scan the prune rule extends
+      GraftLocalScanStrategy.register(s)
       // NOT under spark.graft.* — that prefix is the session read-option
       // injection namespace and would leak into every table's options
       if (s.conf.getOption("graft.internal.blob-fns-registered").isEmpty) {

@@ -27,8 +27,9 @@ import scala.jdk.CollectionConverters._
  * execution delegates to the engine's DataFrame plans via the public
  * V1Scan/V1Write fallback, so merge-on-read, raw-path selection and commit
  * protocol are shared with the library API (one implementation, two
- * front-ends). Filters are all kept post-scan — pushdown is used for
- * pruning only, never for correctness.
+ * front-ends). Filters are kept post-scan — pushdown prunes files — except
+ * a key-pinned read's, which the scans apply exactly (see
+ * GraftScanBuilder.pushFilters).
  */
 class GraftDataSource extends TableProvider with DataSourceRegister
     with StreamSinkProvider with CreatableRelationProvider {
@@ -131,6 +132,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
                         properties: util.Map[String, String]): Table = {
     GraftMapShredRule.register(SparkSession.active)
     GraftVariantPrune.register(SparkSession.active)
+    GraftLocalScanStrategy.register(SparkSession.active)
     val props = properties.asScala.toMap
     missingAtPath(props) match {
       case Some(path) => return new Table {
@@ -305,7 +307,13 @@ class GraftSparkTable(val t: GraftTable, val snapshotId: Option[Long] = None,
         // scan.watermark: earliest snapshot whose watermark >= the value
         .orElse(merged.get("scan.watermark")
           .map(w => t.sm.laterOrEqualWatermark(w.toLong)))
-    new GraftScanBuilder(t, snapshotId.orElse(optSnap), merged)
+    val pinned = snapshotId.orElse(optSnap)
+    // a batch read plans every file, vector and count against ONE snapshot,
+    // resolved here: a commit landing between two planning calls must not
+    // pair one snapshot's files with another's deletion vectors
+    val batchRead = !GraftScanBuilder.NonBatchOptions.exists(merged.contains)
+    new GraftScanBuilder(t, pinned, merged,
+      if (pinned.isEmpty && batchRead) t.sm.latestSnapshotId else pinned)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -317,15 +325,23 @@ class GraftSparkTable(val t: GraftTable, val snapshotId: Option[Long] = None,
 }
 
 /** Pushdown collection: filters (for manifest pruning), column pruning,
-  * limit. All filters remain post-scan (Spark re-evaluates). */
+  * limit. Filters remain post-scan (Spark re-evaluates) — except those of a
+  * key-pinned read, which every scan built here applies exactly (see
+  * [[pushFilters]]). `snapshotId` = the snapshot the user pinned (time
+  * travel); `planSnapshot` = the one native scans plan against (the pinned
+  * one, else the latest, resolved once by the table). */
 class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
-                       readOptions: Map[String, String] = Map.empty)
+                       readOptions: Map[String, String] = Map.empty,
+                       planSnapshot: Option[Long] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownTopN with SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownVariantExtractions {
 
+  private val planSnap = planSnapshot.orElse(snapshotId)
   private var pushed: Array[Filter] = Array.empty
+  // the pushed filters when this builder claimed them (a key-pinned read)
+  private var exact: Option[ExactFilter] = None
   private var required: Option[StructType] = None
   private var limit: Option[Int] = None
   private var topN: Option[(org.apache.spark.sql.connector.expressions.SortOrder, Int)] = None
@@ -371,11 +387,11 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
       variantOfferRejected = true
       Array.fill(extractions.length)(false)
     }
-    if (variantOfferRejected) return reject
+    // a claimed point-read filter runs in the native scans' readers, which
+    // the struct-serving variant scans are not
+    if (variantOfferRejected || exact.isDefined) return reject
     // non-plain-batch reads route to scans that cannot carry the struct
-    val plainBatch = !Seq("incremental-between", "incremental-between-timestamp",
-      "incremental-to-auto-tag", "read-changelog").exists(readOptions.contains)
-    if (!plainBatch) return reject
+    if (GraftScanBuilder.NonBatchOptions.exists(readOptions.contains)) return reject
     val specs = t.shredSpecs
     val byCol = extractions.zipWithIndex.groupBy(_._1.columnName().toSeq).toSeq
     val perCol = byCol.map {
@@ -409,9 +425,29 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     Array.fill(extractions.length)(true)
   }
 
+  /** Pushdown prunes files; Spark keeps correctness by re-applying every
+    * filter post-scan. A plain batch read whose convertible filters pin
+    * every primary-key column by `=`/`IN` is the exception: those filters
+    * are claimed (not returned), so no `Filter` runs above the scan and a
+    * read served in the driver ([[GraftLocalScan]]) needs no job. Every
+    * scan [[build]] can then return applies them exactly: the native scans
+    * in their readers, the V1 scans through `GraftTable.read`. Variant
+    * scans reject offers after a claim, and a read whose variant offer was
+    * accepted first does not claim; incremental, changelog and streaming
+    * reads never claim. A filter on a blob column whose read resolves its
+    * bytes is not claimed either (the stored bytes differ from the read
+    * ones). Non-convertible filters stay residual. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(GraftScanBuilder.convertible)
-    filters // all post-scan: pushdown prunes files, Spark keeps correctness
+    val claim = t.isPk && pushedVariantCols.isEmpty &&
+      !GraftScanBuilder.NonBatchOptions.exists(readOptions.contains) &&
+      ExactFilter.keyGroups(pushed, t.config.primaryKeys).isDefined &&
+      ExactFilter.expression(pushed, t.dataSchema).isDefined && {
+        val blob = t.blobReadTransformCols(readOptions)
+        !ExactFilter(pushed).references.exists(blob)
+      }
+    exact = if (claim) Some(ExactFilter(pushed)) else None
+    if (claim) filters.filterNot(GraftScanBuilder.convertible) else filters
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -429,7 +465,9 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     * Partial → Spark re-sorts the survivors. */
   override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
                         l: Int): Boolean = {
-    if (orders.length != 1) return false
+    // top-N file pruning assumes every row of a file qualifies; with
+    // claimed filters and no post-scan Filter that no longer holds
+    if (orders.length != 1 || exact.isDefined) return false
     val o = orders.head
     o.expression() match {
       case nr: org.apache.spark.sql.connector.expressions.NamedReference
@@ -637,9 +675,9 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     if (pushedVariantCols.nonEmpty) {
       val pruneCond0 = pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _)
       if (t.fileFormat == "parquet")
-        t.rawPlan(snapshotId, pruneCond0, allowDv = true) match {
+        t.rawPlan(planSnap, pruneCond0, allowDv = true) match {
           case Some(entries) =>
-            val dvm = t.skipMapFor(entries, pruneCond0, snapshotId)
+            val dvm = t.skipMapFor(entries, pruneCond0, planSnap)
             return new GraftVariantBatchScan(t, entries, pushed,
               pushedVariantCols, readOptions, dvm)
           case None => ()
@@ -666,12 +704,14 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
       return new GraftV1Scan(t, snapshotId, pushed, required, limit, readOptions)
     // native columnar scan when no merge work is needed (the common case
     // after compaction); deletion vectors apply inside its reader factory.
-    // V1 DataFrame plan otherwise (shared merge semantics).
-    t.rawPlan(snapshotId, pruneCond, allowDv = true) match {
+    // V1 DataFrame plan otherwise (shared merge semantics). The files are
+    // planned once, against one snapshot.
+    val planned = t.planFiles(planSnap, pruneCond)
+    t.rawPlan(planSnap, pruneCond, allowDv = true, Some(planned)) match {
       case Some(entries0) =>
         // deletion vectors merged with file-index row selections (raw rows
         // are final, so exact bitmap/bsi selections skip inside the reader)
-        val dv = t.skipMapFor(entries0, pruneCond, snapshotId)
+        val dv = t.skipMapFor(entries0, pruneCond, planSnap)
         var entries = entries0
         // file-truncation pruning trusts manifest row counts, which OVERCOUNT
         // rows of DV-carrying files — a LIMIT/TopN could come up short. Both
@@ -689,24 +729,40 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
             }
           }
         }
-        val scan = new GraftBatchScan(t, entries, pushed, required, readOptions, dv)
-        scan.planSkippedFiles = t.liveFileCount(snapshotId) - entries.size
-        scan
+        val scan = new GraftBatchScan(t, entries, pushed, required, readOptions, dv, exact)
+        scan.planSkippedFiles = t.liveFileCount(planSnap) - entries.size
+        localIfSmall(scan)
       case None =>
         // merge-in-scan for deduplicate/first-row PK tables: one task per
         // (partition, bucket) key group, zero exchanges (GraftMorScan)
-        GraftMorScan.plan(t, snapshotId, pruneCond) match {
-          case Some(morEntries) =>
-            new GraftMorScan(t, morEntries, pushed, required,
-              t.dvFor(snapshotId), readOptions)
-          case None =>
+        t.morPlan(planSnap, pruneCond, Some(planned)) match {
+          case Right(morEntries) =>
+            localIfSmall(new GraftMorScan(t, morEntries, pushed, required,
+              t.dvFor(planSnap), readOptions, exact))
+          case Left(_) =>
             new GraftV1Scan(t, snapshotId, pushed, required, limit, readOptions)
         }
     }
   }
+
+  /** A key-pinned read of at most [[ExactFilter.MaxLocalKeyGroups]] keys
+    * that the native scan serves in one task (or none) runs in the driver
+    * instead: no job. */
+  private def localIfSmall(native: Scan with Batch): Scan =
+    exact.flatMap(_ => ExactFilter.keyGroups(pushed, t.config.primaryKeys))
+      .filter(k => k <= ExactFilter.MaxLocalKeyGroups &&
+        native.planInputPartitions().length <= 1) match {
+      case Some(k) => new GraftLocalScan(native, k)
+      case None => native
+    }
 }
 
 object GraftScanBuilder {
+  /** Read options of incremental, changelog and streaming reads: these
+    * never claim filters, and their snapshot is theirs to resolve. */
+  private[dsv2] val NonBatchOptions = Seq("scan.mode", "incremental-between",
+    "incremental-between-timestamp", "incremental-to-auto-tag", "read-changelog")
+
   import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder => V2SortOrder}
 
   /**

@@ -83,8 +83,10 @@ object GraftMapShredRule extends Rule[LogicalPlan] {
     val scan = rel.scan match {
       // plain raw scans only: the variant/map-shred subclasses are already
       // rewritten (idempotence under the fixed-point batch), merge scans
-      // must keep their physical schema
-      case s: GraftBatchScan if !s.isInstanceOf[GraftVariantPrunable] => s
+      // must keep their physical schema, and so must a scan that applies
+      // claimed filters to the columns it reads
+      case s: GraftBatchScan if !s.isInstanceOf[GraftVariantPrunable] &&
+          s.exact.isEmpty => s
       case _ => return None
     }
     val specs = scan.graftTable.mapShredSpecs

@@ -6,8 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,24 +38,33 @@ import java.util.OptionalLong
  * non-matching version pre-merge would resurrect an older matching one.
  * Merge-safe conjuncts (primary-key / partition columns — constant across
  * a key's versions) do push, and their `=`/`IN` ones drop the rows of
- * other keys before the merge; Spark re-applies every filter post-scan
- * (GraftScanBuilder.pushFilters keeps all filters residual).
+ * other keys before the merge; Spark re-applies every filter post-scan —
+ * except a key-pinned read's, which the scan builder claims (`exact`):
+ * those run here, on the merged rows.
+ *
+ * Files are read through Spark's columnar parquet reader when it supports
+ * the wide schema: the key test and the merge see each row as a view into
+ * its batch, and only winners are copied (projected). The row reader
+ * serves the schemas the columnar one does not.
  */
 class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
                    pushed: Array[Filter], required: Option[StructType],
                    dv: Map[String, Array[Byte]],
-                   readOptions: Map[String, String] = Map.empty)
+                   readOptions: Map[String, String] = Map.empty,
+                   exact: Option[ExactFilter] = None)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
   private val latestFirst = t.config.mergeEngine == "deduplicate"
   private val outSchema = required.getOrElse(t.dataSchema)
+  // what the merge emits: the projection plus the claimed filters' columns
+  private val mergedSchema = exact.fold(outSchema)(_.widen(outSchema, t.dataSchema))
 
-  // wide row read from parquet: projected columns ∪ primary key ∪ envelope,
+  // wide row read from parquet: merged columns ∪ primary key ∪ envelope,
   // in file-schema order (stable indices for the projections below)
   private val wideSchema: StructType = {
-    val need = (outSchema.fieldNames ++ t.config.primaryKeys ++
+    val need = (mergedSchema.fieldNames ++ t.config.primaryKeys ++
       Seq(GraftTable.SEQ, GraftTable.SEQ2, GraftTable.COMMIT, GraftTable.POS, GraftTable.KIND)).toSet
     StructType(t.fileSchema.fields.filter(f => need.contains(f.name)))
   }
@@ -155,19 +166,18 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
     // requested as nullable: a file written before an envelope column
     // existed (__seq2) reads it as null instead of failing the task
     val fileRead = StructType(wideSchema.fields.map(_.copy(nullable = true)))
-    val pf = GraftBatchScan.parquetFactory(t, fileRead, safePushed)
-    GraftMorReaderFactory(pf,
-      // DV files read WITHOUT pushdown (row index = running count); with no
-      // vector outstanding it is never used, so no second factory (each one
-      // broadcasts the Hadoop configuration)
-      if (dv.isEmpty) pf else GraftBatchScan.parquetFactory(t, fileRead, Array.empty),
+    // DV files read WITHOUT pushdown (row index = running count); with no
+    // vector outstanding it is never used
+    val (pf, dvf) = GraftBatchScan.parquetFactories(t, fileRead, safePushed, dv.nonEmpty)
+    GraftMorReaderFactory(pf, dvf,
       pkIdx = t.config.primaryKeys.map(idx).toArray,
       seqIdx = idx(GraftTable.SEQ), seq2Idx = idx(GraftTable.SEQ2),
       commitIdx = idx(GraftTable.COMMIT),
       posIdx = idx(GraftTable.POS), kindIdx = idx(GraftTable.KIND),
-      outIdx = outSchema.fieldNames.map(idx),
+      outIdx = mergedSchema.fieldNames.map(idx),
       wideTypes = wideTypes, latestFirst = latestFirst,
-      keyTest = GraftMorReaderFactory.keyTest(safePushed, wideSchema))
+      keyTest = GraftMorReaderFactory.keyTest(safePushed, wideSchema),
+      exact = exact.map(_.rows(mergedSchema, outSchema)))
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -176,14 +186,6 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
 
   override def description(): String =
     s"GraftMorScan(${t.location}, files=${entries.size}, engine=${t.config.mergeEngine})"
-}
-
-object GraftMorScan {
-  /** Entries for a merge-in-scan plan, or None when this table/snapshot
-    * needs the V1 DataFrame path — see GraftTable.morPlanEntries. */
-  def plan(t: GraftTable, snapshotId: Option[Long],
-           filter: Option[org.apache.spark.sql.Column]): Option[Seq[ManifestEntry]] =
-    t.morPlanEntries(snapshotId, filter)
 }
 
 /** All files of ONE (partition, bucket) key group; `dvFps`/`dvBytes` align
@@ -201,27 +203,14 @@ case class GraftMorInputPartition(files: Array[PartitionedFile],
 }
 
 object GraftMorReaderFactory {
-  /** Pristine serialized form of a factory, captured at CONSTRUCTION time
-    * (driver side, before any reader exists). Isolated readers are built
-    * by deserializing these bytes ([[fromBytes]]): two readers created
-    * from ONE ParquetPartitionReaderFactory corrupt each other when their
-    * next() calls interleave (the k-way merge's access pattern, run by
-    * Dsv2Spec "merge-on-read inside the scan" and "merge-in-scan key
-    * filters" and CrossPartitionSpec "chained moves" — the factory keeps
-    * per-reader lazy state it never expects to share), and
-    * serializing the LIVE factory on demand is not safe either: one Spark
-    * task can drain SEVERAL key groups (DataSourceRDD packs multiple
-    * input partitions per task), so a raw group streamed through the
-    * shared delegate leaves non-serializable reader state
-    * (RecordReaderIterator) inside it, and a later merged group's
-    * on-demand clone then throws NotSerializableException
-    * (CrossPartitionSpec "chained moves" reproduces the mix). Bytes
-    * captured while pristine sidestep both hazards. */
-  private[dsv2] def toBytes(f: ParquetPartitionReaderFactory): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(f); oos.close()
-    bos.toByteArray
+  /** A new factory over `f`'s broadcast configuration, schemas and filters,
+    * with its own reader callback. The constructor reads the SQL conf and
+    * the parquet options, whose shipped copies cannot be read on an
+    * executor: the running task's conf serves both (the options are the
+    * defaults — see GraftBatchScan.parquetFactories). */
+  private[dsv2] def fresh(f: ParquetPartitionReaderFactory): ParquetPartitionReaderFactory = {
+    val conf = SQLConf.get
+    f.copy(sqlConf = conf, options = new ParquetOptions(Map.empty[String, String], conf))
   }
 
   /** The merge-safe pushed filters that are `=` or `IN` over an integral,
@@ -246,13 +235,6 @@ object GraftMorReaderFactory {
         case _ => None
       }
     }
-
-  private[dsv2] def fromBytes(bytes: Array[Byte]): ParquetPartitionReaderFactory = {
-    val ois = new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try ois.readObject().asInstanceOf[ParquetPartitionReaderFactory]
-    finally ois.close()
-  }
 }
 
 case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
@@ -260,33 +242,34 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
                                  pkIdx: Array[Int], seqIdx: Int, seq2Idx: Int, commitIdx: Int,
                                  posIdx: Int, kindIdx: Int, outIdx: Array[Int],
                                  wideTypes: Array[DataType], latestFirst: Boolean,
-                                 keyTest: KeyTest)
+                                 keyTest: KeyTest,
+                                 exact: Option[ExactRows] = None)
     extends PartitionReaderFactory {
-
-  // pristine clone blueprints, captured while the delegates are untouched
-  // (see GraftMorReaderFactory.toBytes)
-  private val delegateBlueprint: Array[Byte] = GraftMorReaderFactory.toBytes(delegate)
-  private val dvBlueprint: Array[Byte] =
-    if (dvDelegate eq delegate) delegateBlueprint else GraftMorReaderFactory.toBytes(dvDelegate)
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
-  /** One file's reader. `isolated` = give the reader ITS OWN factory
-    * clone deserialized from the pristine blueprint — required whenever
-    * several of a group's readers are open at once (the k-way merge). The
-    * raw streamed path drains files one at a time and keeps the shared
-    * factories (Spark's own sequential pattern). */
+  /** One file's rows. Through the columnar reader when it supports the
+    * wide schema: rows are views into its batches, never copied; the row
+    * reader otherwise. `isolated` = the reader gets ITS OWN copy of the
+    * factory — required whenever several of a group's readers are open at
+    * once (the k-way merge): a parquet factory's reader callback closes the
+    * reader it opened last when it opens the next one. A copy
+    * ([[GraftMorReaderFactory.fresh]]) shares the broadcast configuration.
+    * The raw streamed
+    * path drains files one at a time and keeps the shared factories
+    * (Spark's own sequential pattern). */
   private def fileReader(gp: GraftMorInputPartition, i: Int,
                          isolated: Boolean = false)
       : PartitionReader[InternalRow] = {
     val fp = FilePartition(0, Array(gp.files(i)))
-    if (gp.dvBytes(i) == null)
-      (if (isolated) GraftMorReaderFactory.fromBytes(delegateBlueprint)
-       else delegate).createReader(fp)
+    val f0 = if (gp.dvBytes(i) == null) delegate else dvDelegate
+    val f = if (isolated) GraftMorReaderFactory.fresh(f0) else f0
+    val bm =
+      if (gp.dvBytes(i) == null) null else DvCache.bitmapFp(gp.dvFps(i), gp.dvBytes(i))
+    if (f.supportColumnarReads(fp)) new BatchRows(f.createColumnarReader(fp), bm)
+    else if (bm == null) f.createReader(fp)
     else {
-      val bm = DvCache.bitmapFp(gp.dvFps(i), gp.dvBytes(i))
-      val inner = (if (isolated) GraftMorReaderFactory.fromBytes(dvBlueprint)
-                   else dvDelegate).createReader(fp)
+      val inner = f.createReader(fp)
       new PartitionReader[InternalRow] {
         private var pos = -1L
         private var cur: InternalRow = _
@@ -310,7 +293,7 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
         : org.apache.spark.sql.catalyst.expressions.Expression))
     val outProj = mkOutProj
 
-    new PartitionReader[InternalRow] {
+    val merging = new PartitionReader[InternalRow] {
       private var it: Iterator[InternalRow] = _
       private var cur: InternalRow = _
       private var openReaders: Array[PartitionReader[InternalRow]] = _
@@ -506,6 +489,7 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
         openReaders = null
       }
     }
+    exact.fold(merging)(_(merging))
   }
 }
 

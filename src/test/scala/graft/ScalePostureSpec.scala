@@ -344,4 +344,46 @@ class ScalePostureSpec extends SparkTestBase {
       s"compact: $compact")
     assert(t.read().count() == 700)
   }
+
+  test("a key-pinned lookup runs no Spark job; a two-bucket IN and an unpinned read " +
+       "run one job; compaction stays one job with no shuffle") {
+    // a read whose filters pin the primary key and whose scan has one input
+    // partition is served in the driver (GraftLocalScan); exact counts trip
+    // on a lookup that starts submitting jobs again
+    import graft.core.{GraftTable, TableConfig}
+    import graft.core.RowOps._
+    def batch(from: Int, n: Int) = (from until from + n)
+      .map(i => (i.toLong % 400, s"v$i")).toDF("k", "v")
+    val loc = tmpLoc("pointread")
+    val t = GraftTable.create(spark, loc, batch(0, 1).schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 4))
+    t.write(batch(0, 400))
+    t.write(batch(400, 200))
+    // the library lookup (read → connector bounce → local scan)
+    def lookup(c: org.apache.spark.sql.Column) =
+      GraftTable.load(spark, loc).read(Some(c)).as[(Long, String)].collect().toSet
+    val one = SparkJobs.during(spark)(assert(lookup(col("k") === 7L) == Set((7L, "v407"))))
+    assert(one.shape == (0, 0, 0, 0) && one.tasks == 0, s"lookup: $one")
+    val plan = GraftTable.load(spark, loc).read(Some(col("k") === 7L))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("GraftLocalScan") && plan.contains("keyGroups=1") &&
+      plan.contains("GraftMorScan"), plan)
+    val buckets = spark.range(400).select(col("id"), expr("graft_bucket(4, id)").as("b"))
+      .as[(Long, Int)].collect().groupBy(_._2)
+    val keys = Seq(buckets(0).head._1, buckets(1).head._1)
+    val two = SparkJobs.during(spark)(assert(lookup(col("k").isin(keys: _*)).size == 2))
+    assert(two.shape == (1, 1, 0, 0) && two.tasks == 2, s"two-bucket IN: $two")
+    val unpinned = SparkJobs.during(spark)(
+      assert(lookup(col("v").startsWith("v5")).size == 100))
+    assert(unpinned.shape == (1, 1, 0, 0) && unpinned.tasks == 4, s"unpinned: $unpinned")
+    val compact = SparkJobs.during(spark)(GraftTable.load(spark, loc).compact())
+    assert(compact.shape == (1, 1, 0, 0) && compact.shuffleWriteBytes == 0,
+      s"compact: $compact")
+    // through the connector, the compacted (raw) bucket serves the lookup
+    // in the driver too (the library read of an all-raw table keeps its
+    // own V1 plan)
+    val raw = SparkJobs.during(spark)(assert(spark.read.format("graft").load(loc)
+      .filter(col("k") === 7L).as[(Long, String)].collect().toSeq == Seq((7L, "v407"))))
+    assert(raw.shape == (0, 0, 0, 0), s"raw lookup: $raw")
+  }
 }

@@ -5,12 +5,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.SparkSession
 
 /** Exact Spark work of one block of code: the jobs it starts, the stages
-  * they run, the stages that wrote shuffle output and how many bytes, and
-  * the file-listing jobs. Counted in a job group of the calling thread, so
+  * they run, the stages that wrote shuffle output and how many bytes, the
+  * file-listing jobs, the tasks, and the stages that read through a DSv2
+  * scan (a `DataSourceRDD` in the stage). Counted in a job group of the calling thread, so
   * no other work in the shared session is included. */
 object SparkJobs {
   case class Jobs(n: Int, stages: Int, shuffleStages: Int, listing: Int,
-                  shuffleWriteBytes: Long) {
+                  shuffleWriteBytes: Long, tasks: Int = 0, dsv2ScanStages: Int = 0) {
     /** (jobs, stages, shuffle-writing stages, listing jobs): exact at any
       * scale, unlike the byte count. */
     def shape: (Int, Int, Int, Int) = (n, stages, shuffleStages, listing)
@@ -23,6 +24,8 @@ object SparkJobs {
     val stages = new java.util.concurrent.atomic.AtomicInteger
     val shuffleStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val dsv2Stages = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
@@ -30,9 +33,13 @@ object SparkJobs {
           e.stageIds.foreach(mine.add)
         }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (mine.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+        if (mine.contains(e.stageInfo.stageId)) {
+          stages.incrementAndGet()
+          if (e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD")) dsv2Stages.incrementAndGet()
+        }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (mine.contains(e.stageId) && e.taskMetrics != null) {
+          tasks.incrementAndGet()
           val w = e.taskMetrics.shuffleWriteMetrics
           if (w.recordsWritten > 0) shuffleStages.add(e.stageId)
           shuffleBytes.addAndGet(w.bytesWritten)
@@ -49,6 +56,7 @@ object SparkJobs {
     }
     import scala.jdk.CollectionConverters._
     Jobs(jobs.size, stages.get, shuffleStages.size,
-      jobs.asScala.count(_.contains("Listing leaf files")), shuffleBytes.get)
+      jobs.asScala.count(_.contains("Listing leaf files")), shuffleBytes.get,
+      tasks.get, dsv2Stages.get)
   }
 }

@@ -102,16 +102,17 @@ object FileIndexes {
 
   // ---------------------------------------------------------------- build
 
-  /** Build index payloads for every data file under `stagingAbs` — one
-    * distributed aggregation pass, payloads written from executors (the
-    * driver sees only the job result). No-op without configured specs. */
-  def build(t: GraftTable, stagingAbs: String): Unit = {
-    if (t.fileIndexSpecs.isEmpty) return
+  /** Build index payloads for the data files a write just put under
+    * `stagingAbs` (its own `entries`, nothing re-listed) — one distributed
+    * aggregation pass, payloads written from executors (the driver sees
+    * only the job result). No-op without configured specs or files. */
+  def build(t: GraftTable, stagingAbs: String, entries: Seq[ManifestEntry]): Unit = {
+    if (t.fileIndexSpecs.isEmpty || entries.isEmpty) return
     val written = t.readDataFiles(
       StructType(t.fileSchema.fields ++ Array(
         StructField(GraftTable.PT, StringType),
         StructField(GraftTable.BUCKET, IntegerType))),
-      Seq(stagingAbs), basePath = Some(stagingAbs))
+      entries, basePath = Some(stagingAbs))
     buildFromDf(t, written)
   }
 
@@ -126,8 +127,7 @@ object FileIndexes {
     FileIndexStore.invalidate(t.location)
     val entries = t.planFiles(None, None)
     if (t.fileIndexSpecs.isEmpty || entries.isEmpty) return 0L
-    val paths = entries.map(e => new Path(t.location, e.path).toString)
-    buildFromDf(t, t.readDataFiles(t.fileSchema, paths))
+    buildFromDf(t, t.readDataFiles(t.fileSchema, entries))
     entries.size.toLong
   }
 

@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans
+import org.apache.spark.sql.graft.SparkShims
 import org.apache.spark.sql.types._
 
 /**
@@ -321,26 +323,28 @@ object StatsPrune {
     ev(e).getOrElse(false)
   }
 
-  // Analysis of a predicate costs a full Catalyst pass (~100ms driver time);
-  // resolution is a pure function of (schema, predicate text), so repeated
+  // Resolution is a pure function of (schema, predicate text), so repeated
   // plans of the same filter (every bench/verify re-run, every incremental
-  // read of a hot table) hit this cache instead.
+  // read of a hot table) hit this cache instead of the analyzer.
   private val resolveCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), Expression]()
+  // the empty relation a predicate resolves against, one per schema
+  private val relations =
+    new java.util.concurrent.ConcurrentHashMap[StructType, plans.logical.LocalRelation]()
 
   /** Resolve a user Column predicate against `schema` into a Catalyst
-    * expression, via the analyzer on an empty relation (public API only). */
+    * expression: the session analyzer alone over `Filter(cond, empty
+    * relation)` — no Dataset, no optimizer or planner pass. */
   def resolve(spark: org.apache.spark.sql.SparkSession, schema: StructType,
               cond: Column): Expression = {
     val key = (schema.hashCode(), cond.toString)
     val cached = resolveCache.get(key)
     if (cached != null) return cached
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val out = empty.filter(cond).queryExecution.analyzed.collectFirst {
-      case f: Filter => f.condition
-    }.getOrElse(Literal(true))
+    if (relations.size > 64) relations.clear()
+    val rel = relations.computeIfAbsent(schema, s =>
+      plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(s)))
+    val out = SparkShims.resolveFilter(spark, cond, rel)
     if (resolveCache.size > 1024) resolveCache.clear()
     resolveCache.put(key, out)
     out
@@ -355,6 +359,21 @@ object StatsPrune {
     * conjuncts, type coercion casts, or a too-large value cross product). */
   def bucketCandidates(pred: Expression, keyCols: Seq[String],
                        numBuckets: Int, maxCombos: Int = 256): Option[Set[Int]] = {
+    val valueSets = keyLiterals(pred, keyCols).getOrElse(return None)
+    if (valueSets.map(_.size.toLong).product > maxCombos) return None
+    val combos = valueSets.foldLeft(Seq(Seq.empty[Literal])) { (acc, s) =>
+      acc.flatMap(p => s.toSeq.map(p :+ _))
+    }
+    Some(combos.map { lits =>
+      Pmod(new XxHash64(lits.toIndexedSeq), Literal(numBuckets.toLong))
+        .eval(null).asInstanceOf[Long].toInt
+    }.toSet)
+  }
+
+  /** The literal set each of `keyCols` is pinned to by top-level `=`/`IN`
+    * conjuncts of `pred` (literals of the column's own type), in `keyCols`
+    * order; None unless every column is pinned. */
+  def keyLiterals(pred: Expression, keyCols: Seq[String]): Option[Seq[Set[Literal]]] = {
     def conj(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conj(l) ++ conj(r)
       case x => Seq(x)
@@ -375,15 +394,6 @@ object StatsPrune {
           } => add(a.name, vs.map(_.asInstanceOf[Literal]).toSet)
       case _ =>
     }
-    if (!keyCols.forall(per.contains)) return None
-    val valueSets = keyCols.map(per)
-    if (valueSets.map(_.size.toLong).product > maxCombos) return None
-    val combos = valueSets.foldLeft(Seq(Seq.empty[Literal])) { (acc, s) =>
-      acc.flatMap(p => s.toSeq.map(p :+ _))
-    }
-    Some(combos.map { lits =>
-      Pmod(new XxHash64(lits.toIndexedSeq), Literal(numBuckets.toLong))
-        .eval(null).asInstanceOf[Long].toInt
-    }.toSet)
+    if (keyCols.forall(per.contains)) Some(keyCols.map(per)) else None
   }
 }

@@ -29,8 +29,9 @@ import java.util.UUID
  *    Spark parquet committer); the driver touches only metadata.
  *  - Stats collection is a distributed aggregation over the just-written
  *    files, grouped by `input_file_name()` (one pass, map-side combined).
- *  - Reads hand Spark an explicit file list + schema: no inference, parquet
- *    footer pruning and filter pushdown still apply per file.
+ *  - Reads hand Spark the manifest's file list (sizes included) + schema:
+ *    no listing, no inference; parquet footer pruning and filter pushdown
+ *    still apply per file.
  *  - Buckets with a single (compacted) file and no tombstones take the raw
  *    path (no shuffle); only overlapping buckets pay the merge window.
  */
@@ -137,14 +138,17 @@ class GraftTable private (
       config.options.get("file.compression").map("compression" -> _) ++
       config.options.filter(_._1.startsWith(fileFormat + "."))
 
-  /** Read data files in the table's format with an explicit schema.
-    * `basePath` set ⇒ paths live under a partitioned staging dir and the
-    * schema's trailing partition columns resolve from directory values. */
-  private[graft] def readDataFiles(sch: StructType, paths: Seq[String],
+  /** Read the data files `entries` name, in the table's format with an
+    * explicit schema, through a [[ManifestFileIndex]]: the file list, sizes
+    * and times come from the manifest, so planning lists nothing and stats
+    * nothing. `basePath` set ⇒ the files live under a partitioned staging
+    * dir and the schema's trailing partition columns resolve from
+    * directory values. */
+  private[graft] def readDataFiles(sch: StructType, entries: Seq[ManifestEntry],
                                    basePath: Option[String] = None): DataFrame = {
-    val r = spark.read.schema(sch).options(fmtOptions)
-    basePath.foreach(b => r.option("basePath", b))
-    r.format(formatProvider).load(paths: _*)
+    val opts = fmtOptions ++ basePath.map("basePath" -> _)
+    SparkShims.readFiles(spark, ManifestFileIndex(this, entries, opts, sch), sch,
+      formatProvider, opts)
   }
 
   /** Spark datasource name for the table's file format ("avro" and "row"
@@ -909,7 +913,7 @@ class GraftTable private (
     }
     // per-file secondary indexes (bloom/bitmap/bsi) for the new files —
     // a second distributed pass, payloads written straight from executors
-    FileIndexes.build(this, stagingAbs)
+    FileIndexes.build(this, stagingAbs, entries)
     entries
   }
 
@@ -1129,8 +1133,7 @@ class GraftTable private (
       val written = readDataFiles(
         StructType(fileSchema.fields ++ Array(
           StructField(PT, StringType), StructField(BUCKET, IntegerType))),
-        adds.map(e => new Path(location, e.path).toString),
-        basePath = Some(base.toString))
+        adds, basePath = Some(base.toString))
       written.select((pks.map(col) ++ partCols.map(col) ++
           Seq(col(PT), col(BUCKET), lit(commitSeq).as("__ver"))).toIndexedSeq: _*)
         .write.mode("append").parquet(pkIndexDir.toString)
@@ -1531,13 +1534,12 @@ class GraftTable private (
       if (withMeta) Seq(col(GraftTable.FILE_PATH_COL), col(GraftTable.ROW_INDEX_COL))
       else Nil
     val parts = entries.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, es) =>
-      val paths = es.map(e => new Path(location, e.path).toString)
       if (sid == curSchema.id) {
-        applyDv(attachMeta(readDataFiles(fileSchema, paths)))
+        applyDv(attachMeta(readDataFiles(fileSchema, es)))
       } else {
         val old = sm.readSchema(sid)
         val raw = applyDv(
-          attachMeta(readDataFiles(envelopeOf(old.sparkSchema), paths)))
+          attachMeta(readDataFiles(envelopeOf(old.sparkSchema), es)))
         val byId = old.fields.map(f => f.id -> f).toMap
         val dataCols = curSchema.fields.map { f =>
           val dt = DataType.fromDDL(f.dataType)
@@ -1818,13 +1820,20 @@ class GraftTable private (
         // merge work needed + merge-in-scan eligible → route THIS read
         // through the DSv2 connector (GraftMorScan): per-bucket in-scan
         // merge, zero exchanges, instead of the relational Window/max_by
-        // plan. Branch-pinned handles keep the relational plan (the
-        // path-based connector load reads main). Eligibility is checked
-        // UNFILTERED: the connector prunes with the weaker convertible
-        // subset, so its entry set is a superset — the uniform-schema
-        // check must hold for all live entries or the connector could
-        // bounce back here (V1 fallback) and loop.
-        if (stagedMor.isEmpty && mergeB.nonEmpty && sm.branch.isEmpty &&
+        // plan. A key-pinned read whose pruned buckets are all raw goes the
+        // same way: the connector serves it in the driver (GraftLocalScan),
+        // with no job. Branch-pinned handles keep the relational plan (the
+        // path-based connector load reads main), and so does a creation-
+        // time cutoff (the connector does not apply it). Eligibility is
+        // checked UNFILTERED: the connector prunes with the weaker
+        // convertible subset, so its entry set is a superset — the
+        // uniform-schema check must hold for all live entries, so the
+        // connector serves the read raw or merged in its scan and never
+        // bounces it back here (V1 fallback) to loop.
+        def keyPinned = filter.exists(c =>
+          StatsPrune.keyLiterals(StatsPrune.resolve(spark, fileSchema, c), pks).isDefined)
+        if (stagedMor.isEmpty && sm.branch.isEmpty && fileCutoff.isEmpty &&
+            (mergeB.nonEmpty || keyPinned) &&
             morPlanEntries(snapshotId, None).isDefined) {
           var r = spark.read.format("graft")
           snapshotId.foreach(id => r = r.option("scan.snapshot-id", id.toString))

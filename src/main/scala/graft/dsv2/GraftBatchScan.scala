@@ -480,10 +480,8 @@ object GraftBatchScan {
                                      filters: Array[Filter], withDv: Boolean)
       : (ParquetPartitionReaderFactory, ParquetPartitionReaderFactory) = {
     val spark = t.spark
-    val emptyIndex = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      spark, Nil, Map.empty, Some(t.fileSchema),
-      org.apache.spark.sql.execution.datasources.FileStatusCache.getOrCreate(spark),
-      None, None)
+    // ParquetScan wants a file index; the scan's files are its own splits
+    val emptyIndex = new graft.core.ManifestFileIndex(spark, Nil, Map.empty, Some(t.fileSchema))
     val pf = org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
       spark, spark.sessionState.newHadoopConf(), emptyIndex, t.fileSchema, readSchema,
       new StructType(), filters,

@@ -79,17 +79,16 @@ object GlobalIndex {
     val all = t.rawPlan(None, None).getOrElse(throw new IllegalStateException(
       "global index build needs a raw-convertible (compacted, DV-free) snapshot"))
     val entries = all.filter(entryCovered(_, partitions))
-    val paths = entries.map(e => new Path(t.location, e.path).toString)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("value",
         t.fileSchema(colName).dataType),
       org.apache.spark.sql.types.StructField("file",
         org.apache.spark.sql.types.StringType)))
     val rows =
-      if (paths.isEmpty) // restriction matched no files: an EMPTY covered set
+      if (entries.isEmpty) // restriction matched no files: an EMPTY covered set
         spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else t.readDataFiles(t.fileSchema, paths)
+      else t.readDataFiles(t.fileSchema, entries)
         .select(col(colName).as("value"),
           // relative path, stable across filesystems (URI-decoded by regexp
           // on the path tail: data/c-<uuid>/... is the manifest-relative form)
@@ -137,8 +136,7 @@ object GlobalIndex {
     val idx = GraftTable.load(spark, indexLoc(tableLoc, colName))
     if (dead.nonEmpty) idx.delete(col("file").isin(dead.toSeq: _*))
     if (fresh.nonEmpty) {
-      val paths = fresh.map(e => new Path(t.location, e.path).toString)
-      val rows = t.readDataFiles(t.fileSchema, paths)
+      val rows = t.readDataFiles(t.fileSchema, fresh)
         .select(col(colName).as("value"),
           regexp_extract(input_file_name(), "(data/.*)$", 1).as("file"))
       idx.write(rows.groupBy("value", "file").agg(count(lit(1)).as("cnt")))

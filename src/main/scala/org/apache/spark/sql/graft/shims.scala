@@ -3,12 +3,15 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.util.{CaseInsensitiveMap, CharVarcharUtils}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat, FileFormatWriter, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat, FileFormatWriter, FileIndex, HadoopFsRelation, LogicalRelation, WriteJobStatsTracker}
 import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Bridge into Spark's `private[sql]` surface, placed under
@@ -16,13 +19,25 @@ import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
  * reference uses (paimon-spark keeps shims under org.apache.spark.sql.paimon,
  * e.g. paimon-spark/paimon-spark-common/src/main/scala/org/apache/spark/sql/paimon/shims).
  * Kept to the minimum: plan→DataFrame and Expression→Column for the SQL
- * row-level command rewrites, and the data-file write.
+ * row-level command rewrites, analysis of a predicate, and the data-file
+ * read and write.
  */
 object SparkShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** `cond` resolved as a filter over `child` by the session analyzer
+    * alone (no Dataset, no optimizer): the condition of
+    * `Dataset.filter(cond).queryExecution.analyzed`. */
+  def resolveFilter(spark: SparkSession, cond: Column, child: LogicalPlan): Expression = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    s.withActive(s.sessionState.analyzer.executeAndCheck(
+      Filter(s.expression(cond), child), new QueryPlanningTracker)).collectFirst {
+      case f: Filter => f.condition
+    }.get
+  }
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
@@ -88,11 +103,7 @@ object SparkShims {
                  trackers: Seq[WriteJobStatsTracker]): Unit = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
-    val fileFormat = DataSource.lookupDataSource(format, session.sessionState.conf)
-      .getConstructor().newInstance() match {
-      case v2: FileDataSourceV2 => v2.fallbackFileFormat.getConstructor().newInstance()
-      case f: FileFormat => f
-    }
+    val fileFormat = fileFormatOf(session, format)
     SQLExecution.withNewExecutionId(qe, Some(s"graft write $outputPath")) {
       val plan = qe.executedPlan
       val committer = FileCommitProtocol.instantiate(
@@ -115,4 +126,32 @@ object SparkShims {
       m.setBytesWritten(m.bytesWritten + bytes)
       m.setRecordsWritten(m.recordsWritten + records)
     }
+
+  /** The V1 `FileFormat` behind a datasource name (a file source V2 maps
+    * to its fallback format), the class looked up once per name. */
+  private def fileFormatOf(spark: SparkSession, format: String): FileFormat =
+    fileFormats.computeIfAbsent(format, f =>
+      DataSource.lookupDataSource(f, spark.asInstanceOf[classic.SparkSession].sessionState.conf)
+        .getConstructor().newInstance() match {
+        case v2: FileDataSourceV2 => v2.fallbackFileFormat
+        case ff: FileFormat => ff.getClass
+      }).getConstructor().newInstance().asInstanceOf[FileFormat]
+
+  private val fileFormats = new java.util.concurrent.ConcurrentHashMap[String, Class[_]]()
+
+  /** Read the files `index` names as `format` with the explicit `schema`,
+    * the relation `spark.read.schema(schema).options(options).format(format)
+    * .load(paths)` resolves to, minus its path listing: `HadoopFsRelation`
+    * over `index` (partition columns are the index's, typed by `schema`),
+    * wrapped as a `LogicalRelation`. */
+  def readFiles(spark: SparkSession, index: FileIndex, schema: StructType, format: String,
+                options: Map[String, String]): DataFrame = {
+    val sch = CharVarcharUtils.replaceCharVarcharWithStringInSchema(schema)
+    def same(a: String, b: String) = a.equalsIgnoreCase(b)
+    val parts = StructType(index.partitionSchema.map(p => sch.find(f => same(f.name, p.name)).getOrElse(p)))
+    val dataSchema = StructType(sch.filterNot(f => parts.exists(p => same(p.name, f.name))))
+    val rel = HadoopFsRelation(index, parts, dataSchema.asNullable, None,
+      fileFormatOf(spark, format), CaseInsensitiveMap(options))(spark)
+    ofRows(spark, LogicalRelation(rel))
+  }
 }

@@ -331,6 +331,52 @@ class PointReadSpec extends SparkTestBase {
       .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], df.queryExecution.executedPlan)
   }
 
+  test("a library lookup whose pruned buckets are all raw is served in the driver") {
+    val loc = tmpLoc("pointread-rawlib")
+    val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 2))
+    t.write((0 until 40).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
+    t.compact()
+    // a fresh key above the compacted files' key range: stats prune the
+    // compacted file of its bucket, leaving one level-0 file (raw)
+    t.write(Seq((1000L, "n1000"), (15L, "b15")).toDF("k", "v"))
+    def lookup(c: Column): Read = {
+      val df = GraftTable.load(spark, loc).read(Some(c))
+      var rows: Array[Row] = null
+      val jobs = SparkJobs.during(spark) { rows = df.collect() }
+      assertSameRows(df, oracle(loc).filter(c))
+      Read(jobs, df.queryExecution.executedPlan, rows.toSeq)
+    }
+    val planned = GraftTable.load(spark, loc).planFiles(filter = Some(col("k") === 1000L))
+    assert(planned.size == 1 && planned.head.level == 0, planned)
+    Seq(1000L -> "n1000", 7L -> "a7", 15L -> "b15").foreach { case (key, v) =>
+      val r = lookup(col("k") === key)
+      assert(r.rows.map(_.getString(1)) == Seq(v), r.rows)
+      // the connector serves the bounce itself: a local scan, never the V1
+      // plan it was bounced from
+      assert(r.jobs.n == 0 && r.local, s"k=$key: ${r.jobs}\n${r.plan}")
+    }
+    // an unpinned read of the same raw buckets keeps the library's V1 plan
+    val all = lookup(col("k") >= 1000L)
+    assert(all.rows.size == 1 && !all.local, all.plan)
+  }
+
+  test("a creation-time cutoff keeps a merge read on the library plan, which applies it") {
+    val loc = tmpLoc("pointread-cutoff")
+    val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 1))
+    t.write((0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
+    Thread.sleep(20)
+    val cut = System.currentTimeMillis()
+    Thread.sleep(20)
+    t.write(Seq((3L, "b3"), (20L, "b20")).toDF("k", "v"))
+    t.write(Seq((20L, "c20")).toDF("k", "v"))
+    t.setOption("scan.file-creation-time-millis", cut.toString)
+    // only the two files written after the cutoff serve, merged together
+    assert(GraftTable.load(spark, loc).read().as[(Long, String)].collect().toSet ==
+      Set((3L, "b3"), (20L, "c20")))
+  }
+
   test("a full-compaction changelog reads the merged state once") {
     val loc = tmpLoc("pointread-fcl")
     val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,

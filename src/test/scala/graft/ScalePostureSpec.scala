@@ -386,4 +386,64 @@ class ScalePostureSpec extends SparkTestBase {
       .filter(col("k") === 7L).as[(Long, String)].collect().toSeq == Seq((7L, "v407"))))
     assert(raw.shape == (0, 0, 0, 0), s"raw lookup: $raw")
   }
+
+  test("a library lookup of a compacted (all-raw) bucket runs no Spark job") {
+    import graft.core.{GraftTable, TableConfig}
+    import graft.core.RowOps._
+    val loc = tmpLoc("rawlookup")
+    val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 4))
+    t.write((0 until 400).map(i => (i.toLong, s"v$i")).toDF("k", "v"))
+    t.write((0 until 400 by 5).map(i => (i.toLong, s"w$i")).toDF("k", "v"))
+    t.compact()
+    val jobs = SparkJobs.during(spark)(assert(GraftTable.load(spark, loc)
+      .read(Some(col("k") === 7L)).as[(Long, String)].collect().toSeq == Seq((7L, "v7"))))
+    assert(jobs.shape == (0, 0, 0, 0), s"raw library lookup: $jobs")
+  }
+
+  test("a 64-file append read lists nothing and plans through the manifest index") {
+    import graft.core.{GraftTable, ManifestFileIndex, TableConfig}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val loc = tmpLoc("manifest64")
+    val df = spark.range(6400).select(col("id"), (col("id") % 13).as("g"))
+    GraftTable.create(spark, loc, df.schema, TableConfig()).write(df.repartition(64))
+    var read: DataFrame = null
+    val jobs = SparkJobs.during(spark) {
+      read = GraftTable.load(spark, loc).read()
+      assert(read.collect().length == 6400)
+    }
+    assert(jobs.listing == 0 && jobs.n == 1, jobs)
+    val index = read.queryExecution.optimizedPlan.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }
+    assert(index.exists(_.isInstanceOf[ManifestFileIndex]), index)
+    assert(index.get.toString == "ManifestFileIndex(64 files)")
+    val explain = read.queryExecution.executedPlan.toString
+    assert(explain.contains("Location: ManifestFileIndex(64 paths)"), explain)
+  }
+
+  test("IVF searches on a 64-file index list nothing: a 1%-filtered search runs " +
+       "3 jobs, a plain one 1") {
+    import graft.core.GraftTable
+    import graft.pipeline.Indexes
+    // 16 well-separated clusters over 4 input partitions: 64 index files
+    val vecs = spark.range(2000).select(col("id").as("vec_id"),
+      (col("id") % 100).cast("int").as("tag"),
+      array((0 until 16).map(d => (when(col("id") % 16 === d, lit(1.0)).otherwise(lit(0.0)) +
+        (rand(d) - 0.5) * 0.05).cast("float")): _*).as("emb"))
+    val loc = tmpLoc("ivf64")
+    Indexes.buildIvf(spark, vecs.repartition(4), "emb", loc, nClusters = 16)
+    assert(GraftTable.load(spark, loc).planFiles().size == 64)
+    val q = (0 until 16).map(d => if (d == 3) 1.0f else 0.0f)
+    def search(filter: Option[org.apache.spark.sql.Column]) = SparkJobs.during(spark) {
+      assert(Indexes.ivfSearch(spark, loc, "emb", q, 10, 8, filter = filter)
+        .collect().length == 10)
+    }
+    // the 1% filter keeps 20 rows: the escalation count over 8 probed
+    // clusters falls short, so the top-k reads every cluster (64 files)
+    val f1 = search(Some(col("tag") === 3))
+    assert(f1.listing == 0 && f1.n == 3, s"1%-filtered: $f1")
+    val plain = search(None)
+    assert(plain.listing == 0 && plain.n == 1, s"plain: $plain")
+  }
 }

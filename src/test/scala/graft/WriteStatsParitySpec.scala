@@ -27,7 +27,7 @@ class WriteStatsParitySpec extends SparkTestBase {
   private def readBackStats(t: GraftTable, commitDir: String,
                             level: Int): Map[String, (Int, Long, Long, Map[String, ColStat])] = {
     val stagingAbs = new Path(t.location, commitDir).toString
-    val written = t.readDataFiles(
+    val written = SparkFileRead.load(t,
       StructType(t.fileSchema.fields ++ Array(
         StructField(PT, StringType), StructField(BUCKET, IntegerType))),
       Seq(stagingAbs), basePath = Some(stagingAbs))

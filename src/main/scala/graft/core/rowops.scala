@@ -148,10 +148,17 @@ object RowOps {
 
     /** Why compaction of this table merges in the relational plan, or None
       * when the merge-in-scan reader serves it (deduplicate/first-row
-      * parquet, the read path's own predicate; postpone tables route to
-      * new buckets and keep the relational plan). */
+      * parquet, the read path's own [[GraftTable.readPlan]]; postpone
+      * tables route to new buckets and keep the relational plan). */
     private def relationalCompactionReason: Option[String] =
-      if (t.isPostpone) Some("postpone") else t.morPlan().left.toOption
+      if (t.isPostpone) Some("postpone")
+      else t.readPlan() match {
+        case ReadPlan.Relational(reason) => Some(reason)
+        case _: ReadPlan.InScan => None
+        // every bucket final: only the table's kind can keep the merge out
+        // of the scan
+        case _: ReadPlan.Raw => t.mergeRefusal()
+      }
 
     /** The merged rows of `entries` with the LSM envelope kept. In the scan
       * (`inScan`): [[graft.dsv2.GraftMorScan]] merges each (partition,

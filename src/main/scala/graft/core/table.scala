@@ -1312,28 +1312,26 @@ class GraftTable private (
     fixedBucketKeys.flatMap(keys =>
       StatsPrune.bucketCandidates(expr, keys, config.numBuckets)) match {
       case Some(cands) =>
-        val sameLayout = entries.map(_.schemaId).distinct.filter { sid =>
-          val c = sm.readSchema(sid).config
-          c.numBuckets == config.numBuckets &&
-            GraftTable.routingKeys(c) == fixedBucketKeys
-        }.toSet
+        val sameLayout = entries.map(_.schemaId).distinct.filter(routedAsCurrent).toSet
         entries.filter(e =>
           !sameLayout.contains(e.schemaId) || cands.contains(e.bucket))
       case None => entries
     }
 
+  /** True when files written under schema `sid` are routed as the table
+    * routes now: the same bucket count and routing keys. */
+  private def routedAsCurrent(sid: Long): Boolean = {
+    val c = sm.readSchema(sid).config
+    c.numBuckets == config.numBuckets && GraftTable.routingKeys(c) == fixedBucketKeys
+  }
+
   /** True when EVERY given entry was written under the table's CURRENT
-    * routing layout (same bucket count AND routing keys per its writer's
-    * schemaId) — the precondition for trusting bucket ids across entries
-    * (same check [[bucketPrune]] applies per entry; chain-stream merge
-    * grouping uses it across branches, where a rescale or layout upgrade
-    * may have rewritten one branch but not another). */
+    * routing layout ([[routedAsCurrent]] per writer schemaId) — the
+    * precondition for trusting bucket ids across entries (chain-stream
+    * merge grouping uses it across branches, where a rescale or layout
+    * upgrade may have rewritten one branch but not another). */
   private[graft] def sameRoutingLayout(entries: Seq[ManifestEntry]): Boolean =
-    entries.map(_.schemaId).distinct.forall { sid =>
-      val c = sm.readSchema(sid).config
-      c.numBuckets == config.numBuckets &&
-        GraftTable.routingKeys(c) == fixedBucketKeys
-    }
+    entries.map(_.schemaId).distinct.forall(routedAsCurrent)
 
   /** Resolve `c` for stats pruning; PK tables keep only merge-safe conjuncts
     * (value-column pruning on MOR input resurrects stale versions — see
@@ -1377,12 +1375,8 @@ class GraftTable private (
     val bucketed = exprOpt.flatMap(e => fixedBucketKeys.flatMap(k =>
       StatsPrune.bucketCandidates(e, k, config.numBuckets))) match {
       case Some(cands) =>
-        val sids = pruned.map(_.schemaId).distinct().collect()
-        val sameLayout = sids.filter { sid =>
-          val c = sm.readSchema(sid).config
-          c.numBuckets == config.numBuckets &&
-            GraftTable.routingKeys(c) == fixedBucketKeys
-        }.toSet
+        val sameLayout = pruned.map(_.schemaId).distinct().collect()
+          .filter(routedAsCurrent).toSet
         pruned.filter((e: ManifestEntry) =>
           !sameLayout.contains(e.schemaId) || cands.contains(e.bucket))
       case None => pruned
@@ -1468,16 +1462,15 @@ class GraftTable private (
   private[core] def filterCols(c: Column): Set[String] =
     StatsPrune.resolve(spark, fileSchema, c).references.map(_.name).toSet
 
-  /** Position-skip map for a scan of `entries` under `filter`: outstanding
-    * deletion vectors merged with file-index row selections (rows an exact
+  /** Position-skip map for a scan of `entries` under `filter`: deletion
+    * vectors `dv` merged with file-index row selections (rows an exact
     * bitmap/bsi index proves cannot match are skipped in the reader; Spark
     * still re-applies the filter to the survivors). ONLY valid where rows
     * are final — append tables and fully-merged (raw) PK buckets; row
     * skipping on merge-on-read INPUT would unbalance the merge exactly like
     * value-column file pruning. */
-  private[graft] def skipMapFor(entries: Seq[ManifestEntry], filter: Option[Column],
-                                snapshotId: Option[Long]): Map[String, Array[Byte]] = {
-    val dv = dvFor(snapshotId)
+  private def skipMapFor(entries: Seq[ManifestEntry], filter: Option[Column],
+                         dv: Map[String, Array[Byte]]): Map[String, Array[Byte]] = {
     if (fileIndexSpecs.isEmpty || filter.isEmpty || entries.isEmpty) return dv
     val expr = StatsPrune.resolve(spark, fileSchema, filter.get)
     val (_, sels) = FileIndexes.pruneAndSelect(this, entries, expr)
@@ -1573,41 +1566,39 @@ class GraftTable private (
     else df.select((dataSchema.fields.map(f => col(f.name)) ++ metaCols).toIndexedSeq: _*)
   }
 
-  /** Decode-free variant extraction: project the SHREDDED columns the write
-    * materialized — the variant binary itself is never read or decoded
-    * (paimon extraction pushdown capability). `aliases` rename the spec's
-    * extractions in order; the caller filters/selects the result (column
-    * pruning keeps the scan to exactly the referenced physical columns). */
   /** Snapshot read exposing the shredded variant-extraction columns
     * ALONGSIDE the data columns (merged view on PK tables, DV-applied,
     * stats-pruned by `filter`). The DSv2 variant-extraction pushdown
     * ([[graft.dsv2.GraftScanBuilder]]) serves variant-struct fields from
-    * these physical columns — the variant binary is never decoded. */
+    * these physical columns — the variant binary is never decoded. PK
+    * tables extract through the MERGED view: dedup-family merges keep whole
+    * rows, so the winner's shred columns are its own extractions. */
   def readWithShreds(filter: Option[Column] = None,
                      snapshotId: Option[Long] = None): DataFrame = {
-    val raw = readEntries(planFiles(snapshotId, filter), withInternal = true,
-      dvFor(snapshotId))
-    val df =
+    def merged(entries: Seq[ManifestEntry], dv: Map[String, Array[Byte]]) = {
+      val raw = readEntries(entries, withInternal = true, dv)
       if (!isPk) raw
-      else MergeEngines.merge(raw, config, dataSchema)
-        .drop(SEQ, SEQ2, COMMIT, POS, KIND)
+      else MergeEngines.merge(raw, config, dataSchema).drop(SEQ, SEQ2, COMMIT, POS, KIND)
+    }
+    val df = readPlan(snapshotId, filter, batch = true) match {
+      case ReadPlan.Raw(entries, skips) => readEntries(entries, withInternal = true, skips)
+      case ReadPlan.InScan(entries, dv) => merged(entries, dv)
+      case p: ReadPlan.Relational => merged(p.entries ++ p.staged, p.dv)
+    }
     df.select((dataSchema.fields.map(f => col(f.name)) ++
       shredFields.map(f => col(f.name))).toIndexedSeq: _*)
   }
 
+  /** Decode-free variant extraction: project the SHREDDED columns the write
+    * materialized — the variant binary is never read or decoded (paimon
+    * extraction pushdown capability). `aliases` rename the spec's
+    * extractions in order; the caller filters/selects the result (column
+    * pruning keeps the scan to exactly the referenced physical columns). */
   def readVariantExtracted(colName: String, aliases: Seq[String]): DataFrame = {
     val specs = shredSpecs.getOrElse(colName, throw new IllegalArgumentException(
       s"no shred spec for column $colName (set fields.$colName.shred)"))
     require(aliases.length == specs.length, "one alias per declared extraction")
-    val raw = readEntries(planFiles(None, None), withInternal = true, dvFor(None))
-    // PK tables: extraction goes through the MERGED view — dedup-family
-    // merges keep whole rows, so the winner's shred columns are its own
-    // extractions; the variant binary is never decoded (only projected out)
-    val df =
-      if (!isPk) raw
-      else MergeEngines.merge(raw, config, dataSchema)
-        .drop(SEQ, SEQ2, COMMIT, POS, KIND)
-    specs.indices.foldLeft(df) { (d, i) =>
+    specs.indices.foldLeft(readWithShreds(None, None)) { (d, i) =>
       d.withColumnRenamed(shredColName(colName, i), aliases(i))
     }
   }
@@ -1621,13 +1612,19 @@ class GraftTable private (
   /** Read with per-call options (DSv2 passes the scan's read options here so
     * e.g. `blob-view.resolve.enabled=false` works per query). */
   def read(filter: Option[Column], snapshotId: Option[Long],
-           readOpts: Map[String, String]): DataFrame = {
+           readOpts: Map[String, String]): DataFrame =
+    read(filter, snapshotId, readOpts, bounce = true)
+
+  /** [[read]]; `bounce = false` keeps a PK read off the connector — the
+    * connector's own V1 scan for a plan it found [[ReadPlan.Relational]]. */
+  private[graft] def read(filter: Option[Column], snapshotId: Option[Long],
+                          readOpts: Map[String, String], bounce: Boolean): DataFrame = {
     // fallback branch (paimon scan.fallback-branch / FallbackReadFileStoreTable):
     // partitions missing on the main table serve from the named branch
     val base = config.options.get("scan.fallback-branch") match {
       case Some(fb) if sm.branch.isEmpty && snapshotId.isEmpty =>
         readFallback(fb, filter, readOpts)
-      case _ => readMain(filter, snapshotId)
+      case _ => readMain(filter, snapshotId, bounce)
     }
     resolveBlobRead(base, readOpts, snapshotId)
   }
@@ -1741,7 +1738,7 @@ class GraftTable private (
   private def readFallback(branchName: String, filter: Option[Column],
                            readOpts: Map[String, String]): DataFrame = {
     val fb = GraftTable.load(spark, location, Some(branchName))
-    val mainDf = readMain(filter, None)
+    val mainDf = readMain(filter, None, bounce = false)
     if (config.partitionKeys.isEmpty)
       return if (planFiles(None, None).nonEmpty) mainDf
              else fb.read(filter, None, readOpts)
@@ -1776,103 +1773,91 @@ class GraftTable private (
       sm.fs.getFileStatus(new Path(location, e.path)).getModificationTime
     }
 
-  private def readMain(filter: Option[Column], snapshotId0: Option[Long]): DataFrame = {
-    // one snapshot for every planning call below and for the connector
-    // bounce: a commit landing in between must not pair one snapshot's
-    // files with another's deletion vectors
+  /** The snapshot read behind [[read]]. A PK table the in-scan merge can
+    * serve reads through the DSv2 connector, decided on table state alone
+    * (nothing is planned here): the connector's [[readPlan]] then picks the
+    * raw columnar scan or the merge inside GraftMorScan with the pushed
+    * filters, so a key-pinned read is served in the driver (GraftLocalScan).
+    * When the files need the relational merge (evolved layouts, visible
+    * staging) the connector's V1 scan reads back here with `bounce = false`.
+    * Branch-pinned handles read here (the path-based connector load reads
+    * main), and so does every other table: raw, or the relational merge. */
+  private def readMain(filter: Option[Column], snapshotId0: Option[Long],
+                       bounce: Boolean): DataFrame = {
+    // one snapshot for the plan and for the connector bounce: a commit
+    // landing in between must not pair one snapshot's files with another's
+    // deletion vectors
     val snapshotId = snapshotId0.orElse(sm.latestSnapshotId)
     val patches = if (isRowTracking) patchesFor(snapshotId) else Nil
     if (patches.nonEmpty) return readPatched(filter, snapshotId, patches)
-    // scan.file-creation-time-millis (batch form): only files created at or
-    // after the cutoff serve the read — maintenance paths are unaffected
-    // (they plan through planFiles directly). Creation time comes from the
-    // MANIFEST (stamped at write), not a per-file driver getFileStatus.
-    val fileCutoff = config.options.get("scan.file-creation-time-millis").map(_.toLong)
-    val entries0 = planFiles(snapshotId, filter)
-    val entries = fileCutoff match {
-      case Some(c) => entries0.filter(entryCreationTime(_) >= c)
-      case None => entries0
+    if (bounce && sm.branch.isEmpty && mergeRefusal().isEmpty) {
+      var r = spark.read.format("graft")
+      snapshotId.foreach(id => r = r.option("scan.snapshot-id", id.toString))
+      // pin the STORED blob form on the bounce: blob resolution belongs
+      // to the OUTER read()'s resolveBlobRead wrapper — without the pin
+      // the connector's blob routing would send the scan back to the V1
+      // DataFrame plan, which re-enters this bounce (infinite recursion)
+      GraftTable.STORED_READ_OPTS.foreach { case (k, v) => r = r.option(k, v) }
+      return filter.foldLeft(r.load(location))((d, c) => d.filter(c))
     }
-    // postpone.merge-on-read: committed -2 staging joins the merge set
-    // instead of waiting for compaction (reference POSTPONE_MERGE_ON_READ)
-    val stagedMor = if (isPk) stagedMorEntries(snapshotId, filter) else Nil
-    if (entries.isEmpty && stagedMor.isEmpty)
-      return filter.foldLeft(emptyDf)((d, c) => d.filter(c))
-    val dv = dvFor(snapshotId)
-    val out =
-      if (!isPk)
-        readEntries(entries, withInternal = false, skipMapFor(entries, filter, snapshotId))
-      else {
-        val byBucket = entries.groupBy(e => (e.partition, e.bucket))
-        // raw-convertible buckets (see rawBucket): fully-merged compaction
-        // output (possibly several size-rolled, key-disjoint files) or a
-        // single dedup level-0 file. partial-update/aggregation level-0
-        // files may hold several versions of a key, so they must merge.
-        // A partition with visible staging can't serve ANY bucket raw: a
-        // staged version of a key must merge against its real-bucket rows.
-        // Same for a partition with MIXED routing layouts (concurrent
-        // fixed-bucket append vs rescale, or a routing change no rewrite
-        // has followed yet): a pk may span two buckets.
-        val stagedParts = stagedMor.map(_.partition).toSet ++
-          mixedLayoutParts(entries) ++ routingSplitParts(entries)
-        val (rawB, mergeB) = byBucket.partition { case ((p, _), es) =>
-          rawBucket(es) && !stagedParts.contains(p) }
-        // merge work needed + merge-in-scan eligible → route THIS read
-        // through the DSv2 connector (GraftMorScan): per-bucket in-scan
-        // merge, zero exchanges, instead of the relational Window/max_by
-        // plan. A key-pinned read whose pruned buckets are all raw goes the
-        // same way: the connector serves it in the driver (GraftLocalScan),
-        // with no job. Branch-pinned handles keep the relational plan (the
-        // path-based connector load reads main), and so does a creation-
-        // time cutoff (the connector does not apply it). Eligibility is
-        // checked UNFILTERED: the connector prunes with the weaker
-        // convertible subset, so its entry set is a superset — the
-        // uniform-schema check must hold for all live entries, so the
-        // connector serves the read raw or merged in its scan and never
-        // bounces it back here (V1 fallback) to loop.
-        def keyPinned = filter.exists(c =>
-          StatsPrune.keyLiterals(StatsPrune.resolve(spark, fileSchema, c), pks).isDefined)
-        if (stagedMor.isEmpty && sm.branch.isEmpty && fileCutoff.isEmpty &&
-            (mergeB.nonEmpty || keyPinned) &&
-            morPlanEntries(snapshotId, None).isDefined) {
-          var r = spark.read.format("graft")
-          snapshotId.foreach(id => r = r.option("scan.snapshot-id", id.toString))
-          // pin the STORED blob form on the bounce: blob resolution belongs
-          // to the OUTER read()'s resolveBlobRead wrapper — without the pin
-          // the connector's blob routing would send the scan back to the V1
-          // DataFrame plan, which re-enters this bounce (infinite recursion,
-          // exactly the bounce-back hazard noted above)
-          GraftTable.STORED_READ_OPTS.foreach { case (k, v) => r = r.option(k, v) }
-          return filter.foldLeft(r.load(location))((d, c) => d.filter(c))
-        }
-        // raw buckets are fully merged: their rows are final, so the FULL
-        // filter (value conjuncts included) prunes them per-file — this is
-        // where post-compaction value-filter file skipping happens for PK
-        // tables (planFiles itself only pruned on merge-safe columns)
-        val rawEntries = fullPrune(rawB.values.flatten.toSeq, filter)
-        val mergeEntries = mergeB.values.flatten.toSeq ++ stagedMor
-        // version-pileup estimate: rows per bucket vs the bucket's largest
-        // file (a lower bound on distinct keys). High ratio → hash-agg merge
-        // (map-side duplicate collapse); low ratio → sort window.
-        val heavyDup = mergeB.nonEmpty && {
-          val total = mergeEntries.map(_.rowCount).sum.toDouble
-          val keysLb = mergeB.values.map(_.map(_.rowCount).max).sum.toDouble
-          keysLb > 0 && total / keysLb >= 2.0
-        }
-        val parts = Seq(
-          if (rawEntries.nonEmpty)
-            // raw rows are final → index row-skip applies (merge input: DVs only)
-            Some(readEntries(rawEntries, withInternal = false,
-              skipMapFor(rawEntries, filter, snapshotId)))
-          else None,
-          if (mergeEntries.nonEmpty)
-            Some(MergeEngines.merge(readEntries(mergeEntries, withInternal = true, dv),
-              config, dataSchema, preferHash = heavyDup)
-              .select(dataSchema.fields.map(f => col(f.name)).toIndexedSeq: _*))
-          else None).flatten
-        parts.reduce(_ unionAll _)
-      }
+    val out = readPlan(snapshotId, filter, batch = true) match {
+      case ReadPlan.Raw(entries, skips) =>
+        // rows are final → index row-skip applies
+        readEntries(entries, withInternal = false, skips)
+      case ReadPlan.InScan(entries, dv) => relationalRead(entries, Nil, dv, filter)
+      case p: ReadPlan.Relational => relationalRead(p.entries, p.staged, p.dv, filter)
+    }
     filter.foldLeft(out)((d, c) => d.filter(c))
+  }
+
+  /** The relational read of planned `entries` plus visible postpone
+    * `staged` files: append tables read them as stored; PK tables read
+    * their final buckets raw and merge the rest through MergeEngines. */
+  private def relationalRead(entries: Seq[ManifestEntry], staged: Seq[ManifestEntry],
+                             dv: Map[String, Array[Byte]],
+                             filter: Option[Column]): DataFrame = {
+    if (entries.isEmpty && staged.isEmpty) return emptyDf
+    if (!isPk) return readEntries(entries, withInternal = false, skipMapFor(entries, filter, dv))
+    val byBucket = entries.groupBy(e => (e.partition, e.bucket))
+    // raw-convertible buckets (see rawBucket): fully-merged compaction
+    // output (possibly several size-rolled, key-disjoint files) or a
+    // single dedup level-0 file. partial-update/aggregation level-0
+    // files may hold several versions of a key, so they must merge.
+    // A partition with visible staging can't serve ANY bucket raw: a
+    // staged version of a key must merge against its real-bucket rows.
+    // Same for a partition with MIXED routing layouts (concurrent
+    // fixed-bucket append vs rescale, or a routing change no rewrite
+    // has followed yet): a pk may span two buckets.
+    val stagedParts = staged.map(_.partition).toSet ++
+      mixedLayoutParts(entries) ++ routingSplitParts(entries)
+    val (rawB, mergeB) = byBucket.partition { case ((p, _), es) =>
+      rawBucket(es) && !stagedParts.contains(p) }
+    // raw buckets are fully merged: their rows are final, so the FULL
+    // filter (value conjuncts included) prunes them per-file — this is
+    // where post-compaction value-filter file skipping happens for PK
+    // tables (planFiles itself only pruned on merge-safe columns)
+    val rawEntries = fullPrune(rawB.values.flatten.toSeq, filter)
+    val mergeEntries = mergeB.values.flatten.toSeq ++ staged
+    // version-pileup estimate: rows per bucket vs the bucket's largest
+    // file (a lower bound on distinct keys). High ratio → hash-agg merge
+    // (map-side duplicate collapse); low ratio → sort window.
+    val heavyDup = mergeB.nonEmpty && {
+      val total = mergeEntries.map(_.rowCount).sum.toDouble
+      val keysLb = mergeB.values.map(_.map(_.rowCount).max).sum.toDouble
+      keysLb > 0 && total / keysLb >= 2.0
+    }
+    val parts = Seq(
+      if (rawEntries.nonEmpty)
+        // raw rows are final → index row-skip applies (merge input: DVs only)
+        Some(readEntries(rawEntries, withInternal = false,
+          skipMapFor(rawEntries, filter, dv)))
+      else None,
+      if (mergeEntries.nonEmpty)
+        Some(MergeEngines.merge(readEntries(mergeEntries, withInternal = true, dv),
+          config, dataSchema, preferHash = heavyDup)
+          .select(dataSchema.fields.map(f => col(f.name)).toIndexedSeq: _*))
+      else None).flatten
+    if (parts.isEmpty) emptyDf else parts.reduce(_ unionAll _)
   }
 
   /** Data-evolution read: base files merged with outstanding column
@@ -1890,16 +1875,17 @@ class GraftTable private (
       return filter.foldLeft(emptyDf)((d, c) => d.filter(c))
     val (hit, miss) = entries.partition(e => patchOverlaps(e, patches))
     val dataCols = dataSchema.fields.map(f => col(f.name)).toIndexedSeq
+    val dv = dvFor(snapshotId)
     val parts = Seq(
       if (hit.nonEmpty)
         Some(applyPatches(
           readEntries(hit, withInternal = true,
-            skipMapFor(hit, pruneSafe, snapshotId)), patches)
+            skipMapFor(hit, pruneSafe, dv)), patches)
           .select(dataCols: _*))
       else None,
       if (miss.nonEmpty)
         Some(readEntries(miss, withInternal = false,
-          skipMapFor(miss, pruneSafe, snapshotId)))
+          skipMapFor(miss, pruneSafe, dv)))
       else None).flatten
     val out = parts.reduce(_ unionAll _)
     filter.foldLeft(out)((d, c) => d.filter(c))
@@ -1908,7 +1894,7 @@ class GraftTable private (
   /** True when every entry was written under a schema that lays files out
     * as the current one does: the same fields (id, name, type,
     * nullability), shredded columns, file format and bucket routing (bucket
-    * count and routing keys, as [[sameRoutingLayout]] checks). An option
+    * count and routing keys, as [[routedAsCurrent]] checks). An option
     * change writes a new schema id over an unchanged layout, so such files
     * still read by the current column names and hold every version of a
     * key in that key's bucket; an added, dropped, renamed or retyped column
@@ -1928,12 +1914,6 @@ class GraftTable private (
       sid == cur.id || layout(sm.readSchema(sid)) == curLayout)
   }
 
-  /** Entries iff this snapshot+filter plan is servable RAW — every bucket a
-    * single merged (or dedup level-0) file, no tombstones. The native DSv2
-    * columnar scan takes this path; anything else needs the DataFrame merge
-    * plan. `allowDv=false` (default) also demands no deletion vectors —
-    * callers that apply DVs themselves (the native scan's reader factory
-    * skips per-file positions) pass true. */
   /** A bucket's entry-set is servable RAW (rows final, no merge needed):
     * every file level>0 — ONE compaction's outputs, key-disjoint even when
     * size-rolling split them (compaction rewrites all live files of a
@@ -1948,81 +1928,83 @@ class GraftTable private (
       config.mergeEngine == "deduplicate"
   }
 
-  /** Entries for a merge-INSIDE-the-scan plan (dsv2.GraftMorScan): PK
-    * deduplicate/first-row over uniform-schema parquet files — the merge
-    * runs per (partition, bucket) key group in the reader, zero exchanges.
-    * None → the relational MergeEngines plan (other engines, schema
-    * evolution, column patches, fallback branch, non-parquet). */
-  private[graft] def morPlanEntries(snapshotId: Option[Long] = None,
-                                    filter: Option[Column] = None)
-      : Option[Seq[ManifestEntry]] = morPlan(snapshotId, filter).toOption
-
-  /** [[morPlanEntries]] with the reason a plan is not servable in the scan
-    * (Left) — compaction logs it. `planned` = the entries
-    * `planFiles(snapshotId, filter)` already returned (planned once by the
-    * caller). */
-  private[graft] def morPlan(snapshotId: Option[Long] = None,
-                             filter: Option[Column] = None,
-                             planned: Option[Seq[ManifestEntry]] = None)
-      : Either[String, Seq[ManifestEntry]] = {
-    if (!isPk) return Left("append-table")
-    if (config.mergeEngine != "deduplicate" && config.mergeEngine != "first-row")
-      return Left(s"merge-engine:${config.mergeEngine}")
-    if (fileFormat != "parquet") return Left(s"format:$fileFormat")
-    if (isRowTracking && patchesFor(snapshotId).nonEmpty) return Left("column-patches")
+  /** Why the in-scan merge ([[graft.dsv2.GraftMorScan]], PK
+    * deduplicate/first-row over parquet) cannot serve this table whatever
+    * its files are; `patches` and `staged` are a snapshot's outstanding
+    * column patches and visible postpone staging. None: the scan merges,
+    * file layout permitting. */
+  private[graft] def mergeRefusal(patches: Seq[PatchFile] = Nil,
+                                  staged: Seq[ManifestEntry] = Nil): Option[String] =
+    if (!isPk) Some("append-table")
+    else if (config.mergeEngine != "deduplicate" && config.mergeEngine != "first-row")
+      Some(s"merge-engine:${config.mergeEngine}")
+    else if (fileFormat != "parquet") Some(s"format:$fileFormat")
+    else if (patches.nonEmpty) Some("column-patches")
     // pk-clustering-override files are CLUSTERING-sorted, not pk-sorted —
     // the in-scan k-way merge requires pk order, so those tables merge
-    // through the V1 relational plan (their raw compacted reads are
-    // unaffected; uncompacted merge reads are the rare state the
-    // override trades away for value-column file skipping)
-    if (config.option("pk-clustering-override", "false") == "true")
-      return Left("pk-clustering-override")
-    // visible postpone staging (-2) needs the V1 merge plan
-    if (stagedMorEntries(snapshotId, None).nonEmpty) return Left("postpone-staging")
-    if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
-      return Left("fallback-branch")
-    val entries = planned.getOrElse(planFiles(snapshotId, filter))
-    if (entries.isEmpty) return Left("no-files")
-    // files of another layout need the field-id remap (V1 evolution read)
-    if (!currentLayout(entries)) return Left("schema-evolution")
-    // mixed routing layouts: a pk may span buckets — the per-bucket in-scan
-    // merge would miss the cross-bucket duplicate; V1's global merge wins
-    if (mixedLayoutParts(entries).nonEmpty) return Left("mixed-layouts")
-    Right(entries)
-  }
+    // through the relational plan (their raw compacted reads are
+    // unaffected; uncompacted merge reads are the rare state the override
+    // trades away for value-column file skipping)
+    else if (config.option("pk-clustering-override", "false") == "true")
+      Some("pk-clustering-override")
+    else if (staged.nonEmpty) Some("postpone-staging")
+    // fallback-branch reads compose two tables
+    else if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
+      Some("fallback-branch")
+    else None
 
-  def rawPlan(snapshotId: Option[Long] = None,
-              filter: Option[Column] = None,
-              allowDv: Boolean = false,
-              planned: Option[Seq[ManifestEntry]] = None): Option[Seq[ManifestEntry]] = {
-    if (!allowDv && dvFor(snapshotId).nonEmpty) return None
-    // outstanding column patches need the patch-join plan
-    if (isRowTracking && patchesFor(snapshotId).nonEmpty) return None
-    // visible postpone staging (-2) must merge → never raw-servable
-    if (stagedMorEntries(snapshotId, None).nonEmpty) return None
-    // fallback-branch reads compose two tables — DataFrame plan only
-    if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
-      return None
-    val entries = planned.getOrElse(planFiles(snapshotId, filter))
-    // files of another layout need the field-id remap (V1 path); the
-    // native columnar scan reads strictly by current column names
-    if (!currentLayout(entries)) return None
-    if (!isPk) return Some(entries)
-    val ok = mixedLayoutParts(entries).isEmpty &&
-      entries.groupBy(e => (e.partition, e.bucket))
-        .forall { case (_, es) => rawBucket(es) }
-    // every bucket fully merged → rows are final → the full filter (value
-    // conjuncts included) may prune per-file, and so may the file indexes
-    if (!ok) None
-    else if (!isPk) Some(entries)
-    else {
-      val byStats = fullPrune(entries, filter)
-      Some(filter match {
-        case Some(c) if fileIndexSpecs.nonEmpty =>
-          FileIndexes.pruneAndSelect(this, byStats,
-            StatsPrune.resolve(spark, fileSchema, c))._1
-        case _ => byStats
-      })
+  /** How a read of one snapshot serves its rows, decided once for every
+    * caller: the library read, the connector's scan builder (plain, variant
+    * and aggregate pushdown), compaction, the latest-full stream and the
+    * global index (paimon's SnapshotReaderImpl marks each split
+    * rawConvertible in the same single pass). One snapshot, and one
+    * planFiles, dvFor, patchesFor and stagedMorEntries each. A `batch` read
+    * keeps only the files created at or after
+    * `scan.file-creation-time-millis` (paimon FROM_FILE_CREATION_TIME,
+    * batch form; creation time comes from the manifest); compaction, index
+    * builds and streams plan every live file. */
+  private[graft] def readPlan(snapshotId: Option[Long] = None,
+                              filter: Option[Column] = None,
+                              batch: Boolean = false): ReadPlan = {
+    val snap = snapshotId.orElse(sm.latestSnapshotId)
+    val patches = if (isRowTracking) patchesFor(snap) else Nil
+    // postpone.merge-on-read: committed -2 staging joins the merge set
+    // instead of waiting for compaction (reference POSTPONE_MERGE_ON_READ)
+    val staged = if (isPk) stagedMorEntries(snap, filter) else Nil
+    val live = planFiles(snap, filter)
+    val entries = config.options.get("scan.file-creation-time-millis") match {
+      case Some(cutoff) if batch => live.filter(entryCreationTime(_) >= cutoff.toLong)
+      case _ => live
+    }
+    val dv = dvFor(snap)
+    // files of another layout need the field-id remap (relational read);
+    // the native scans read strictly by current column names
+    val layout = currentLayout(entries)
+    // mixed routing layouts: a pk may span buckets — only the global merge
+    // joins its versions again
+    val mixed = mixedLayoutParts(entries).nonEmpty
+    val fallback = sm.branch.isEmpty && config.options.contains("scan.fallback-branch")
+    val allFinal = patches.isEmpty && staged.isEmpty && !fallback && layout &&
+      (!isPk || !mixed && entries.groupBy(e => (e.partition, e.bucket)).values.forall(rawBucket))
+    if (allFinal) {
+      // rows are final → the full filter (value conjuncts included) prunes
+      // per file, and so do the file indexes, whose exact row selections
+      // join the deletion vectors (planFiles already pruned append tables
+      // with the full filter)
+      val (kept, skips) = filter match {
+        case Some(c) if isPk || fileIndexSpecs.nonEmpty =>
+          val byStats = if (isPk) fullPrune(entries, filter) else entries
+          val (k, sels) = FileIndexes.pruneAndSelect(this, byStats,
+            StatsPrune.resolve(spark, fileSchema, c))
+          (k, FileIndexes.mergeSkips(k, sels, dv))
+        case _ => (entries, dv)
+      }
+      ReadPlan.Raw(kept, skips)
+    } else mergeRefusal(patches, staged)
+        .orElse(if (!layout) Some("schema-evolution") else None)
+        .orElse(if (mixed) Some("mixed-layouts") else None) match {
+      case Some(reason) => ReadPlan.Relational(reason)(entries, staged, dv)
+      case None => ReadPlan.InScan(entries, dv)
     }
   }
 
@@ -2555,6 +2537,34 @@ class GraftTable private (
     }
     out.toSeq
   }
+}
+
+/** How one read serves its rows, decided once by [[GraftTable.readPlan]]. */
+sealed trait ReadPlan {
+  /** The planned data files. */
+  def entries: Seq[ManifestEntry]
+}
+
+object ReadPlan {
+  /** Every bucket is final (compaction output, or one deduplicate level-0
+    * file, no tombstones): rows read as stored, with `skips` — deletion
+    * vectors merged with exact file-index row selections — applied in the
+    * reader. */
+  final case class Raw(entries: Seq[ManifestEntry],
+                       skips: Map[String, Array[Byte]]) extends ReadPlan
+
+  /** The merge runs inside [[graft.dsv2.GraftMorScan]], one task per
+    * (partition, bucket), with deletion vectors `dv` applied per file. */
+  final case class InScan(entries: Seq[ManifestEntry],
+                          dv: Map[String, Array[Byte]]) extends ReadPlan
+
+  /** The relational MergeEngines plan serves the read; `reason` says why
+    * the scan cannot (compaction logs it). Equality and matching see the
+    * reason only; the second list carries what the relational read needs:
+    * the planned files, visible postpone staging and deletion vectors. */
+  final case class Relational(reason: String)(
+      val entries: Seq[ManifestEntry], val staged: Seq[ManifestEntry],
+      val dv: Map[String, Array[Byte]]) extends ReadPlan
 }
 
 object GraftTable {

@@ -289,12 +289,7 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
 
   override def planInputPartitions(): Array[InputPartition] = {
     if (entries.isEmpty) return Array.empty
-    val locRoot = new Path(t.location)
-    def toFile(e: ManifestEntry): PartitionedFile = {
-      val abs = new Path(locRoot, e.path)
-      PartitionedFile(InternalRow.empty, SparkPath.fromPath(abs), 0L,
-        e.fileSize, Array.empty[String], 0L, e.fileSize, Map.empty)
-    }
+    val toFile = GraftBatchScan.partitionedFile(new Path(t.location)) _
     // Bin-pack small files of the SAME key group ((partition, bucket) — the
     // reported KeyGroupedPartitioning unit) into shared input partitions up
     // to files.maxPartitionBytes (+ per-file openCostInBytes), like Spark's
@@ -416,6 +411,12 @@ class GraftScanMetric(n: String, d: String)
 }
 
 object GraftBatchScan {
+  /** A manifest entry as one whole-file split under the table root: size
+    * from the manifest, no filesystem call. */
+  private[dsv2] def partitionedFile(root: Path)(e: ManifestEntry): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(root, e.path)), 0L,
+      e.fileSize, Array.empty[String], 0L, e.fileSize, Map.empty)
+
   /** Clustering transforms of a table's fixed layout (partition identity
     * columns + the bucket transform) — the KeyGroupedPartitioning shape
     * both the batch scan and the merge-in-scan report. */

@@ -340,6 +340,10 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
 
   private val planSnap = planSnapshot.orElse(snapshotId)
   private var pushed: Array[Filter] = Array.empty
+  // the read plan for the pushed filters, made once: Spark pushes filters
+  // before it offers an aggregate or builds, and both see this plan
+  private lazy val plan: ReadPlan = t.readPlan(planSnap,
+    pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _), batch = true)
   // the pushed filters when this builder claimed them (a key-pinned read)
   private var exact: Option[ExactFilter] = None
   private var required: Option[StructType] = None
@@ -379,10 +383,6 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
       extractions: Array[org.apache.spark.sql.connector.read.VariantExtraction])
       : Array[Boolean] = {
     import org.apache.spark.sql.execution.datasources.VariantMetadata
-    if (sys.env.contains("GRAFT_DEBUG_VARIANT_OFFERS"))
-      println(s"[voffer] n=${extractions.length} " + extractions.map(e =>
-        s"${e.columnName().mkString(".")}:${VariantMetadata.fromMetadata(e.metadata()).path}:${e.expectedDataType().simpleString}")
-        .mkString(" | "))
     def reject: Array[Boolean] = {
       variantOfferRejected = true
       Array.fill(extractions.length)(false)
@@ -514,7 +514,11 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     // partition values travel as strings; statValue must round-trip the type
     if (!groupCols.forall(c => schema.fields.find(_.name == c).exists(f =>
         GraftBatchScan.partitionValueTypes(f.dataType)))) return None
-    val allEntries = t.rawPlan(snapshotId, None).getOrElse(return None)
+    // manifest row counts are exact only for final, vector-free files
+    val allEntries = plan match {
+      case ReadPlan.Raw(entries, skips) if skips.isEmpty => entries
+      case _ => return None
+    }
 
     def fold(entries: Seq[ManifestEntry], name: String, wantMax: Boolean): Option[Any] = {
       val dt = schema.fields.find(_.name == name).map(_.dataType).getOrElse(return None)
@@ -673,18 +677,14 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     // zero-copy vector view over the decoded shred columns; merge-needing
     // PK tables and non-parquet formats use the V1 scan's merged view.
     if (pushedVariantCols.nonEmpty) {
-      val pruneCond0 = pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _)
-      if (t.fileFormat == "parquet")
-        t.rawPlan(planSnap, pruneCond0, allowDv = true) match {
-          case Some(entries) =>
-            val dvm = t.skipMapFor(entries, pruneCond0, planSnap)
-            return new GraftVariantBatchScan(t, entries, pushed,
-              pushedVariantCols, readOptions, dvm)
-          case None => ()
-        }
+      if (t.fileFormat == "parquet") plan match {
+        case ReadPlan.Raw(entries, skips) =>
+          return new GraftVariantBatchScan(t, entries, pushed,
+            pushedVariantCols, readOptions, skips)
+        case _ =>
+      }
       return new GraftVariantScan(t, snapshotId, pushed, pushedVariantCols)
     }
-    val pruneCond = pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _)
     // requested metadata columns (__graft_file_path & co) are served by the
     // library's readWithMetadata plan — they ride the file-source relation,
     // which the native columnar scan's raw splits do not expose
@@ -702,21 +702,16 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
     // V1 DataFrame plan — the native scan wraps Spark's parquet factory
     if (t.fileFormat != "parquet")
       return new GraftV1Scan(t, snapshotId, pushed, required, limit, readOptions)
-    // native columnar scan when no merge work is needed (the common case
-    // after compaction); deletion vectors apply inside its reader factory.
-    // V1 DataFrame plan otherwise (shared merge semantics). The files are
-    // planned once, against one snapshot.
-    val planned = t.planFiles(planSnap, pruneCond)
-    t.rawPlan(planSnap, pruneCond, allowDv = true, Some(planned)) match {
-      case Some(entries0) =>
-        // deletion vectors merged with file-index row selections (raw rows
-        // are final, so exact bitmap/bsi selections skip inside the reader)
-        val dv = t.skipMapFor(entries0, pruneCond, planSnap)
+    plan match {
+      case ReadPlan.Raw(entries0, skips) =>
+        // native columnar scan when no merge work is needed (the common
+        // case after compaction); deletion vectors and file-index row
+        // selections apply inside its reader factory
         var entries = entries0
         // file-truncation pruning trusts manifest row counts, which OVERCOUNT
-        // rows of DV-carrying files — a LIMIT/TopN could come up short. Both
-        // prunes stay off while vectors are outstanding.
-        if (dv.isEmpty) {
+        // rows of files with skips — a LIMIT/TopN could come up short. Both
+        // prunes stay off while any are outstanding.
+        if (skips.isEmpty) {
           topN.foreach { case (o, k) =>
             entries = GraftScanBuilder.topNPrune(entries, t.schema.sparkSchema, o, k)
           }
@@ -729,19 +724,16 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
             }
           }
         }
-        val scan = new GraftBatchScan(t, entries, pushed, required, readOptions, dv, exact)
+        val scan = new GraftBatchScan(t, entries, pushed, required, readOptions, skips, exact)
         scan.planSkippedFiles = t.liveFileCount(planSnap) - entries.size
         localIfSmall(scan)
-      case None =>
+      case ReadPlan.InScan(entries, dv) =>
         // merge-in-scan for deduplicate/first-row PK tables: one task per
         // (partition, bucket) key group, zero exchanges (GraftMorScan)
-        t.morPlan(planSnap, pruneCond, Some(planned)) match {
-          case Right(morEntries) =>
-            localIfSmall(new GraftMorScan(t, morEntries, pushed, required,
-              t.dvFor(planSnap), readOptions, exact))
-          case Left(_) =>
-            new GraftV1Scan(t, snapshotId, pushed, required, limit, readOptions)
-        }
+        localIfSmall(new GraftMorScan(t, entries, pushed, required, dv, readOptions, exact))
+      case _: ReadPlan.Relational =>
+        new GraftV1Scan(t, snapshotId, pushed, required, limit, readOptions,
+          bounce = false)
     }
   }
 
@@ -762,6 +754,16 @@ object GraftScanBuilder {
     * never claim filters, and their snapshot is theirs to resolve. */
   private[dsv2] val NonBatchOptions = Seq("scan.mode", "incremental-between",
     "incremental-between-timestamp", "incremental-to-auto-tag", "read-changelog")
+
+  /** The columns of `required` with their whole stored types: a scan that
+    * reads through a DataFrame selects top-level columns only, so a struct
+    * Spark pruned to some fields is read whole and Spark extracts the
+    * fields above the scan. Metadata columns keep the asked type. */
+  private[dsv2] def wholeColumns(t: GraftTable, required: Option[StructType]): StructType = {
+    val all = t.schema.sparkSchema
+    required.fold(all)(rs => StructType(rs.fields.map(f =>
+      all.find(_.name == f.name).getOrElse(f))))
+  }
 
   import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder => V2SortOrder}
 
@@ -848,32 +850,41 @@ object GraftScanBuilder {
   }
 }
 
-/** Incremental (from, to] snapshot-range read through the V1 fallback. */
-class GraftIncrementalScan(t: GraftTable, from: Long, to: Long,
-                           required: Option[StructType],
-                           mode: String = "delta") extends V1Scan {
-  override def readSchema(): StructType =
-    required.getOrElse(t.schema.sparkSchema)
+/** A V1-fallback scan whose rows are a DataFrame built when Spark scans:
+  * the relation shell every DataFrame-backed scan here hands Spark. */
+trait DataFrameV1Scan extends V1Scan {
+  /** The scan's rows, in [[readSchema]]. */
+  protected def rows(): DataFrame
+
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T = {
     val rel = new BaseRelation with TableScan {
       override def sqlContext: SQLContext = context
       override def schema: StructType = readSchema()
-      override def buildScan(): RDD[Row] = {
-        var df = mode match {
-          case "diff" => t.incrementalDiff(from, to)
-          // changelog scan mode = every change row from stored changelog
-          // files; batch rows carry no kind column (paimon parity — use
-          // audit_log / read-changelog streams for kinds)
-          case "changelog" if t.isPk && from < to =>
-            t.changelog(from, to).drop("_row_kind")
-          case _ => t.incremental(from, to)
-        }
-        required.foreach(rs => df = df.select(rs.fieldNames.map(col).toIndexedSeq: _*))
-        df.rdd
-      }
+      override def buildScan(): RDD[Row] = rows().rdd
+      // EXPLAIN prints the relation: name the scan behind it
+      override def toString: String = description()
     }
     rel.asInstanceOf[T]
+  }
+}
+
+/** Incremental (from, to] snapshot-range read through the V1 fallback. */
+class GraftIncrementalScan(t: GraftTable, from: Long, to: Long,
+                           required: Option[StructType],
+                           mode: String = "delta") extends DataFrameV1Scan {
+  override def readSchema(): StructType = GraftScanBuilder.wholeColumns(t, required)
+  override protected def rows(): DataFrame = {
+    val df = mode match {
+      case "diff" => t.incrementalDiff(from, to)
+      // changelog scan mode = every change row from stored changelog
+      // files; batch rows carry no kind column (paimon parity — use
+      // audit_log / read-changelog streams for kinds)
+      case "changelog" if t.isPk && from < to =>
+        t.changelog(from, to).drop("_row_kind")
+      case _ => t.incremental(from, to)
+    }
+    required.fold(df)(rs => df.select(rs.fieldNames.map(col).toIndexedSeq: _*))
   }
   override def description(): String = s"GraftIncrementalScan($from,$to,$mode)"
 }
@@ -882,37 +893,28 @@ class GraftIncrementalScan(t: GraftTable, from: Long, to: Long,
  * Scan via the public V1 fallback: Spark materializes the relation through
  * `buildScan`, which reuses the engine's merged DataFrame plan (raw path
  * when compacted, window-merge otherwise) — identical semantics to the
- * library API. Streaming: micro-batches over the snapshot log.
+ * library API. `bounce = false` for a plan the builder found
+ * [[ReadPlan.Relational]]: the library read must not send it back to the
+ * connector. Streaming: micro-batches over the snapshot log.
  */
 class GraftV1Scan(t: GraftTable, snapshotId: Option[Long],
                   filters: Array[Filter], required: Option[StructType],
                   limit: Option[Int],
                   readOptions: Map[String, String] = Map.empty,
-                  withMeta: Boolean = false) extends V1Scan {
+                  withMeta: Boolean = false,
+                  bounce: Boolean = true) extends DataFrameV1Scan {
 
-  override def readSchema(): StructType =
-    required.getOrElse(t.schema.sparkSchema)
+  override def readSchema(): StructType = GraftScanBuilder.wholeColumns(t, required)
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val rel = new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = readSchema()
-      override def buildScan(): RDD[Row] = {
-        val pruneCond = filters.flatMap(GraftScanBuilder.toColumn)
-          .reduceOption(_ && _)
-        var df =
-          if (withMeta)
-            pruneCond.foldLeft(t.readWithMetadata(snapshotId, readOptions))(_ filter _)
-          else t.read(pruneCond, snapshotId, readOptions)
-        required.foreach { rs =>
-          df = df.select(rs.fieldNames.map(col).toIndexedSeq: _*)
-        }
-        limit.foreach { l => df = df.limit(l) }
-        df.rdd
-      }
-    }
-    rel.asInstanceOf[T]
+  override protected def rows(): DataFrame = {
+    val pruneCond = filters.flatMap(GraftScanBuilder.toColumn)
+      .reduceOption(_ && _)
+    val df =
+      if (withMeta)
+        pruneCond.foldLeft(t.readWithMetadata(snapshotId, readOptions))(_ filter _)
+      else t.read(pruneCond, snapshotId, readOptions, bounce)
+    val projected = required.fold(df)(rs => df.select(rs.fieldNames.map(col).toIndexedSeq: _*))
+    limit.fold(projected)(projected.limit)
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -938,7 +940,7 @@ class GraftVariantScan(t: GraftTable, snapshotId: Option[Long],
                        filters: Array[Filter],
                        variantCols: Map[String, Seq[(org.apache.spark.sql.types.StructField, String)]],
                        extraPrune: Option[Column] = None)
-    extends V1Scan with GraftVariantPrunable {
+    extends DataFrameV1Scan with GraftVariantPrunable {
 
   override def variantColsMap
       : Map[String, Seq[(org.apache.spark.sql.types.StructField, String)]] =
@@ -959,28 +961,20 @@ class GraftVariantScan(t: GraftTable, snapshotId: Option[Long],
         .getOrElse(f)
     })
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val rel = new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = readSchema()
-      override def buildScan(): RDD[Row] = {
-        val pruneCond = (filters.flatMap(GraftScanBuilder.toColumn) ++ extraPrune)
-          .reduceOption(_ && _)
-        val base = t.readWithShreds(pruneCond, snapshotId)
-        val cols = t.schema.sparkSchema.fields.map { f =>
-          variantCols.get(f.name) match {
-            case Some(fs) =>
-              org.apache.spark.sql.functions.struct(fs.map {
-                case (sf, src) => col(src).as(sf.name)
-              }.toIndexedSeq: _*).as(f.name)
-            case None => col(f.name)
-          }
-        }
-        base.select(cols.toIndexedSeq: _*).rdd
+  override protected def rows(): DataFrame = {
+    val pruneCond = (filters.flatMap(GraftScanBuilder.toColumn) ++ extraPrune)
+      .reduceOption(_ && _)
+    val base = t.readWithShreds(pruneCond, snapshotId)
+    val cols = t.schema.sparkSchema.fields.map { f =>
+      variantCols.get(f.name) match {
+        case Some(fs) =>
+          org.apache.spark.sql.functions.struct(fs.map {
+            case (sf, src) => col(src).as(sf.name)
+          }.toIndexedSeq: _*).as(f.name)
+        case None => col(f.name)
       }
     }
-    rel.asInstanceOf[T]
+    base.select(cols.toIndexedSeq: _*)
   }
 
   override def description(): String =
@@ -998,17 +992,9 @@ class GraftDataFrameTable(tableName: String, df: DataFrame)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new V1Scan {
+    () => new DataFrameV1Scan {
       override def readSchema(): StructType = df.schema
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T = {
-        val rel = new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = df.schema
-          override def buildScan(): RDD[Row] = df.rdd
-        }
-        rel.asInstanceOf[T]
-      }
+      override protected def rows(): DataFrame = df
     }
 }
 
@@ -1027,17 +1013,9 @@ class GraftBinlogTable(t: GraftTable,
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val merged = readOptions ++ options.asScala
-    () => new V1Scan {
+    () => new DataFrameV1Scan {
       override def readSchema(): StructType = schema()
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T = {
-        val rel = new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = readSchema()
-          override def buildScan(): RDD[Row] = t.systemTable("binlog").rdd
-        }
-        rel.asInstanceOf[T]
-      }
+      override protected def rows(): DataFrame = t.systemTable("binlog")
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
         new GraftMicroBatchStream(t, checkpointLocation, merged, binlog = true)

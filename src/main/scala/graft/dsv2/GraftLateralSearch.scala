@@ -115,9 +115,7 @@ case class GraftLateralVectorSearchRule(session: SparkSession)
           throw new UnsupportedOperationException(
             "LATERAL graft_vector_search supports only " +
               "SELECT <columns> FROM graft_vector_search(...) " +
-              "[WHERE <searched-table predicate>]" +
-              (if (sys.env.contains("GRAFT_DEBUG_LATERAL"))
-                s"\nright plan:\n${right.plan.treeString}" else ""))
+              "[WHERE <searched-table predicate>]")
         case None => j // subquery shape not settled yet — next pass
       }
   }

@@ -229,6 +229,7 @@ class GraftMicroBatchStream(t: GraftTable, checkpointLocation: String,
     if (s < 0) {
       // latest-full: serve the complete current state
       if (e <= 0) return Array.empty
+      val plan = t.readPlan(Some(e))
       // PK tables must serve the MERGED state — raw live-file emission
       // would leak superseded key versions and delete tombstones as rows
       // (paimon's FullStartingScanner plans merged splits the same way).
@@ -237,17 +238,19 @@ class GraftMicroBatchStream(t: GraftTable, checkpointLocation: String,
       // merging a time-filtered SUBSET of a PK bucket would be wrong in a
       // different way).
       if (s != -4L && t.isPk) {
-        t.morPlanEntries(Some(e), None) match {
-          case Some(es) =>
-            return new GraftMorScan(t, es, Array.empty, Some(dataSchema),
-              t.dvFor(Some(e))).planInputPartitions()
-          case None =>
-            // ineligible (evolved schemas / patches / partial-update or
-            // aggregation engine): raw emission below is the documented
-            // approximation — every input version streams as +I
+        def merged(es: Seq[ManifestEntry], dv: Map[String, Array[Byte]]) =
+          new GraftMorScan(t, es, Array.empty, Some(dataSchema), dv).planInputPartitions()
+        plan match {
+          case ReadPlan.InScan(es, dv) => return merged(es, dv)
+          // final buckets: the scan applies their deletion vectors
+          case ReadPlan.Raw(es, dv) if t.mergeRefusal().isEmpty => return merged(es, dv)
+          case _ =>
+            // ineligible (evolved schemas / partial-update or aggregation
+            // engine): raw emission below is the documented approximation —
+            // every input version streams as +I
         }
       }
-      var entries = t.planFiles(Some(e))
+      var entries = plan.entries
       // FROM_FILE_CREATION_TIME: only files created at/after the cutoff
       if (s == -4L) {
         val cutoff = opt("scan.file-creation-time-millis").get.toLong

@@ -11,7 +11,6 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionRea
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.OptionalLong
@@ -112,12 +111,7 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val locRoot = new Path(t.location)
-    def toFile(e: ManifestEntry): PartitionedFile = {
-      val abs = new Path(locRoot, e.path)
-      PartitionedFile(InternalRow.empty, SparkPath.fromPath(abs), 0L,
-        e.fileSize, Array.empty[String], 0L, e.fileSize, Map.empty)
-    }
+    val toFile = GraftBatchScan.partitionedFile(new Path(t.location)) _
     groupedPartitions.map { case (files, raw, _) =>
       val fps = files.map(e =>
         dv.get(GraftTable.dvKey(e.path))
@@ -135,7 +129,7 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
   // keyed aggregation over UNCOMPACTED pk tables), and the k-way merge
   // emits each group PK-sorted, so ordering is reportable whenever every
   // raw group also streams in a proven sorted run (single file or
-  // stats-disjoint bound-ordered concatenation). morPlanEntries already
+  // stats-disjoint bound-ordered concatenation). readPlan already
   // excludes pk-clustering-override tables (clustering-sorted files).
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning = {

@@ -61,6 +61,16 @@ object GlobalIndex {
     specs.map(_.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
       .mkString("/")).mkString(";")
 
+  /** The table's live files when their contents are its rows: a
+    * raw-convertible snapshot (append table or compacted PK table) with no
+    * deletion vectors. */
+  private def finalEntries(t: GraftTable, step: String): Seq[ManifestEntry] =
+    t.readPlan() match {
+      case ReadPlan.Raw(entries, skips) if skips.isEmpty => entries
+      case _ => throw new IllegalStateException(
+        s"global index $step needs a raw-convertible (compacted, DV-free) snapshot")
+    }
+
   /** Build (or replace) the global index for `colName`. One distributed
     * pass: distinct (value, file) pairs + per-pair row count, persisted
     * value-clustered. Requires a raw-convertible snapshot (append table or
@@ -76,9 +86,7 @@ object GlobalIndex {
             partitions: Seq[Map[String, String]] = Nil): GraftTable = {
     import graft.core.RowOps._
     val t = GraftTable.load(spark, tableLoc)
-    val all = t.rawPlan(None, None).getOrElse(throw new IllegalStateException(
-      "global index build needs a raw-convertible (compacted, DV-free) snapshot"))
-    val entries = all.filter(entryCovered(_, partitions))
+    val entries = finalEntries(t, "build").filter(entryCovered(_, partitions))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("value",
         t.fileSchema(colName).dataType),
@@ -125,9 +133,7 @@ object GlobalIndex {
     val cur = t.sm.latestSnapshotId.getOrElse(0L)
     if (cur == at) return GraftTable.load(spark, indexLoc(tableLoc, colName))
     if (!t.sm.snapshotExists(at)) return build(spark, tableLoc, colName, covered)
-    val entries = t.rawPlan(None, None).getOrElse(throw new IllegalStateException(
-      "global index refresh needs a raw-convertible (compacted, DV-free) snapshot"))
-      .filter(entryCovered(_, covered))
+    val entries = finalEntries(t, "refresh").filter(entryCovered(_, covered))
     val oldFiles = t.planFiles(Some(at)).filter(entryCovered(_, covered))
       .map(_.path).toSet
     val nowByPath = entries.map(e => e.path -> e).toMap

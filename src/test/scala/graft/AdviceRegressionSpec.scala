@@ -248,7 +248,7 @@ class AdviceRegressionSpec extends SparkTestBase {
     assert(t.planFiles(None, Some(col("k") === 999L)).isEmpty)
     // after compaction the bucket is fully merged → full filter prunes raw
     t.compact()
-    assert(t.rawPlan(None, Some(col("f") === 5L)).exists(_.isEmpty))
+    assert(ReadPlans.rawEntries(t.readPlan(None, Some(col("f") === 5L))).exists(_.isEmpty))
     assert(t.read(Some(col("f") === 10L)).filter(col("f") === 10L).count() == 1)
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.{SparkJobs, SparkTestBase}
+import graft.{ReadPlans, SparkJobs, SparkTestBase}
 import graft.core.RowOps._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -137,7 +137,7 @@ class CompactionInScanSpec extends SparkTestBase {
     t.write(rows(0 until 200, 1L, "a"))
     t.write(rows(0 until 100, 2L, "b"))   // same ts, larger flag: wins
     t.write(rows(50 until 150, 0L, "c"))  // smaller flag: loses
-    assert(t.morPlan().isRight)
+    assert(ReadPlans.inScan(t.readPlan()))
     compareWithOracle(loc)(_.compact())
     val t1 = GraftTable.load(spark, loc)
     val s1 = t1.sm.latestSnapshotId.get
@@ -182,7 +182,7 @@ class CompactionInScanSpec extends SparkTestBase {
     val t4 = GraftTable.load(spark, loc)
     val live = t4.allLiveEntries()
     replaceEntries(t4, live, live.map(e => copyFile(t4, e, "l2").copy(schemaId = cur.id + 1)))
-    assert(GraftTable.load(spark, loc).morPlan().isRight)
+    assert(ReadPlans.inScan(GraftTable.load(spark, loc).readPlan()))
     val jobs = compareWithOracle(loc)(_.compact())
     assert(jobs.shuffleStages == 1 && jobs.shuffleWriteBytes > 0, jobs)
     val after = GraftTable.load(spark, loc)

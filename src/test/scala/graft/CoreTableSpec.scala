@@ -195,7 +195,7 @@ class CoreTableSpec extends SparkTestBase {
     assert(entries.size > 1, s"expected rolled files, got ${entries.size}")
     assert(entries.forall(_.level > 0))
     // rolled outputs are raw-convertible: no merge plan needed
-    assert(t.rawPlan(None, None).isDefined)
+    assert(ReadPlans.rawEntries(t.readPlan()).isDefined)
     // further compaction is a no-op (already compact)
     assert(t.compact().isEmpty)
     val got = t.read()
@@ -1112,7 +1112,7 @@ class CoreTableSpec extends SparkTestBase {
     // UNCOMPACTED read: clustering-sorted files can't serve the pk-ordered
     // in-scan k-way merge — the read must route through the V1 relational
     // merge (not throw) and still answer exactly
-    assert(t.morPlanEntries().isEmpty,
+    assert(ReadPlans.relational(t.readPlan()).contains("pk-clustering-override"),
       "clustering-override tables must not take the in-scan merge")
     assert(t.read().count() == 1000)
     assert(t.read().filter(col("k") === 5L).select("amount").head().getLong(0) == 11L)
@@ -1126,7 +1126,7 @@ class CoreTableSpec extends SparkTestBase {
     // per-file — value-column pruning is only legal there, which is exactly
     // the state clustering override optimizes for
     val all = t2.planFiles(None, None)
-    val pruned = t2.rawPlan(None, Some(col("city") === "city0"))
+    val pruned = ReadPlans.rawEntries(t2.readPlan(None, Some(col("city") === "city0")))
     assert(all.size >= 4, s"expected rolled files, got ${all.size}")
     assert(pruned.isDefined, "compacted table must be raw-convertible")
     assert(pruned.get.size * 2 <= all.size,
@@ -1643,7 +1643,7 @@ class ConcurrencySpec extends SparkTestBase {
     // the branch itself reads un-fused
     assert(GraftTable.load(spark, loc, Some("hist")).read().count() == 4)
     // raw plan refuses: fused reads need the DataFrame path
-    assert(t.rawPlan(None, None).isEmpty)
+    assert(ReadPlans.rawEntries(t.readPlan()).isEmpty)
   }
 
   test("write.merge-schema: new columns evolve in; widening and explicit-cast retype") {

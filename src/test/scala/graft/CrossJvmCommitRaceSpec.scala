@@ -210,7 +210,7 @@ class CrossJvmCommitRaceSpec extends SparkTestBase {
       assert(pb2.exitValue() == 0, scala.io.Source.fromFile(ob).mkString.takeRight(2000))
       // fast paths refuse the mixed state: the global-by-pk merge serves it
       val tMixed = GraftTable.load(spark, loc)
-      assert(tMixed.rawPlan().isEmpty && tMixed.morPlanEntries().isEmpty,
+      assert(ReadPlans.relational(tMixed.readPlan()).isDefined,
         "raw/MOR fast paths must refuse a mixed-layout table")
       // merged-read integrity under REAL interleaving: per round-partition,
       // exactly one row per key (the mixed-layout hazard is a pk living in

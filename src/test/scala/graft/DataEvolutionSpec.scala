@@ -71,7 +71,7 @@ class DataEvolutionSpec extends SparkTestBase {
     // compaction folds patches into the rewrite and clears them
     t.compact()
     assert(t.sm.latestSnapshot.get.patchList.isEmpty)
-    assert(t.rawPlan(None, None).isDefined, "no patches → raw plan again")
+    assert(ReadPlans.rawEntries(t.readPlan()).isDefined, "no patches → raw plan again")
     assert(t.read(Some(col("id") === 1L)).select("score").head().getDouble(0) == 5.0)
     // rollback to the pre-update snapshot clears post-target patches
     t.update(Map("score" -> lit(7.0)), col("id") === 2L)

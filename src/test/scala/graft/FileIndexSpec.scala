@@ -37,7 +37,10 @@ class FileIndexSpec extends SparkTestBase {
     val planned = t.planFiles(None, Some(col("animal") === "ox"))
     assert(planned.size == 1, s"bitmap should skip file1, got ${planned.size}")
     // row skip: the selection keeps 1 of 50 rows; the skip map materializes
-    val skips = t.skipMapFor(planned, Some(col("animal") === "ox"), None)
+    val skips = t.readPlan(None, Some(col("animal") === "ox")) match {
+      case ReadPlan.Raw(entries, skips) if entries == planned => skips
+      case p => fail(s"expected the raw plan of the pruned file: $p")
+    }
     assert(skips.nonEmpty, "expected a row-skip bitmap from the bitmap index")
     val got = t.read(Some(col("animal") === "ox")).filter(col("animal") === "ox")
     assert(got.select("k").as[Long].collect().toSeq == Seq(51L))
@@ -98,7 +101,7 @@ class FileIndexSpec extends SparkTestBase {
     assert(t.planFiles(None, Some(col("k") === 999L)).isEmpty)
     // post-compaction the raw path may use the full filter + index
     t.compact()
-    assert(t.rawPlan(None, Some(col("f") === 5L)).exists(_.isEmpty))
+    assert(ReadPlans.rawEntries(t.readPlan(None, Some(col("f") === 5L))).exists(_.isEmpty))
   }
 
   test("rewrite_file_index procedure rebuilds a dropped index directory") {

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the oracle dump (`Bench`, `Verify`) and four harnesses — sf1+ data
   * generation, core scaling, plan dumps and the end-to-end drive.
   * Per-layer measurement is perfbench's `--trace 1`; a one-off experiment
-  * belongs in `src/test` (like `tools.RaceWriter`), not in `src/main`. */
+  * belongs in `src/test` (like `tools.RaceWriter`), not in `src/main`.
+  * Only these harnesses print or read environment variables. */
 class HarnessSetSpec extends AnyFunSuite {
 
   private val expected = Set("graft.Bench", "graft.Verify",
@@ -31,6 +32,28 @@ class HarnessSetSpec extends AnyFunSuite {
         if (m.group(2) != null) current else None
       } else current
     }.map(pkg + _).toSeq
+  }
+
+  /** Each line of a main source outside the harnesses (`Bench`, `Verify`,
+    * `tools/`) that matches `pattern`, as `path:line: text`. */
+  private def harnessOnly(pattern: scala.util.matching.Regex): Seq[String] = {
+    val root = Paths.get("src", "main", "scala")
+    val harness = Seq("graft/Bench.scala", "graft/Verify.scala", "graft/tools")
+      .map(root.resolve)
+    val files = Files.walk(root)
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !harness.exists(p.startsWith))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      })
+      .toList
+    finally files.close()
+  }
+
+  test("the library reads no environment variable and prints nothing") {
+    // configuration is table options and Spark conf; output is logging
+    val hits = harnessOnly("""\bsys\.env\b|\bSystem\.getenv\b|\bprintln\b""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("src/main defines exactly the known main entry points") {

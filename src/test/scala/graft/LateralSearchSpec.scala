@@ -45,7 +45,7 @@ class LateralSearchSpec extends SparkTestBase {
     // exactly ONE corpus scan: the hit columns ride the top-k heaps — there
     // is no second scan re-attaching columns to the |q|·k hit ids
     val inner = graft.dsv2.GraftLateralVectorSearchExec.lastInnerPlan.get()
-    val scans = "BatchScan|FileScan".r.findAllIn(inner).length
+    val scans = """\b(BatchScan|FileScan)\b""".r.findAllIn(inner).length
     assert(scans == 1, s"expected exactly 1 corpus scan, got $scans:\n$inner")
   }
 
@@ -109,7 +109,7 @@ class LateralSearchSpec extends SparkTestBase {
       val res = spark.sql(sql)
       assert(rowsOf(res) == apiRows) // 5 queries → 3 chunks, identical rows
       val inner = graft.dsv2.GraftLateralVectorSearchExec.lastInnerPlan.get()
-      val scans = "BatchScan|FileScan".r.findAllIn(inner).length
+      val scans = """\b(BatchScan|FileScan)\b""".r.findAllIn(inner).length
       assert(scans == 3, s"expected ceil(5/2)=3 chunked scans, got $scans")
     }
   }

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.{SparkJobs, SparkTestBase}
+import graft.{ReadPlans, SparkJobs, SparkTestBase}
 import graft.core.RowOps._
 import graft.dsv2.{GraftLocalScanExec, GraftLocalScanStrategy, GraftSparkTable}
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -192,7 +192,7 @@ class PointReadSpec extends SparkTestBase {
         all.filter(col("v").startsWith("a")).select("k"))
     }
     (locs :+ string).foreach { loc =>
-      assert(GraftTable.load(spark, loc).morPlan().isRight)
+      assert(ReadPlans.inScan(GraftTable.load(spark, loc).readPlan()))
       val columnar = reads(loc).map(rowsOf)
       withSQLConf("spark.sql.parquet.enableVectorizedReader" -> "false") {
         assert(reads(loc).map(rowsOf) == columnar, loc)
@@ -223,7 +223,7 @@ class PointReadSpec extends SparkTestBase {
     t.write((0 until 20).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
     t.setOption("some.option", "x")
     t.write((0 until 20 by 3).map(i => (i.toLong, s"b$i")).toDF("k", "v"))
-    assert(t.morPlan().isRight, t.morPlan())
+    assert(ReadPlans.inScan(t.readPlan()), t.readPlan())
     Seq(3L, 4L).foreach { key =>
       val r = check(loc, col("k") === key, k0 === key)
       assert(r.local && r.jobs.n == 0, s"k=$key ${r.jobs}\n${r.plan}")
@@ -252,7 +252,7 @@ class PointReadSpec extends SparkTestBase {
     // an added column changes the file layout: the evolution read serves it
     t.addColumns(StructField("w", StringType))
     t.write(Seq((5L, "c5", "w5")).toDF("k", "v", "w"))
-    assert(t.morPlan() == Left("schema-evolution"))
+    assert(ReadPlans.relational(t.readPlan()).contains("schema-evolution"))
     check(loc, col("k") === 5L, k0 === 5L)
   }
 
@@ -271,8 +271,7 @@ class PointReadSpec extends SparkTestBase {
       val t2 = GraftTable.load(spark, loc)
       t2.write(rows(0 until 40 by 3, v))
       // the upserted keys' versions now sit in two buckets of one partition
-      assert(t2.morPlan() == Left("schema-evolution"), t2.morPlan())
-      assert(t2.rawPlan().isEmpty)
+      assert(ReadPlans.relational(t2.readPlan()).contains("schema-evolution"), t2.readPlan())
       val want = rowsOf(oracle(loc))
       assert(want.size == 40 && rowsOf(load(loc)) == want)
       assert(load(loc).count() == 40)
@@ -356,25 +355,80 @@ class PointReadSpec extends SparkTestBase {
       // plan it was bounced from
       assert(r.jobs.n == 0 && r.local, s"k=$key: ${r.jobs}\n${r.plan}")
     }
-    // an unpinned read of the same raw buckets keeps the library's V1 plan
+    // an unpinned read claims nothing: no driver-side scan
     val all = lookup(col("k") >= 1000L)
     assert(all.rows.size == 1 && !all.local, all.plan)
   }
 
-  test("a creation-time cutoff keeps a merge read on the library plan, which applies it") {
-    val loc = tmpLoc("pointread-cutoff")
+  test("a creation-time cutoff serves SQL and library reads alike") {
+    Seq("append" -> TableConfig(), "pk" -> TableConfig(primaryKeys = Seq("k"), numBuckets = 1))
+      .foreach { case (kind, cfg) =>
+        val loc = tmpLoc(s"pointread-cutoff-$kind")
+        val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema, cfg)
+        t.write((0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
+        Thread.sleep(20)
+        val cut = System.currentTimeMillis()
+        Thread.sleep(20)
+        t.write(Seq((3L, "b3"), (20L, "b20")).toDF("k", "v"))
+        t.write(Seq((20L, "c20")).toDF("k", "v"))
+        t.setOption("scan.file-creation-time-millis", cut.toString)
+        def library(c: Option[Column]) =
+          GraftTable.load(spark, loc).read(c).as[(Long, String)].collect().toSet
+        def sql(c: Option[Column]) =
+          c.foldLeft(load(loc))(_ filter _).as[(Long, String)].collect().toSet
+        // only the two files written after the cutoff serve (merged on PK)
+        val after =
+          if (kind == "pk") Set((3L, "b3"), (20L, "c20"))
+          else Set((3L, "b3"), (20L, "b20"), (20L, "c20"))
+        assert(library(None) == after && sql(None) == after, kind)
+        Seq(3L, 5L, 20L).foreach { key =>
+          val c = Some(col("k") === key)
+          assert(library(c) == after.filter(_._1 == key) && sql(c) == after.filter(_._1 == key),
+            s"$kind k=$key")
+        }
+        val counted = load(loc).agg(count(lit(1)))
+        assert(counted.head().getLong(0) == after.size, kind)
+        // append files are final: the count is answered from the manifest
+        if (kind == "append")
+          assert(counted.queryExecution.executedPlan.toString.contains("GraftAggScan"))
+        assert(GraftTable.load(spark, loc).read().count() == after.size, kind)
+        // compaction merges every live file, the pre-cutoff one included
+        GraftTable.load(spark, loc).compact()
+        val compacted = GraftTable.load(spark, loc)
+        assert(compacted.planFiles().forall(e => compacted.entryCreationTime(e) >= cut), kind)
+        val all = if (kind == "pk") 11 else 13
+        assert(library(None).size == all && sql(None).size == all, kind)
+      }
+  }
+
+  test("library and SQL reads of one PK state plan the same scan") {
+    val loc = tmpLoc("pointread-venue")
     val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,
-      TableConfig(primaryKeys = Seq("k"), numBuckets = 1))
-    t.write((0 until 10).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
-    Thread.sleep(20)
-    val cut = System.currentTimeMillis()
-    Thread.sleep(20)
-    t.write(Seq((3L, "b3"), (20L, "b20")).toDF("k", "v"))
-    t.write(Seq((20L, "c20")).toDF("k", "v"))
-    t.setOption("scan.file-creation-time-millis", cut.toString)
-    // only the two files written after the cutoff serve, merged together
-    assert(GraftTable.load(spark, loc).read().as[(Long, String)].collect().toSet ==
-      Set((3L, "b3"), (20L, "c20")))
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 2))
+    t.write((0 until 40).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
+    t.write((0 until 40 by 3).map(i => (i.toLong, s"b$i")).toDF("k", "v"))
+    def scanNodes(df: DataFrame): Seq[String] =
+      plans.collectLeaves(df.queryExecution.executedPlan).map {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.getClass.getSimpleName
+        case leaf => leaf.getClass.getSimpleName
+      }
+    def same(state: String): Unit =
+      Seq(None, Some(col("k") === 6L), Some(col("k").isin(1L, 2L, 3L)),
+          Some(col("v").startsWith("b"))).foreach { c =>
+        val library = GraftTable.load(spark, loc).read(c)
+        val sql = c.foldLeft(load(loc))(_ filter _)
+        assert(scanNodes(library) == scanNodes(sql), s"$state $c")
+        assertSameRows(library, c.foldLeft(oracle(loc))(_ filter _))
+        assertSameRows(sql, c.foldLeft(oracle(loc))(_ filter _))
+      }
+    assert(ReadPlans.inScan(t.readPlan()))
+    same("merge buckets")
+    t.compact()
+    assert(ReadPlans.rawEntries(t.readPlan()).isDefined)
+    same("compacted")
+    t.deleteDv(col("k") === 7L)
+    same("compacted, deletion vector")
   }
 
   test("a full-compaction changelog reads the merged state once") {

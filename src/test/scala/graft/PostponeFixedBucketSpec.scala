@@ -162,7 +162,7 @@ class PostponeFixedBucketSpec extends SparkTestBase {
     assert(got.length == 50, s"duplicate pks across layouts: ${got.length}")
     assert(got.toMap.forall { case (k, v) => v == k + 777.0 })
     // dsv2 fast paths refuse the mixed state too (global merge required)
-    assert(t.rawPlan().isEmpty && t.morPlanEntries().isEmpty)
+    assert(ReadPlans.relational(t.readPlan()).isDefined)
     // the next write keeps the larger layout and a compaction heals it
     t.write(rows(10, bump = 900.0))
     import graft.core.RowOps._

@@ -380,8 +380,7 @@ class ScalePostureSpec extends SparkTestBase {
     assert(compact.shape == (1, 1, 0, 0) && compact.shuffleWriteBytes == 0,
       s"compact: $compact")
     // through the connector, the compacted (raw) bucket serves the lookup
-    // in the driver too (the library read of an all-raw table keeps its
-    // own V1 plan)
+    // in the driver too
     val raw = SparkJobs.during(spark)(assert(spark.read.format("graft").load(loc)
       .filter(col("k") === 7L).as[(Long, String)].collect().toSeq == Seq((7L, "v407"))))
     assert(raw.shape == (0, 0, 0, 0), s"raw lookup: $raw")
@@ -399,6 +398,38 @@ class ScalePostureSpec extends SparkTestBase {
     val jobs = SparkJobs.during(spark)(assert(GraftTable.load(spark, loc)
       .read(Some(col("k") === 7L)).as[(Long, String)].collect().toSeq == Seq((7L, "v7"))))
     assert(jobs.shape == (0, 0, 0, 0), s"raw library lookup: $jobs")
+  }
+
+  test("every library and connector read of a PK table folds the manifests once") {
+    // the venue of a read is decided once, by GraftTable.readPlan: a library
+    // read that goes through the connector plans there and nowhere else
+    import graft.core.{GraftMetrics, GraftTable, TableConfig}
+    import graft.core.RowOps._
+    val loc = tmpLoc("onefold")
+    val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 4))
+    t.write((0 until 400).map(i => (i.toLong, s"v$i")).toDF("k", "v"))
+    t.write((0 until 400 by 5).map(i => (i.toLong, s"w$i")).toDF("k", "v"))
+    def scans(): Double = GraftMetrics.forTable(t.location).rows
+      .collectFirst { case ("totalScans", _, v) => v }.getOrElse(0.0)
+    def folds(read: => Array[_]): Double = {
+      val before = scans()
+      read
+      scans() - before
+    }
+    def library(c: Option[org.apache.spark.sql.Column]) =
+      GraftTable.load(spark, loc).read(c).collect()
+    def connector(c: Option[org.apache.spark.sql.Column]) =
+      c.foldLeft(spark.read.format("graft").load(loc))(_ filter _).collect()
+    val key = Some(col("k") === 5L)
+    assert(folds(library(key)) == 1, "library lookup, merge buckets")
+    assert(folds(library(None)) == 1, "library full read, merge buckets")
+    assert(folds(connector(key)) == 1, "connector lookup, merge buckets")
+    assert(folds(connector(None)) == 1, "connector full read, merge buckets")
+    t.compact()
+    assert(folds(library(key)) == 1, "library lookup, compacted")
+    assert(folds(library(None)) == 1, "library full read, compacted")
+    assert(folds(connector(key)) == 1, "connector lookup, compacted")
   }
 
   test("a 64-file append read lists nothing and plans through the manifest index") {

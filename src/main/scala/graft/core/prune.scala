@@ -359,21 +359,6 @@ object StatsPrune {
     * conjuncts, type coercion casts, or a too-large value cross product). */
   def bucketCandidates(pred: Expression, keyCols: Seq[String],
                        numBuckets: Int, maxCombos: Int = 256): Option[Set[Int]] = {
-    val valueSets = keyLiterals(pred, keyCols).getOrElse(return None)
-    if (valueSets.map(_.size.toLong).product > maxCombos) return None
-    val combos = valueSets.foldLeft(Seq(Seq.empty[Literal])) { (acc, s) =>
-      acc.flatMap(p => s.toSeq.map(p :+ _))
-    }
-    Some(combos.map { lits =>
-      Pmod(new XxHash64(lits.toIndexedSeq), Literal(numBuckets.toLong))
-        .eval(null).asInstanceOf[Long].toInt
-    }.toSet)
-  }
-
-  /** The literal set each of `keyCols` is pinned to by top-level `=`/`IN`
-    * conjuncts of `pred` (literals of the column's own type), in `keyCols`
-    * order; None unless every column is pinned. */
-  def keyLiterals(pred: Expression, keyCols: Seq[String]): Option[Seq[Set[Literal]]] = {
     def conj(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conj(l) ++ conj(r)
       case x => Seq(x)
@@ -394,6 +379,15 @@ object StatsPrune {
           } => add(a.name, vs.map(_.asInstanceOf[Literal]).toSet)
       case _ =>
     }
-    if (keyCols.forall(per.contains)) Some(keyCols.map(per)) else None
+    if (!keyCols.forall(per.contains)) return None
+    val valueSets = keyCols.map(per)
+    if (valueSets.map(_.size.toLong).product > maxCombos) return None
+    val combos = valueSets.foldLeft(Seq(Seq.empty[Literal])) { (acc, s) =>
+      acc.flatMap(p => s.toSeq.map(p :+ _))
+    }
+    Some(combos.map { lits =>
+      Pmod(new XxHash64(lits.toIndexedSeq), Literal(numBuckets.toLong))
+        .eval(null).asInstanceOf[Long].toInt
+    }.toSet)
   }
 }

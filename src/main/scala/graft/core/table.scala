@@ -1462,19 +1462,21 @@ class GraftTable private (
   private[core] def filterCols(c: Column): Set[String] =
     StatsPrune.resolve(spark, fileSchema, c).references.map(_.name).toSet
 
-  /** Position-skip map for a scan of `entries` under `filter`: deletion
-    * vectors `dv` merged with file-index row selections (rows an exact
-    * bitmap/bsi index proves cannot match are skipped in the reader; Spark
-    * still re-applies the filter to the survivors). ONLY valid where rows
-    * are final — append tables and fully-merged (raw) PK buckets; row
-    * skipping on merge-on-read INPUT would unbalance the merge exactly like
-    * value-column file pruning. */
-  private def skipMapFor(entries: Seq[ManifestEntry], filter: Option[Column],
-                         dv: Map[String, Array[Byte]]): Map[String, Array[Byte]] = {
-    if (fileIndexSpecs.isEmpty || filter.isEmpty || entries.isEmpty) return dv
-    val expr = StatsPrune.resolve(spark, fileSchema, filter.get)
-    val (_, sels) = FileIndexes.pruneAndSelect(this, entries, expr)
-    FileIndexes.mergeSkips(entries, sels, dv)
+  /** The `entries` a scan keeps under `filter` after file-index pruning,
+    * with their position-skip map: deletion vectors `dv` merged with
+    * file-index row selections (rows an exact bitmap/bsi index proves cannot
+    * match are skipped in the reader; Spark still re-applies the filter to
+    * the survivors). ONLY valid where rows are final — append tables and
+    * fully-merged (raw) PK buckets; row skipping on merge-on-read INPUT
+    * would unbalance the merge exactly like value-column file pruning. */
+  private def indexPrune(entries: Seq[ManifestEntry], filter: Option[Column],
+                         dv: Map[String, Array[Byte]])
+      : (Seq[ManifestEntry], Map[String, Array[Byte]]) = filter match {
+    case Some(c) if fileIndexSpecs.nonEmpty && entries.nonEmpty =>
+      val (kept, sels) = FileIndexes.pruneAndSelect(this, entries,
+        StatsPrune.resolve(spark, fileSchema, c))
+      (kept, FileIndexes.mergeSkips(kept, sels, dv))
+    case _ => (entries, dv)
   }
 
   private[core] def readEntries(entries: Seq[ManifestEntry], withInternal: Boolean,
@@ -1612,19 +1614,13 @@ class GraftTable private (
   /** Read with per-call options (DSv2 passes the scan's read options here so
     * e.g. `blob-view.resolve.enabled=false` works per query). */
   def read(filter: Option[Column], snapshotId: Option[Long],
-           readOpts: Map[String, String]): DataFrame =
-    read(filter, snapshotId, readOpts, bounce = true)
-
-  /** [[read]]; `bounce = false` keeps a PK read off the connector — the
-    * connector's own V1 scan for a plan it found [[ReadPlan.Relational]]. */
-  private[graft] def read(filter: Option[Column], snapshotId: Option[Long],
-                          readOpts: Map[String, String], bounce: Boolean): DataFrame = {
+           readOpts: Map[String, String]): DataFrame = {
     // fallback branch (paimon scan.fallback-branch / FallbackReadFileStoreTable):
     // partitions missing on the main table serve from the named branch
     val base = config.options.get("scan.fallback-branch") match {
       case Some(fb) if sm.branch.isEmpty && snapshotId.isEmpty =>
         readFallback(fb, filter, readOpts)
-      case _ => readMain(filter, snapshotId, bounce)
+      case _ => readMain(filter, snapshotId)
     }
     resolveBlobRead(base, readOpts, snapshotId)
   }
@@ -1738,7 +1734,7 @@ class GraftTable private (
   private def readFallback(branchName: String, filter: Option[Column],
                            readOpts: Map[String, String]): DataFrame = {
     val fb = GraftTable.load(spark, location, Some(branchName))
-    val mainDf = readMain(filter, None, bounce = false)
+    val mainDf = readMain(filter, None)
     if (config.partitionKeys.isEmpty)
       return if (planFiles(None, None).nonEmpty) mainDf
              else fb.read(filter, None, readOpts)
@@ -1779,18 +1775,17 @@ class GraftTable private (
     * raw columnar scan or the merge inside GraftMorScan with the pushed
     * filters, so a key-pinned read is served in the driver (GraftLocalScan).
     * When the files need the relational merge (evolved layouts, visible
-    * staging) the connector's V1 scan reads back here with `bounce = false`.
+    * staging) the connector reads the plan it made ([[readRelational]]).
     * Branch-pinned handles read here (the path-based connector load reads
     * main), and so does every other table: raw, or the relational merge. */
-  private def readMain(filter: Option[Column], snapshotId0: Option[Long],
-                       bounce: Boolean): DataFrame = {
+  private def readMain(filter: Option[Column], snapshotId0: Option[Long]): DataFrame = {
     // one snapshot for the plan and for the connector bounce: a commit
     // landing in between must not pair one snapshot's files with another's
     // deletion vectors
     val snapshotId = snapshotId0.orElse(sm.latestSnapshotId)
     val patches = if (isRowTracking) patchesFor(snapshotId) else Nil
     if (patches.nonEmpty) return readPatched(filter, snapshotId, patches)
-    if (bounce && sm.branch.isEmpty && mergeRefusal().isEmpty) {
+    if (sm.branch.isEmpty && mergeRefusal().isEmpty) {
       var r = spark.read.format("graft")
       snapshotId.foreach(id => r = r.option("scan.snapshot-id", id.toString))
       // pin the STORED blob form on the bounce: blob resolution belongs
@@ -1810,6 +1805,16 @@ class GraftTable private (
     filter.foldLeft(out)((d, c) => d.filter(c))
   }
 
+  /** The rows of a [[ReadPlan.Relational]] plan that [[readPlan]] made for
+    * `filter` at `snapshotId`: the connector reads the plan it holds, with
+    * no second fold. Column patches and the fallback branch read through
+    * [[read]], whose plans they are. */
+  private[graft] def readRelational(p: ReadPlan.Relational, filter: Option[Column],
+                                    snapshotId: Option[Long],
+                                    readOpts: Map[String, String]): DataFrame =
+    if (p.patches.nonEmpty || readsFallback) read(filter, snapshotId, readOpts)
+    else filter.foldLeft(relationalRead(p.entries, p.staged, p.dv, filter))(_ filter _)
+
   /** The relational read of planned `entries` plus visible postpone
     * `staged` files: append tables read them as stored; PK tables read
     * their final buckets raw and merge the rest through MergeEngines. */
@@ -1817,7 +1822,10 @@ class GraftTable private (
                              dv: Map[String, Array[Byte]],
                              filter: Option[Column]): DataFrame = {
     if (entries.isEmpty && staged.isEmpty) return emptyDf
-    if (!isPk) return readEntries(entries, withInternal = false, skipMapFor(entries, filter, dv))
+    if (!isPk) {
+      val (kept, skips) = indexPrune(entries, filter, dv)
+      return readEntries(kept, withInternal = false, skips)
+    }
     val byBucket = entries.groupBy(e => (e.partition, e.bucket))
     // raw-convertible buckets (see rawBucket): fully-merged compaction
     // output (possibly several size-rolled, key-disjoint files) or a
@@ -1836,7 +1844,8 @@ class GraftTable private (
     // filter (value conjuncts included) prunes them per-file — this is
     // where post-compaction value-filter file skipping happens for PK
     // tables (planFiles itself only pruned on merge-safe columns)
-    val rawEntries = fullPrune(rawB.values.flatten.toSeq, filter)
+    val (rawEntries, rawSkips) = indexPrune(fullPrune(rawB.values.flatten.toSeq, filter),
+      filter, dv)
     val mergeEntries = mergeB.values.flatten.toSeq ++ staged
     // version-pileup estimate: rows per bucket vs the bucket's largest
     // file (a lower bound on distinct keys). High ratio → hash-agg merge
@@ -1849,8 +1858,7 @@ class GraftTable private (
     val parts = Seq(
       if (rawEntries.nonEmpty)
         // raw rows are final → index row-skip applies (merge input: DVs only)
-        Some(readEntries(rawEntries, withInternal = false,
-          skipMapFor(rawEntries, filter, dv)))
+        Some(readEntries(rawEntries, withInternal = false, rawSkips))
       else None,
       if (mergeEntries.nonEmpty)
         Some(MergeEngines.merge(readEntries(mergeEntries, withInternal = true, dv),
@@ -1876,18 +1884,16 @@ class GraftTable private (
     val (hit, miss) = entries.partition(e => patchOverlaps(e, patches))
     val dataCols = dataSchema.fields.map(f => col(f.name)).toIndexedSeq
     val dv = dvFor(snapshotId)
+    val (hitKept, hitSkips) = indexPrune(hit, pruneSafe, dv)
+    val (missKept, missSkips) = indexPrune(miss, pruneSafe, dv)
     val parts = Seq(
-      if (hit.nonEmpty)
-        Some(applyPatches(
-          readEntries(hit, withInternal = true,
-            skipMapFor(hit, pruneSafe, dv)), patches)
+      if (hitKept.nonEmpty)
+        Some(applyPatches(readEntries(hitKept, withInternal = true, hitSkips), patches)
           .select(dataCols: _*))
       else None,
-      if (miss.nonEmpty)
-        Some(readEntries(miss, withInternal = false,
-          skipMapFor(miss, pruneSafe, dv)))
+      if (missKept.nonEmpty) Some(readEntries(missKept, withInternal = false, missSkips))
       else None).flatten
-    val out = parts.reduce(_ unionAll _)
+    val out = if (parts.isEmpty) emptyDf else parts.reduce(_ unionAll _)
     filter.foldLeft(out)((d, c) => d.filter(c))
   }
 
@@ -1948,10 +1954,12 @@ class GraftTable private (
     else if (config.option("pk-clustering-override", "false") == "true")
       Some("pk-clustering-override")
     else if (staged.nonEmpty) Some("postpone-staging")
-    // fallback-branch reads compose two tables
-    else if (sm.branch.isEmpty && config.options.contains("scan.fallback-branch"))
-      Some("fallback-branch")
+    else if (readsFallback) Some("fallback-branch")
     else None
+
+  /** Reads compose this table with its `scan.fallback-branch`. */
+  private def readsFallback: Boolean =
+    sm.branch.isEmpty && config.options.contains("scan.fallback-branch")
 
   /** How a read of one snapshot serves its rows, decided once for every
     * caller: the library read, the connector's scan builder (plain, variant
@@ -1983,27 +1991,20 @@ class GraftTable private (
     // mixed routing layouts: a pk may span buckets — only the global merge
     // joins its versions again
     val mixed = mixedLayoutParts(entries).nonEmpty
-    val fallback = sm.branch.isEmpty && config.options.contains("scan.fallback-branch")
-    val allFinal = patches.isEmpty && staged.isEmpty && !fallback && layout &&
+    val allFinal = patches.isEmpty && staged.isEmpty && !readsFallback && layout &&
       (!isPk || !mixed && entries.groupBy(e => (e.partition, e.bucket)).values.forall(rawBucket))
     if (allFinal) {
       // rows are final → the full filter (value conjuncts included) prunes
       // per file, and so do the file indexes, whose exact row selections
       // join the deletion vectors (planFiles already pruned append tables
       // with the full filter)
-      val (kept, skips) = filter match {
-        case Some(c) if isPk || fileIndexSpecs.nonEmpty =>
-          val byStats = if (isPk) fullPrune(entries, filter) else entries
-          val (k, sels) = FileIndexes.pruneAndSelect(this, byStats,
-            StatsPrune.resolve(spark, fileSchema, c))
-          (k, FileIndexes.mergeSkips(k, sels, dv))
-        case _ => (entries, dv)
-      }
+      val (kept, skips) = indexPrune(if (isPk) fullPrune(entries, filter) else entries,
+        filter, dv)
       ReadPlan.Raw(kept, skips)
     } else mergeRefusal(patches, staged)
         .orElse(if (!layout) Some("schema-evolution") else None)
         .orElse(if (mixed) Some("mixed-layouts") else None) match {
-      case Some(reason) => ReadPlan.Relational(reason)(entries, staged, dv)
+      case Some(reason) => ReadPlan.Relational(reason)(entries, staged, dv, patches)
       case None => ReadPlan.InScan(entries, dv)
     }
   }
@@ -2561,10 +2562,11 @@ object ReadPlan {
   /** The relational MergeEngines plan serves the read; `reason` says why
     * the scan cannot (compaction logs it). Equality and matching see the
     * reason only; the second list carries what the relational read needs:
-    * the planned files, visible postpone staging and deletion vectors. */
+    * the planned files, visible postpone staging, deletion vectors and
+    * outstanding column patches. */
   final case class Relational(reason: String)(
       val entries: Seq[ManifestEntry], val staged: Seq[ManifestEntry],
-      val dv: Map[String, Array[Byte]]) extends ReadPlan
+      val dv: Map[String, Array[Byte]], val patches: Seq[PatchFile]) extends ReadPlan
 }
 
 object GraftTable {

@@ -363,7 +363,7 @@ class GraftBatchScan(t: GraftTable, initial: Seq[ManifestEntry],
     // Claimed (exact) filters need their columns read, then drop them.
     val fileRead = exact.fold(readSchema())(_.widen(readSchema(), t.dataSchema))
     val (pf, dvf) = GraftBatchScan.parquetFactories(t, fileRead, pushed, dv.nonEmpty)
-    GraftReaderFactory(pf, dvf, exact.map(_.rows(fileRead, readSchema())))
+    TaskEndClose(GraftReaderFactory(pf, dvf, exact.map(_.rows(fileRead, readSchema()))))
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -411,6 +411,19 @@ class GraftScanMetric(n: String, d: String)
 }
 
 object GraftBatchScan {
+  /** A new factory over `f`'s broadcast configuration, schemas and filters,
+    * with its own reader callback: a parquet factory's callback closes the
+    * reader it opened last when it opens the next one, so readers open at
+    * once in one task — a merge's files, or two iterators over one
+    * partition as `rdd.zip(rdd.map(…))` (KMeans) makes — each need a copy.
+    * The constructor reads the SQL conf and the parquet options, whose
+    * shipped copies cannot be read on an executor: the running task's conf
+    * serves both (the options are the defaults — see [[parquetFactories]]). */
+  private[dsv2] def fresh(f: ParquetPartitionReaderFactory): ParquetPartitionReaderFactory = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    f.copy(sqlConf = conf, options = new ParquetOptions(Map.empty[String, String], conf))
+  }
+
   /** A manifest entry as one whole-file split under the table root: size
     * from the manifest, no filesystem call. */
   private[dsv2] def partitionedFile(root: Path)(e: ManifestEntry): PartitionedFile =
@@ -569,7 +582,8 @@ case class GraftInputPartition(files: Array[PartitionedFile], key: InternalRow,
   * file no longer de-vectorizes the whole scan (Spark requires every
   * partition of a scan to agree on columnar vs row — now they all say
   * columnar; reference applies DVs per-reader the same way,
-  * deletionvectors/ApplyDeletionVectorReader.java). */
+  * deletionvectors/ApplyDeletionVectorReader.java). Every reader opens
+  * through its own copy of the parquet factory ([[GraftBatchScan.fresh]]). */
 case class GraftReaderFactory(delegate: ParquetPartitionReaderFactory,
                               dvDelegate: ParquetPartitionReaderFactory,
                               exact: Option[ExactRows] = None)
@@ -587,9 +601,9 @@ case class GraftReaderFactory(delegate: ParquetPartitionReaderFactory,
     }
   private def rowReader(p: InputPartition): PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GraftInputPartition]
-    if (gp.dvBytes == null) return delegate.createReader(fp(p))
+    if (gp.dvBytes == null) return GraftBatchScan.fresh(delegate).createReader(fp(p))
     val bm = DvCache.bitmapFp(gp.dvFp, gp.dvBytes) // once per task, cached per executor
-    val inner = dvDelegate.createReader(fp(p))
+    val inner = GraftBatchScan.fresh(dvDelegate).createReader(fp(p))
     new PartitionReader[InternalRow] {
       private var pos = -1L
       private var cur: InternalRow = _
@@ -607,9 +621,9 @@ case class GraftReaderFactory(delegate: ParquetPartitionReaderFactory,
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val gp = p.asInstanceOf[GraftInputPartition]
-    if (gp.dvBytes == null) return delegate.createColumnarReader(fp(p))
+    if (gp.dvBytes == null) return GraftBatchScan.fresh(delegate).createColumnarReader(fp(p))
     val bm = DvCache.bitmapFp(gp.dvFp, gp.dvBytes)
-    val inner = dvDelegate.createColumnarReader(fp(p))
+    val inner = GraftBatchScan.fresh(dvDelegate).createColumnarReader(fp(p))
     new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
       private var pos = 0L // file row position of the next batch's first row
       private var cur: org.apache.spark.sql.vectorized.ColumnarBatch = _
@@ -647,6 +661,31 @@ case class GraftReaderFactory(delegate: ParquetPartitionReaderFactory,
   // satisfying DataSourceV2ScanExecBase.supportsColumnar's agreement rule
   override def supportColumnarReads(p: InputPartition): Boolean =
     exact.isEmpty && delegate.supportColumnarReads(fp(p))
+}
+
+/** Readers that close when the task ends if they are closed unfinished:
+  * Spark's DataSourceRDD closes a task's open reader of an RDD when the task
+  * opens its next one, which in a task iterating one partition twice
+  * (`rdd.zip(rdd.map(…))`, as KMeans does) is the other iterator's. */
+case class TaskEndClose(inner: PartitionReaderFactory) extends PartitionReaderFactory {
+  private class Reader[T](in: PartitionReader[T]) extends PartitionReader[T] {
+    private var exhausted = false
+    override def next(): Boolean = { exhausted = !in.next(); !exhausted }
+    override def get(): T = in.get()
+    override def currentMetricsValues()
+        : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = in.currentMetricsValues()
+    override def close(): Unit = Option(org.apache.spark.TaskContext.get()) match {
+      case Some(tc) if !exhausted && !tc.isCompleted() =>
+        tc.addTaskCompletionListener[Unit](_ => in.close())
+      case _ => in.close()
+    }
+  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new Reader(inner.createReader(p))
+  override def createColumnarReader(p: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new Reader(inner.createColumnarReader(p))
+  override def supportColumnarReads(p: InputPartition): Boolean = inner.supportColumnarReads(p)
 }
 
 /** Column-vector view exposing only SURVIVING row positions of a batch
@@ -759,8 +798,8 @@ class GraftVariantBatchScan(t: GraftTable, entries: Seq[ManifestEntry],
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val (pf, dvf) = GraftBatchScan.parquetFactories(t, physicalSchema, pushedF, dvMap.nonEmpty)
-    GraftVariantReaderFactory(GraftReaderFactory(pf, dvf),
-      physicalSchema, logicalSchema, variantCols)
+    TaskEndClose(GraftVariantReaderFactory(GraftReaderFactory(pf, dvf),
+      physicalSchema, logicalSchema, variantCols))
   }
 
   override def description(): String =
@@ -831,8 +870,8 @@ class GraftMapShredBatchScan(t: GraftTable, entries: Seq[ManifestEntry],
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val (pf, dvf) = GraftBatchScan.parquetFactories(t, physicalSchema, pushedF, dvMap.nonEmpty)
-    GraftVariantReaderFactory(GraftReaderFactory(pf, dvf),
-      physicalSchema, logicalSchema, mapCols)
+    TaskEndClose(GraftVariantReaderFactory(GraftReaderFactory(pf, dvf),
+      physicalSchema, logicalSchema, mapCols))
   }
 
   override def description(): String =

@@ -731,9 +731,9 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
         // merge-in-scan for deduplicate/first-row PK tables: one task per
         // (partition, bucket) key group, zero exchanges (GraftMorScan)
         localIfSmall(new GraftMorScan(t, entries, pushed, required, dv, readOptions, exact))
-      case _: ReadPlan.Relational =>
+      case p: ReadPlan.Relational =>
         new GraftV1Scan(t, snapshotId, pushed, required, limit, readOptions,
-          bounce = false)
+          relational = Some(p))
     }
   }
 
@@ -893,16 +893,16 @@ class GraftIncrementalScan(t: GraftTable, from: Long, to: Long,
  * Scan via the public V1 fallback: Spark materializes the relation through
  * `buildScan`, which reuses the engine's merged DataFrame plan (raw path
  * when compacted, window-merge otherwise) — identical semantics to the
- * library API. `bounce = false` for a plan the builder found
- * [[ReadPlan.Relational]]: the library read must not send it back to the
- * connector. Streaming: micro-batches over the snapshot log.
+ * library API. `relational`: the builder's [[ReadPlan.Relational]] plan for
+ * these filters, read as planned (no second manifest fold). Streaming:
+ * micro-batches over the snapshot log.
  */
 class GraftV1Scan(t: GraftTable, snapshotId: Option[Long],
                   filters: Array[Filter], required: Option[StructType],
                   limit: Option[Int],
                   readOptions: Map[String, String] = Map.empty,
                   withMeta: Boolean = false,
-                  bounce: Boolean = true) extends DataFrameV1Scan {
+                  relational: Option[ReadPlan.Relational] = None) extends DataFrameV1Scan {
 
   override def readSchema(): StructType = GraftScanBuilder.wholeColumns(t, required)
 
@@ -912,7 +912,8 @@ class GraftV1Scan(t: GraftTable, snapshotId: Option[Long],
     val df =
       if (withMeta)
         pruneCond.foldLeft(t.readWithMetadata(snapshotId, readOptions))(_ filter _)
-      else t.read(pruneCond, snapshotId, readOptions, bounce)
+      else relational.fold(t.read(pruneCond, snapshotId, readOptions))(
+        t.readRelational(_, pruneCond, snapshotId, readOptions))
     val projected = required.fold(df)(rs => df.select(rs.fieldNames.map(col).toIndexedSeq: _*))
     limit.fold(projected)(projected.limit)
   }

@@ -6,10 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -163,7 +161,7 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
     // DV files read WITHOUT pushdown (row index = running count); with no
     // vector outstanding it is never used
     val (pf, dvf) = GraftBatchScan.parquetFactories(t, fileRead, safePushed, dv.nonEmpty)
-    GraftMorReaderFactory(pf, dvf,
+    TaskEndClose(GraftMorReaderFactory(pf, dvf,
       pkIdx = t.config.primaryKeys.map(idx).toArray,
       seqIdx = idx(GraftTable.SEQ), seq2Idx = idx(GraftTable.SEQ2),
       commitIdx = idx(GraftTable.COMMIT),
@@ -171,7 +169,7 @@ class GraftMorScan(t: GraftTable, entries: Seq[ManifestEntry],
       outIdx = mergedSchema.fieldNames.map(idx),
       wideTypes = wideTypes, latestFirst = latestFirst,
       keyTest = GraftMorReaderFactory.keyTest(safePushed, wideSchema),
-      exact = exact.map(_.rows(mergedSchema, outSchema)))
+      exact = exact.map(_.rows(mergedSchema, outSchema))))
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -197,16 +195,6 @@ case class GraftMorInputPartition(files: Array[PartitionedFile],
 }
 
 object GraftMorReaderFactory {
-  /** A new factory over `f`'s broadcast configuration, schemas and filters,
-    * with its own reader callback. The constructor reads the SQL conf and
-    * the parquet options, whose shipped copies cannot be read on an
-    * executor: the running task's conf serves both (the options are the
-    * defaults — see GraftBatchScan.parquetFactories). */
-  private[dsv2] def fresh(f: ParquetPartitionReaderFactory): ParquetPartitionReaderFactory = {
-    val conf = SQLConf.get
-    f.copy(sqlConf = conf, options = new ParquetOptions(Map.empty[String, String], conf))
-  }
-
   /** The merge-safe pushed filters that are `=` or `IN` over an integral,
     * date or string column of the wide row, as a row test. Other shapes
     * stay with the post-scan filter only. */
@@ -244,20 +232,12 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
 
   /** One file's rows. Through the columnar reader when it supports the
     * wide schema: rows are views into its batches, never copied; the row
-    * reader otherwise. `isolated` = the reader gets ITS OWN copy of the
-    * factory — required whenever several of a group's readers are open at
-    * once (the k-way merge): a parquet factory's reader callback closes the
-    * reader it opened last when it opens the next one. A copy
-    * ([[GraftMorReaderFactory.fresh]]) shares the broadcast configuration.
-    * The raw streamed
-    * path drains files one at a time and keeps the shared factories
-    * (Spark's own sequential pattern). */
-  private def fileReader(gp: GraftMorInputPartition, i: Int,
-                         isolated: Boolean = false)
-      : PartitionReader[InternalRow] = {
+    * reader otherwise. Each reader opens through its own copy of the
+    * factory ([[GraftBatchScan.fresh]]): the k-way merge holds a group's
+    * readers open at once. */
+  private def fileReader(gp: GraftMorInputPartition, i: Int): PartitionReader[InternalRow] = {
     val fp = FilePartition(0, Array(gp.files(i)))
-    val f0 = if (gp.dvBytes(i) == null) delegate else dvDelegate
-    val f = if (isolated) GraftMorReaderFactory.fresh(f0) else f0
+    val f = GraftBatchScan.fresh(if (gp.dvBytes(i) == null) delegate else dvDelegate)
     val bm =
       if (gp.dvBytes(i) == null) null else DvCache.bitmapFp(gp.dvFps(i), gp.dvBytes(i))
     if (f.supportColumnarReads(fp)) new BatchRows(f.createColumnarReader(fp), bm)
@@ -307,7 +287,7 @@ case class GraftMorReaderFactory(delegate: ParquetPartitionReaderFactory,
         * which is what lets the scan report SupportsReportOrdering. */
       private def merged(): Iterator[InternalRow] = {
         val n = gp.files.length
-        val readers = Array.tabulate(n)(fileReader(gp, _, isolated = true))
+        val readers = Array.tabulate(n)(fileReader(gp, _))
         openReaders = readers
         // one pk projection per reader: a projection's result buffer is
         // stable until ITS next apply, and a reader re-projects only when

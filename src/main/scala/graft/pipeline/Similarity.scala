@@ -182,14 +182,9 @@ object Similarity {
                sampleFraction: Double = 1.0, seed: Long = 42L): IvfModel = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    // cached first: KMeans zips two iterators over one partition of its
-    // input, which a DSv2 scan (every connector read) cannot serve in one
-    // task — the second reader closes the first one's column vectors
     val sample = (if (sampleFraction < 1.0) df.sample(sampleFraction, seed) else df)
       .select(array_to_vector(col(embedCol).cast(ArrayType(DoubleType))).as("features"))
-      .persist()
     val model = new KMeans().setK(nClusters).setSeed(seed).setMaxIter(20).fit(sample)
-    sample.unpersist()
     IvfModel(model.clusterCenters.map(_.toArray))
   }
 

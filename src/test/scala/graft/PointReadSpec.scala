@@ -431,6 +431,26 @@ class PointReadSpec extends SparkTestBase {
     same("compacted, deletion vector")
   }
 
+  test("one task can read a compacted PK table twice, as rdd.zip does") {
+    // KMeans zips its input with a map of itself: both sides open a reader
+    // over the same partition in one task
+    val loc = tmpLoc("pointread-zip")
+    val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,
+      TableConfig(primaryKeys = Seq("k"), numBuckets = 2))
+    t.write((0 until 300).map(i => (i.toLong, s"a$i")).toDF("k", "v"))
+    t.write((0 until 300 by 7).map(i => (i.toLong, s"b$i")).toDF("k", "v"))
+    t.compact()
+    assert(ReadPlans.rawEntries(t.readPlan()).isDefined)
+    Seq("library" -> GraftTable.load(spark, loc).read(), "sql" -> load(loc)).foreach {
+      case (kind, df) =>
+        val rdd = df.rdd.map(r => (r.getLong(0), r.getString(1)))
+        val zipped = rdd.zip(rdd.map(_._1)).collect()
+        assert(zipped.forall { case ((k, _), k2) => k == k2 }, kind)
+        assert(zipped.map(_._1).toSet == rowsOf(oracle(loc)).map(r =>
+          (r(0).asInstanceOf[Long], r(1).asInstanceOf[String])), kind)
+    }
+  }
+
   test("a full-compaction changelog reads the merged state once") {
     val loc = tmpLoc("pointread-fcl")
     val t = GraftTable.create(spark, loc, Seq((0L, "")).toDF("k", "v").schema,

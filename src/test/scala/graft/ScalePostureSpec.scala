@@ -430,6 +430,15 @@ class ScalePostureSpec extends SparkTestBase {
     assert(folds(library(key)) == 1, "library lookup, compacted")
     assert(folds(library(None)) == 1, "library full read, compacted")
     assert(folds(connector(key)) == 1, "connector lookup, compacted")
+    // an added column needs the relational merge: the connector reads the
+    // plan it made instead of planning the read again
+    t.addColumns(org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.StringType))
+    t.write(Seq((5L, "c5", "w5")).toDF("k", "v", "w"))
+    assert(graft.ReadPlans.relational(t.readPlan()).contains("schema-evolution"))
+    assert(folds(library(key)) == 1, "library lookup, evolved")
+    assert(folds(library(None)) == 1, "library full read, evolved")
+    assert(folds(connector(key)) == 1, "connector lookup, evolved")
+    assert(folds(connector(None)) == 1, "connector full read, evolved")
   }
 
   test("a 64-file append read lists nothing and plans through the manifest index") {

@@ -1769,33 +1769,24 @@ class GraftTable private (
       sm.fs.getFileStatus(new Path(location, e.path)).getModificationTime
     }
 
-  /** The snapshot read behind [[read]]. A PK table the in-scan merge can
-    * serve reads through the DSv2 connector, decided on table state alone
-    * (nothing is planned here): the connector's [[readPlan]] then picks the
-    * raw columnar scan or the merge inside GraftMorScan with the pushed
-    * filters, so a key-pinned read is served in the driver (GraftLocalScan).
-    * When the files need the relational merge (evolved layouts, visible
-    * staging) the connector reads the plan it made ([[readRelational]]).
-    * Branch-pinned handles read here (the path-based connector load reads
-    * main), and so does every other table: raw, or the relational merge. */
+  /** The snapshot read behind [[read]], planned once ([[readPlan]]). A PK
+    * table the in-scan merge can serve hands a raw or in-scan plan to the
+    * DSv2 connector (the same scan node a SQL read plans: the raw columnar
+    * scan or the merge inside GraftMorScan, a key-pinned read served in the
+    * driver by GraftLocalScan); every other plan reads here — raw, or the
+    * relational merge. Branch-pinned handles read here too (the connector's
+    * table reads main). */
   private def readMain(filter: Option[Column], snapshotId0: Option[Long]): DataFrame = {
-    // one snapshot for the plan and for the connector bounce: a commit
-    // landing in between must not pair one snapshot's files with another's
-    // deletion vectors
+    // one snapshot for the plan and for the connector: a commit landing in
+    // between must not pair one snapshot's files with another's deletion
+    // vectors
     val snapshotId = snapshotId0.orElse(sm.latestSnapshotId)
     val patches = if (isRowTracking) patchesFor(snapshotId) else Nil
     if (patches.nonEmpty) return readPatched(filter, snapshotId, patches)
-    if (sm.branch.isEmpty && mergeRefusal().isEmpty) {
-      var r = spark.read.format("graft")
-      snapshotId.foreach(id => r = r.option("scan.snapshot-id", id.toString))
-      // pin the STORED blob form on the bounce: blob resolution belongs
-      // to the OUTER read()'s resolveBlobRead wrapper — without the pin
-      // the connector's blob routing would send the scan back to the V1
-      // DataFrame plan, which re-enters this bounce (infinite recursion)
-      GraftTable.STORED_READ_OPTS.foreach { case (k, v) => r = r.option(k, v) }
-      return filter.foldLeft(r.load(location))((d, c) => d.filter(c))
-    }
     val out = readPlan(snapshotId, filter, batch = true) match {
+      case p @ (_: ReadPlan.Raw | _: ReadPlan.InScan)
+          if sm.branch.isEmpty && mergeRefusal().isEmpty =>
+        graft.dsv2.GraftDataSource.planned(this, snapshotId, p)
       case ReadPlan.Raw(entries, skips) =>
         // rows are final → index row-skip applies
         readEntries(entries, withInternal = false, skips)

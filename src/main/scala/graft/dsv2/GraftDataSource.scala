@@ -130,9 +130,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
-    GraftMapShredRule.register(SparkSession.active)
-    GraftVariantPrune.register(SparkSession.active)
-    GraftLocalScanStrategy.register(SparkSession.active)
+    GraftDataSource.registerRules(SparkSession.active)
     val props = properties.asScala.toMap
     missingAtPath(props) match {
       case Some(path) => return new Table {
@@ -161,6 +159,24 @@ class GraftDataSource extends TableProvider with DataSourceRegister
 }
 
 object GraftDataSource {
+  private def registerRules(spark: SparkSession): Unit = {
+    GraftMapShredRule.register(spark)
+    GraftVariantPrune.register(spark)
+    GraftLocalScanStrategy.register(spark)
+  }
+
+  /** `t` at `snapshotId` as a connector relation whose scan builder serves
+    * `plan` — the library read's own [[ReadPlan]], made for a filter the
+    * caller applies on top — instead of planning again. Blob columns read
+    * in their stored form (the library read resolves them above). */
+  private[graft] def planned(t: GraftTable, snapshotId: Option[Long], plan: ReadPlan): DataFrame = {
+    registerRules(t.spark)
+    org.apache.spark.sql.graft.SparkShims.ofRows(t.spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new GraftSparkTable(t, snapshotId, GraftTable.STORED_READ_OPTS, plan = Some(plan)),
+        None, None))
+  }
+
   /** Reference `SparkSource.loadTable` routing (SparkSource.scala:99 in the
     * paimon spark connector; docs/spark/dataframe.md "Query"): when the
     * `catalog` option names a registered catalog, resolve through it —
@@ -204,7 +220,8 @@ object GraftDataSource {
 class GraftSparkTable(val t: GraftTable, val snapshotId: Option[Long] = None,
                       val readOptions: Map[String, String] = Map.empty,
                       val writable: Boolean = true,
-                      val v1PathWrites: Boolean = false)
+                      val v1PathWrites: Boolean = false,
+                      plan: Option[ReadPlan] = None)
     extends Table with SupportsRead with SupportsWrite
     with SupportsMetadataColumns with GraftPartitionManagement {
 
@@ -313,7 +330,7 @@ class GraftSparkTable(val t: GraftTable, val snapshotId: Option[Long] = None,
     // pair one snapshot's files with another's deletion vectors
     val batchRead = !GraftScanBuilder.NonBatchOptions.exists(merged.contains)
     new GraftScanBuilder(t, pinned, merged,
-      if (pinned.isEmpty && batchRead) t.sm.latestSnapshotId else pinned)
+      if (pinned.isEmpty && batchRead) t.sm.latestSnapshotId else pinned, plan)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -329,10 +346,12 @@ class GraftSparkTable(val t: GraftTable, val snapshotId: Option[Long] = None,
   * key-pinned read, which every scan built here applies exactly (see
   * [[pushFilters]]). `snapshotId` = the snapshot the user pinned (time
   * travel); `planSnapshot` = the one native scans plan against (the pinned
-  * one, else the latest, resolved once by the table). */
+  * one, else the latest, resolved once by the table); `planned` = a plan
+  * the library read made for that snapshot. */
 class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
                        readOptions: Map[String, String] = Map.empty,
-                       planSnapshot: Option[Long] = None)
+                       planSnapshot: Option[Long] = None,
+                       planned: Option[ReadPlan] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownTopN with SupportsPushDownAggregates
@@ -342,8 +361,8 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
   private var pushed: Array[Filter] = Array.empty
   // the read plan for the pushed filters, made once: Spark pushes filters
   // before it offers an aggregate or builds, and both see this plan
-  private lazy val plan: ReadPlan = t.readPlan(planSnap,
-    pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _), batch = true)
+  private lazy val plan: ReadPlan = planned.getOrElse(t.readPlan(planSnap,
+    pushed.flatMap(GraftScanBuilder.toColumn).reduceOption(_ && _), batch = true))
   // the pushed filters when this builder claimed them (a key-pinned read)
   private var exact: Option[ExactFilter] = None
   private var required: Option[StructType] = None

@@ -49,6 +49,26 @@ object StatsPrune {
   /** Public ordering-aware stat comparison (used by aggregate pushdown). */
   def compare(dt: DataType, a: String, b: String): Int = cmp(dt, a, b)
 
+  /** Column `name`'s min (or max, `wantMax`) over `entries`, folded from
+    * manifest stats alone: Some(None) when no file holds a non-null value
+    * there, None when some file's stats cannot answer exactly. Stats must
+    * be present, exact (not truncated by metadata.stats-mode), and carry
+    * null bounds only when the file is provably all-null there (nullCount
+    * == rowCount; nulls don't contribute to min/max, so folding the rest
+    * stays exact). A file whose stats were skipped (mode none/counts,
+    * nullCount -1 or < rowCount with null bounds) could hide the true
+    * extreme. */
+  def manifestExtreme(entries: Seq[ManifestEntry], name: String, dt: DataType,
+                      wantMax: Boolean): Option[Option[String]] = {
+    val usable = entries.forall(e => e.stats.get(name).exists(s =>
+      !s.inexact && s.nullCount >= 0 &&
+        ((s.min != null && s.max != null) || s.nullCount == e.rowCount)))
+    if (!usable) None
+    else Some(entries.flatMap(_.stats.get(name))
+      .flatMap(s => Option(if (wantMax) s.max else s.min))
+      .reduceOption((a, b) => if (cmp(dt, a, b) >= 0 == wantMax) a else b))
+  }
+
   private def litStr(l: Literal): Option[String] = Option(l.value).map {
     case d: org.apache.spark.unsafe.types.UTF8String => d.toString
     case v => v.toString

@@ -2354,21 +2354,12 @@ class GraftTable private (
     require(dvFor(snapshotId).isEmpty,
       "aggregate pushdown unavailable while deletion vectors are outstanding")
     val rowCount = entries.map(_.rowCount).sum
-    def fold(colName: String, wantMax: Boolean): Option[String] = {
-      val dt = dataSchema.fields.find(_.name == colName).get.dataType
-      // refuse unusable stats (metadata.stats-mode none/counts/truncated):
-      // null bounds are only foldable when the file is provably all-null
-      require(entries.forall(e => e.stats.get(colName).exists(s =>
-        !s.inexact && s.nullCount >= 0 &&
-          ((s.min != null && s.max != null) || s.nullCount == e.rowCount))),
-        s"min/max pushdown needs exact stats for $colName " +
-          "(degraded by metadata.stats-mode)")
-      val vals = entries.flatMap(_.stats.get(colName))
-        .flatMap(s => Option(if (wantMax) s.max else s.min))
-      if (vals.isEmpty) None
-      else Some(vals.reduce((a, b) =>
-        if (StatsPrune.compare(dt, a, b) >= 0 == wantMax) a else b))
-    }
+    def fold(colName: String, wantMax: Boolean): Option[String] =
+      StatsPrune.manifestExtreme(entries, colName,
+        dataSchema.fields.find(_.name == colName).get.dataType, wantMax)
+        .getOrElse(throw new IllegalArgumentException(
+          s"min/max pushdown needs exact stats for $colName " +
+            "(degraded by metadata.stats-mode)"))
     def litOf(dt: DataType, v: Option[String]): Column = (dt, v) match {
       case (_: TimestampType, Some(s)) => timestamp_micros(lit(s.toLong)).cast(dt)
       case _ => lit(v.orNull).cast(dt)

@@ -427,8 +427,12 @@ object GraftBatchScan {
   /** A manifest entry as one whole-file split under the table root: size
     * from the manifest, no filesystem call. */
   private[dsv2] def partitionedFile(root: Path)(e: ManifestEntry): PartitionedFile =
-    PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(root, e.path)), 0L,
-      e.fileSize, Array.empty[String], 0L, e.fileSize, Map.empty)
+    split(new Path(root, e.path), e.fileSize)
+
+  /** The file at `path`, of `size` bytes, as one whole-file split. */
+  private[dsv2] def split(path: Path, size: Long): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPath(path), 0L, size,
+      Array.empty[String], 0L, size, Map.empty)
 
   /** Clustering transforms of a table's fixed layout (partition identity
     * columns + the bucket transform) — the KeyGroupedPartitioning shape

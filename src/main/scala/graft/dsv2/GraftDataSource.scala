@@ -543,25 +543,8 @@ class GraftScanBuilder(t: GraftTable, snapshotId: Option[Long],
       val dt = schema.fields.find(_.name == name).map(_.dataType).getOrElse(return None)
       if (!org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(dt))
         return None
-      // stats must be usable on EVERY entry: present, exact (not truncated
-      // by metadata.stats-mode), and null min/max only when the file is
-      // provably all-null there (nullCount == rowCount; nulls don't
-      // contribute to min/max, so folding the rest stays exact). A file
-      // whose stats were skipped (mode none/counts, nullCount -1 or
-      // < rowCount with null bounds) could hide the true extreme → refuse.
-      val usable = entries.forall { e =>
-        e.stats.get(name).exists { s =>
-          !s.inexact && s.nullCount >= 0 &&
-            ((s.min != null && s.max != null) || s.nullCount == e.rowCount)
-        }
-      }
-      if (!usable) return None
-      val vals = entries.flatMap(_.stats.get(name))
-        .flatMap(s => Option(if (wantMax) s.max else s.min))
-      val v = if (vals.isEmpty) null
-        else vals.reduce((a, b) =>
-          if (StatsPrune.compare(dt, a, b) >= 0 == wantMax) a else b)
-      Some(if (v == null) null else GraftBatchScan.statValue(dt, v))
+      StatsPrune.manifestExtreme(entries, name, dt, wantMax)
+        .map(_.map(GraftBatchScan.statValue(dt, _)).orNull)
     }
 
     def aggRow(entries: Seq[ManifestEntry])

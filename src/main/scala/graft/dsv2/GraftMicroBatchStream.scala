@@ -2,18 +2,14 @@ package graft.dsv2
 
 import graft.core._
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /**
  * Structured Streaming micro-batch source over the snapshot log — the
@@ -40,9 +36,11 @@ import org.apache.spark.util.SerializableConfiguration
  * (changelog-producer=lookup); delta files of snapshots without changelog
  * are emitted as +I.
  *
- * Delta files are decoded executor-side by a self-contained parquet Group
- * reader (micro-batches are small; the batch path keeps Spark's vectorized
- * reader).
+ * Every partition reads on the executors through the batch scans' own
+ * readers (paimon reads a stream's splits like batch splits): files through
+ * [[GraftBatchScan]]'s vectorized parquet reader, merged full-state key
+ * groups through [[GraftMorScan]]'s — so a stream decodes every column type
+ * a batch read does. Streams need parquet data files.
  */
 class GraftMicroBatchStream(t: GraftTable, checkpointLocation: String,
                             readOptions: Map[String, String] = Map.empty,
@@ -52,14 +50,10 @@ class GraftMicroBatchStream(t: GraftTable, checkpointLocation: String,
     with SupportsTriggerAvailableNow {
 
   if (binlog) require(t.isPk, "binlog requires a primary-keyed table")
+  require(t.fileFormat == "parquet",
+    s"streaming reads need parquet data files; table has file.format=${t.fileFormat}")
 
-  private val conf = new SerializableConfiguration(
-    t.spark.sessionState.newHadoopConf())
-  private val dataSchema = t.schema.sparkSchema
-  private def streamSchema: StructType =
-    if (readChangelog)
-      StructType(dataSchema.fields :+ StructField("_row_kind", StringType, false))
-    else dataSchema
+  private val dataSchema = t.dataSchema
 
   private def opt(key: String): Option[String] =
     readOptions.get(key).orElse(t.config.options.get(key))
@@ -250,91 +244,115 @@ class GraftMicroBatchStream(t: GraftTable, checkpointLocation: String,
             // every input version streams as +I
         }
       }
-      var entries = plan.entries
-      // FROM_FILE_CREATION_TIME: only files created at/after the cutoff
-      if (s == -4L) {
-        val cutoff = opt("scan.file-creation-time-millis").get.toLong
-        // manifest-resident creation time (no per-file driver stats)
-        entries = entries.filter(en => t.entryCreationTime(en) >= cutoff)
+      // FROM_FILE_CREATION_TIME: only files created at/after the cutoff,
+      // by manifest-resident creation time (no per-file driver stats)
+      val entries =
+        if (s != -4L) plan.entries
+        else {
+          val cutoff = opt("scan.file-creation-time-millis").get.toLong
+          plan.entries.filter(t.entryCreationTime(_) >= cutoff)
+        }
+      // final rows: the plan's deletion vectors and file-index skips apply
+      val skips = plan match {
+        case ReadPlan.Raw(_, skips) => skips
+        case _ => Map.empty[String, Array[Byte]]
       }
-      return entries.map(en => GraftFilePartition(
-        new Path(t.location, en.path).toString, "+I"): InputPartition).toArray
+      return new GraftBatchScan(t, entries, Array.empty, None, dv = skips).planInputPartitions()
     }
-    (s + 1 to e).flatMap { id =>
-      if (!t.sm.snapshotExists(id)) Nil
-      else {
-        val snap = t.sm.readSnapshot(id)
-        if (skipKind(snap.kind)) Nil
-        else if (binlog && snap.changelogFiles.nonEmpty)
-          // one partition per SNAPSHOT: -U/+U pairs of a commit pack per
-          // key, so the pack scope must be the commit's whole changelog.
-          // Delta-sized state — bounded by one commit's changes, not the
-          // table (paimon BinlogTable packs per-commit the same way).
-          Seq(GraftBinlogPartition(snap.changelogFiles.map(p =>
-            new Path(t.location, p).toString).toArray): InputPartition)
-        else if (readChangelog && snap.changelogFiles.nonEmpty)
-          snap.changelogFiles.map(p => GraftFilePartition(
-            new Path(t.location, p).toString, null): InputPartition)
-        else snap.deltaManifests.flatMap(t.sm.readManifest)
-          .filter(en => en.kind == 0 && en.bucket != -2) // postpone staging invisible
-          .map(en => GraftFilePartition(
-            new Path(t.location, en.path).toString, "+I"): InputPartition)
-      }
-    }.toArray
+    (s + 1 to e).filter(t.sm.snapshotExists).map(t.sm.readSnapshot)
+      .filterNot(snap => skipKind(snap.kind)).flatMap { snap =>
+        if ((binlog || readChangelog) && snap.changelogFiles.nonEmpty) {
+          val files = changelogSplits(snap)
+          // binlog: one partition per SNAPSHOT — -U/+U pairs of a commit
+          // pack per key, so the pack scope must be the commit's whole
+          // changelog. Delta-sized state — bounded by one commit's changes,
+          // not the table (paimon BinlogTable packs per-commit the same way).
+          if (binlog) Seq(GraftBinlogPartition(GraftInputPartition(files.toArray, InternalRow.empty)))
+          else files.map(f => GraftInputPartition(Array(f), InternalRow.empty))
+        } else {
+          // delta files, planned per snapshot so a later snapshot's rows
+          // come in later partitions (a consumer that dedups a batch by
+          // input position keeps the later version); no deletion vectors —
+          // a later vector rewrites history the stream already served —
+          // and postpone staging is invisible
+          val deltas = snap.deltaManifests.flatMap(t.sm.readManifest)
+            .filter(en => en.kind == 0 && en.bucket != -2)
+          new GraftBatchScan(t, deltas, Array.empty, None).planInputPartitions().toSeq
+        }
+      }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (binlog)
-      new GraftBinlogReaderFactory(dataSchema, t.config.primaryKeys, conf)
-    else {
-      val stream = new GraftStreamReaderFactory(streamSchema, conf)
-      if (!t.isPk) stream
-      else {
-        // PK full-state batches arrive as GraftMorInputPartitions (merged
-        // per bucket); per-snapshot delta batches stay file partitions —
-        // dispatch on the partition type. The MOR factory only needs the
-        // table's schemas, not the planned entries.
-        val mor = new GraftMorScan(t, Nil, Array.empty, Some(dataSchema),
-          Map.empty).createReaderFactory()
-        GraftStreamDispatchFactory(mor, stream,
-          if (readChangelog) Some(dataSchema) else None)
-      }
+  /** A snapshot's changelog files as whole-file splits. The snapshot
+    * records no file sizes, so each file costs one getFileStatus here, on
+    * the driver (as ManifestFileIndex does for entries of unknown size). */
+  private def changelogSplits(snap: SnapshotMeta): Seq[PartitionedFile] =
+    snap.changelogFiles.map { p =>
+      val st = t.sm.fs.getFileStatus(new Path(t.location, p))
+      GraftBatchScan.split(st.getPath, st.getLen)
     }
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val rows = GraftStreamDispatchFactory(t, withKind = readChangelog || binlog)
+    if (binlog) GraftBinlogReaderFactory(rows, dataSchema, t.config.primaryKeys)
+    else rows
+  }
 }
 
-/** Routes MOR (full-state) and plain file partitions of one streaming
-  * batch plan to their readers; under read-changelog the merged rows get
-  * the `+I` kind column appended to match the stream schema. */
-case class GraftStreamDispatchFactory(mor: PartitionReaderFactory,
-                                      stream: PartitionReaderFactory,
-                                      appendKindTo: Option[StructType])
+/** Readers of a stream's partitions, all through the batch scans' own
+  * parquet readers: merged full-state key groups through [[GraftMorScan]]'s
+  * merge reader, files through [[GraftBatchScan]]'s. With `kinds` (the data
+  * column types), each row ends in `_row_kind`: a changelog file's own, and
+  * `+I` for rows that carry none — delta files lack the column and merged
+  * rows never have it. */
+case class GraftStreamDispatchFactory(files: PartitionReaderFactory,
+                                      mor: Option[PartitionReaderFactory],
+                                      kinds: Option[Array[DataType]])
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case m: GraftMorInputPartition =>
-        val inner = mor.createReader(m)
-        appendKindTo match {
-          case None => inner
-          case Some(schema) =>
-            val types = schema.fields.map(_.dataType)
-            new PartitionReader[InternalRow] {
-              override def next(): Boolean = inner.next()
-              override def get(): InternalRow = {
-                val r = inner.get()
-                val arr = new Array[Any](types.length + 1)
-                var i = 0
-                while (i < types.length) {
-                  arr(i) = if (r.isNullAt(i)) null else r.get(i, types(i))
-                  i += 1
-                }
-                arr(types.length) = UTF8String.fromString("+I")
-                new GenericInternalRow(arr)
-              }
-              override def close(): Unit = inner.close()
-            }
-        }
-      case other => stream.createReader(other)
+  private def inner(p: InputPartition): PartitionReaderFactory = p match {
+    case _: GraftMorInputPartition => mor.get
+    case _ => files
+  }
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val in = inner(p).createReader(p)
+    kinds.fold(in) { types =>
+      val plusI = Literal(UTF8String.fromString("+I"), StringType)
+      val kind =
+        if (p.isInstanceOf[GraftMorInputPartition]) plusI
+        else Coalesce(Seq(BoundReference(types.length, StringType, true), plusI))
+      val proj = UnsafeProjection.create(
+        types.indices.map(i => BoundReference(i, types(i), true)) :+ kind)
+      new PartitionReader[InternalRow] {
+        override def next(): Boolean = in.next()
+        override def get(): InternalRow = proj(in.get())
+        override def close(): Unit = in.close()
+      }
     }
+  }
+
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    kinds.isEmpty && inner(p).supportColumnarReads(p)
+
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
+    inner(p).createColumnarReader(p)
+}
+
+object GraftStreamDispatchFactory {
+  /** The readers of `t`'s stream partitions; `withKind`: rows end in
+    * `_row_kind`. Files read every column as nullable, so a file of an
+    * older schema (or a delta file read for `_row_kind`) reads a column it
+    * lacks as null instead of failing the task. */
+  def apply(t: GraftTable, withKind: Boolean): GraftStreamDispatchFactory = {
+    val data = t.dataSchema
+    val read = StructType((if (withKind) data.fields :+ StructField("_row_kind", StringType)
+      else data.fields).map(_.copy(nullable = true)))
+    GraftStreamDispatchFactory(
+      new GraftBatchScan(t, Nil, Array.empty, Some(read)).createReaderFactory(),
+      if (t.isPk) Some(new GraftMorScan(t, Nil, Array.empty, Some(data), Map.empty)
+        .createReaderFactory())
+      else None,
+      if (withKind) Some(data.fields.map(_.dataType)) else None)
+  }
 }
 
 object GraftMicroBatchStream {
@@ -387,8 +405,6 @@ class GraftChainMicroBatchStream(t: GraftTable, checkpointLocation: String,
   private val deltaT = t.onBranch("delta")
   private val delta = new GraftMicroBatchStream(deltaT, checkpointLocation,
     readOptions)
-  private val conf = new SerializableConfiguration(
-    t.spark.sessionState.newHadoopConf())
 
   override def initialOffset(): Offset = GraftOffset(-1L)
 
@@ -447,8 +463,8 @@ class GraftChainMicroBatchStream(t: GraftTable, checkpointLocation: String,
         latestPt.forall(lp => v.exists(_ > lp))
       }
     if (!mergeSnapshot)
-      return (keepSnap ++ deltaEntries).map(en => GraftFilePartition(
-        new Path(t.location, en.path).toString, "+I"): InputPartition).toArray
+      return new GraftBatchScan(t, keepSnap ++ deltaEntries, Array.empty, None)
+        .planInputPartitions()
     // merge mode: one partition per bucket carrying that bucket's snapshot
     // + delta files; the reader folds winners per chain key
     val chainKeys = t.config.primaryKeys.filterNot(_ == ptCol)
@@ -465,19 +481,20 @@ class GraftChainMicroBatchStream(t: GraftTable, checkpointLocation: String,
     // mixed-generation plan) merges as ONE group (correct, undistributed).
     val coLocated = t.fixedBucketKeys.contains(chainKeys) &&
       t.sameRoutingLayout(keepSnap ++ deltaEntries)
+    val toFile = GraftBatchScan.partitionedFile(new Path(t.location)) _
     (keepSnap ++ deltaEntries)
       .groupBy(en => if (coLocated) en.bucket else 0)
       .map { case (_, group) =>
         GraftChainMergePartition(
-          group.map(en => new Path(t.location, en.path).toString).toArray,
+          GraftInputPartition(group.map(toFile).toArray, InternalRow.empty),
           chainKeys.toArray, ptCol, seqField, logicalPt): InputPartition
       }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (mergeSnapshot)
-      new GraftChainMergeReaderFactory(t.schema.sparkSchema, conf)
-    else new GraftStreamReaderFactory(t.schema.sparkSchema, conf)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val rows = GraftStreamDispatchFactory(t, withKind = false)
+    if (mergeSnapshot) GraftChainMergeReaderFactory(rows, t.dataSchema) else rows
+  }
 
   override def commit(end: Offset): Unit = delta.commit(end)
   override def stop(): Unit = ()
@@ -487,39 +504,35 @@ case class GraftOffset(snapshotId: Long) extends Offset {
   override def json(): String = snapshotId.toString
 }
 
-/** `kindFill`: constant for `_row_kind` when the file lacks the column
-  * (delta files read in changelog mode); null = read from file. */
-case class GraftFilePartition(file: String, kindFill: String) extends InputPartition
-
 /** One BUCKET's snapshot + delta files for a merge-mode chain starting
   * batch, plus the chain-merge recipe (key columns, partition column,
   * sequence field, logical output partition). */
-case class GraftChainMergePartition(files: Array[String],
+case class GraftChainMergePartition(files: GraftInputPartition,
                                     chainKeys: Array[String], ptCol: String,
                                     seqField: String, logicalPt: String)
     extends InputPartition
 
-class GraftChainMergeReaderFactory(schema: StructType,
-                                   conf: SerializableConfiguration)
+/** Merge-mode chain partitions fold their files' rows; phase-2 delta files
+  * flow through `rows` as they are. */
+case class GraftChainMergeReaderFactory(rows: PartitionReaderFactory, schema: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      // phase-2 delta files flow through as plain file partitions
-      case fp: GraftFilePartition =>
-        new GraftGroupReader(fp.file, schema, conf, Option(fp.kindFill))
       case mp: GraftChainMergePartition =>
-        new GraftChainMergeReader(mp, schema, conf)
+        new GraftChainMergeReader(mp, schema, rows.createReader(mp.files))
+      case other => rows.createReader(other)
     }
 }
 
 /** Bucket-scoped chain merge for the merge-snapshot starting phase: fold
-  * every row of the bucket's snapshot + delta files down to one winner per
-  * chain key — later partition (string order, the chain rule), then higher
-  * sequence — and surface winners under the LOGICAL partition (the latest
-  * merged partition; reference ChainTableUtils.buildChainSplits). Merge
-  * state is bucket-sized (the LSM merge unit), never the table. */
+  * every row of the bucket's snapshot + delta files (read by `in`) down to
+  * one winner per chain key — later partition (string order, the chain
+  * rule), then higher sequence — and surface winners under the LOGICAL
+  * partition (the latest merged partition; reference
+  * ChainTableUtils.buildChainSplits). Merge state is bucket-sized (the LSM
+  * merge unit), never the table. */
 class GraftChainMergeReader(p: GraftChainMergePartition, schema: StructType,
-                            conf: SerializableConfiguration)
+                            in: PartitionReader[InternalRow])
     extends PartitionReader[InternalRow] {
   private val ptIdx = schema.fieldIndex(p.ptCol)
   private val seqIdx = schema.fieldIndex(p.seqField)
@@ -532,20 +545,16 @@ class GraftChainMergeReader(p: GraftChainMergePartition, schema: StructType,
       case IntegerType => row.getInt(seqIdx).toLong
       case other => row.get(seqIdx, other).toString.toLong
     }
-    p.files.foreach { f =>
-      val r = new GraftGroupReader(f, schema, conf)
-      try {
-        while (r.next()) {
-          val row = r.get()
-          val key: Seq[Any] =
-            keyIdx.toSeq.map(i => row.get(i, schema(i).dataType))
-          val pt = String.valueOf(row.get(ptIdx, schema(ptIdx).dataType))
-          val seq = seqOf(row)
-          val cur = best.get(key)
-          if (cur == null || pt > cur._1 || (pt == cur._1 && seq >= cur._2))
-            best.put(key, (pt, seq, row))
-        }
-      } finally r.close()
+    while (in.next()) {
+      // the reader reuses its row: a kept row must be a copy
+      val row = in.get().copy()
+      val key: Seq[Any] =
+        keyIdx.toSeq.map(i => row.get(i, schema(i).dataType))
+      val pt = String.valueOf(row.get(ptIdx, schema(ptIdx).dataType))
+      val seq = seqOf(row)
+      val cur = best.get(key)
+      if (cur == null || pt > cur._1 || (pt == cur._1 && seq >= cur._2))
+        best.put(key, (pt, seq, row))
     }
     import scala.jdk.CollectionConverters._
     val ptValue = GraftBatchScan.statValue(schema(ptIdx).dataType, p.logicalPt)
@@ -561,90 +570,7 @@ class GraftChainMergeReader(p: GraftChainMergePartition, schema: StructType,
     if (winners.hasNext) { cur = winners.next(); true } else false
   }
   override def get(): InternalRow = cur
-  override def close(): Unit = ()
-}
-
-class GraftStreamReaderFactory(schema: StructType, conf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftFilePartition]
-    new GraftGroupReader(p.file, schema, conf, Option(p.kindFill))
-  }
-}
-
-/** Row-at-a-time parquet reader (Group API) → InternalRow per `schema`;
-  * columns missing in the file (schema evolution) read as null, except
-  * `_row_kind` which takes `kindFill` when provided. */
-class GraftGroupReader(file: String, schema: StructType,
-                       conf: SerializableConfiguration,
-                       kindFill: Option[String] = None)
-    extends PartitionReader[InternalRow] {
-
-  @SuppressWarnings(Array("deprecation"))
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf.value).build()
-  private var current: Group = _
-  private val fillKind = kindFill.map(UTF8String.fromString).orNull
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    val gt = g.getType
-    val values = schema.fields.map { f =>
-      if (!gt.containsField(f.name)) {
-        if (f.name == "_row_kind") fillKind else null
-      } else {
-        val idx = gt.getFieldIndex(f.name)
-        if (g.getFieldRepetitionCount(idx) == 0) null
-        else decode(g, idx, f.dataType)
-      }
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
-
-  private def decode(g: Group, idx: Int, dt: DataType): Any = dt match {
-    case BooleanType => g.getBoolean(idx, 0)
-    case IntegerType | DateType => g.getInteger(idx, 0)
-    case LongType => g.getLong(idx, 0)
-    case FloatType => g.getFloat(idx, 0)
-    case DoubleType => g.getDouble(idx, 0)
-    case StringType => UTF8String.fromBytes(g.getBinary(idx, 0).getBytes)
-    case BinaryType => g.getBinary(idx, 0).getBytes
-    case _: TimestampType | _: TimestampNTZType =>
-      // files are written by Spark with MICROS annotation; normalize others
-      val prim = g.getType.getType(idx).asPrimitiveType()
-      val v = prim.getPrimitiveTypeName match {
-        case PrimitiveTypeName.INT64 => g.getLong(idx, 0)
-        case PrimitiveTypeName.INT96 =>
-          // Spark's default timestamp physical type: 8B nanos-of-day LE +
-          // 4B Julian day — decode straight to micros
-          val b = g.getInt96(idx, 0).getBytes
-          val buf = java.nio.ByteBuffer.wrap(b)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanosOfDay = buf.getLong
-          val julianDay = buf.getInt
-          return (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-        case other => throw new UnsupportedOperationException(s"timestamp as $other")
-      }
-      prim.getLogicalTypeAnnotation match {
-        case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-          ts.getUnit match {
-            case LogicalTypeAnnotation.TimeUnit.MICROS => v
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-            case LogicalTypeAnnotation.TimeUnit.NANOS => v / 1000L
-          }
-        case _ => v
-      }
-    case other =>
-      throw new UnsupportedOperationException(s"streaming read of type $other")
-  }
-
-  override def close(): Unit = reader.close()
+  override def close(): Unit = in.close()
 }
 
 /** Binlog form of a table (paimon table/system/BinlogTable.java:56): key
@@ -661,19 +587,21 @@ object GraftBinlog {
 }
 
 /** One snapshot's changelog files, packed per key by the reader. */
-case class GraftBinlogPartition(files: Array[String]) extends InputPartition
+case class GraftBinlogPartition(files: GraftInputPartition) extends InputPartition
 
-class GraftBinlogReaderFactory(dataSchema: StructType, pks: Seq[String],
-                               conf: SerializableConfiguration)
+/** Binlog rows from `rows`, which end in `_row_kind`: a snapshot's
+  * changelog packs per key; every other partition (a full-state batch or a
+  * snapshot without changelog files) packs row by row as +I with
+  * single-element value arrays — stateless, no per-key hash needed. */
+case class GraftBinlogReaderFactory(rows: PartitionReaderFactory, dataSchema: StructType,
+                                    pks: Seq[String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case GraftBinlogPartition(files) =>
-        new GraftBinlogPackReader(files, dataSchema, pks, conf)
-      case p: GraftFilePartition =>
-        // full-state / no-changelog delta file: every row packs as +I with
-        // single-element value arrays — stateless, no per-key hash needed
-        new GraftBinlogInsertReader(p.file, dataSchema, pks, conf)
+        new GraftBinlogPackReader(rows.createReader(files), dataSchema, pks)
+      case other =>
+        new GraftBinlogInsertReader(rows.createReader(other), dataSchema, pks)
     }
 }
 
@@ -709,30 +637,24 @@ private object BinlogPack {
 
 /** Packs ONE commit's changelog rows (-U/+U/+I/-D) into binlog rows. The
   * per-key state is bounded by a single commit's delta. */
-class GraftBinlogPackReader(files: Array[String], dataSchema: StructType,
-                            pks: Seq[String], conf: SerializableConfiguration)
+class GraftBinlogPackReader(in: PartitionReader[InternalRow], dataSchema: StructType,
+                            pks: Seq[String])
     extends PartitionReader[InternalRow] {
-  private val clSchema = StructType(dataSchema.fields :+
-    StructField("_row_kind", StringType, false))
   private val (pkIdx, valIdx, types) = BinlogPack.layout(dataSchema, pks)
 
   private lazy val packed: Iterator[InternalRow] = {
     val before = new java.util.LinkedHashMap[Seq[Any], Array[Any]]()
     val after = new java.util.LinkedHashMap[Seq[Any], Array[Any]]()
     val keys = new java.util.LinkedHashSet[Seq[Any]]()
-    files.foreach { f =>
-      val r = new GraftGroupReader(f, clSchema, conf)
-      try {
-        while (r.next()) {
-          val row = r.get()
-          val vals = Array.tabulate[Any](dataSchema.length)(i => row.get(i, types(i)))
-          val kind = row.getUTF8String(dataSchema.length).toString
-          val key = pkIdx.map(vals(_)).toSeq
-          keys.add(key)
-          if (kind == "-U" || kind == "-D") before.put(key, vals)
-          else after.put(key, vals)
-        }
-      } finally r.close()
+    while (in.next()) {
+      // the reader reuses its row: values kept in the maps come from a copy
+      val row = in.get().copy()
+      val vals = Array.tabulate[Any](dataSchema.length)(i => row.get(i, types(i)))
+      val kind = row.getUTF8String(dataSchema.length).toString
+      val key = pkIdx.map(vals(_)).toSeq
+      keys.add(key)
+      if (kind == "-U" || kind == "-D") before.put(key, vals)
+      else after.put(key, vals)
     }
     import scala.jdk.CollectionConverters._
     keys.iterator().asScala.map { k =>
@@ -749,21 +671,20 @@ class GraftBinlogPackReader(files: Array[String], dataSchema: StructType,
     if (packed.hasNext) { cur = packed.next(); true } else false
   }
   override def get(): InternalRow = cur
-  override def close(): Unit = ()
+  override def close(): Unit = in.close()
 }
 
-/** Stateless +I packing of a raw data / delta file (full-state batch or a
+/** Stateless +I packing of raw data / delta rows (full-state batch or a
   * snapshot without changelog files). */
-class GraftBinlogInsertReader(file: String, dataSchema: StructType,
-                              pks: Seq[String], conf: SerializableConfiguration)
+class GraftBinlogInsertReader(in: PartitionReader[InternalRow], dataSchema: StructType,
+                              pks: Seq[String])
     extends PartitionReader[InternalRow] {
   private val (pkIdx, valIdx, types) = BinlogPack.layout(dataSchema, pks)
-  private val inner = new GraftGroupReader(file, dataSchema, conf)
-  override def next(): Boolean = inner.next()
+  override def next(): Boolean = in.next()
   override def get(): InternalRow = {
-    val row = inner.get()
+    val row = in.get()
     val vals = Array.tabulate[Any](dataSchema.length)(i => row.get(i, types(i)))
     BinlogPack.outRow(pkIdx, valIdx, "+I", null, vals)
   }
-  override def close(): Unit = inner.close()
+  override def close(): Unit = in.close()
 }

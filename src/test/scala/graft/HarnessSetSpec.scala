@@ -34,15 +34,17 @@ class HarnessSetSpec extends AnyFunSuite {
     }.map(pkg + _).toSeq
   }
 
-  /** Each line of a main source outside the harnesses (`Bench`, `Verify`,
-    * `tools/`) that matches `pattern`, as `path:line: text`. */
-  private def harnessOnly(pattern: scala.util.matching.Regex): Seq[String] = {
+  /** Each line of a main source outside `skip` (by default the harnesses:
+    * `Bench`, `Verify`, `tools/`) that matches `pattern`, as
+    * `path:line: text`. */
+  private def harnessOnly(pattern: scala.util.matching.Regex,
+                          skip: Seq[String] = Seq("graft/Bench.scala",
+                            "graft/Verify.scala", "graft/tools")): Seq[String] = {
     val root = Paths.get("src", "main", "scala")
-    val harness = Seq("graft/Bench.scala", "graft/Verify.scala", "graft/tools")
-      .map(root.resolve)
+    val skipped = skip.map(root.resolve)
     val files = Files.walk(root)
     try files.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !harness.exists(p.startsWith))
+      .filter(p => p.toString.endsWith(".scala") && !skipped.exists(p.startsWith))
       .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
         case (line, i) if pattern.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
       })
@@ -53,6 +55,16 @@ class HarnessSetSpec extends AnyFunSuite {
   test("the library reads no environment variable and prints nothing") {
     // configuration is table options and Spark conf; output is logging
     val hits = harnessOnly("""\bsys\.env\b|\bSystem\.getenv\b|\bprintln\b""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main has one parquet decoder: Spark's reader factories") {
+    // batch scans, merges and streams all decode through Spark's parquet
+    // reader; a hand-written one (parquet's Group API, a ParquetReader)
+    // drifts from it on every type it does not list
+    val hits = harnessOnly(
+      """org\.apache\.parquet\.example|org\.apache\.parquet\.hadoop\.ParquetReader|\bParquetReader\b""".r,
+      skip = Nil)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

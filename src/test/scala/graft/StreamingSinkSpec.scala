@@ -63,69 +63,93 @@ class StreamingSinkSpec extends SparkTestBase {
       s"got $got")
   }
 
-  test("fuzz: latest-full stream state equals the batch read across random LSM histories") {
+  /** A table shape the stream fuzz tests run over: its schema and a random
+    * row for key `k` (the key column is always `k`). */
+  private case class Shape(schema: org.apache.spark.sql.types.StructType,
+                           row: (Long, scala.util.Random) => org.apache.spark.sql.Row)
+
+  private val plainShape = Shape(Seq((1L, "a")).toDF("k", "v").schema,
+    (k, rnd) => org.apache.spark.sql.Row(k, s"r${rnd.nextInt(1000)}"))
+
+  /** Decimal, short, byte, array, map and struct columns beside the key. */
+  private val typedShape = Shape(
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "k BIGINT NOT NULL, d DECIMAL(12,2), s SMALLINT, b TINYINT, " +
+        "emb ARRAY<FLOAT>, attrs MAP<STRING,INT>, st STRUCT<a: INT, c: STRING>"),
+    (k, rnd) => {
+      val n = rnd.nextInt(1000)
+      org.apache.spark.sql.Row(k, new java.math.BigDecimal(n).movePointLeft(2),
+        (n % 300).toShort, (n % 100).toByte,
+        if (n % 7 == 0) null else Seq(n.toFloat, n / 3.0f),
+        Map(s"a$n" -> n, "z" -> (n % 5)),
+        org.apache.spark.sql.Row(n, s"c$n"))
+    })
+
+  /** `n` random rows over keys in [0, keys). */
+  private def rows(shape: Shape, n: Int, keys: Int, rnd: scala.util.Random) =
+    spark.createDataFrame(java.util.Arrays.asList(
+      (0 until n).map(_ => shape.row(rnd.nextInt(keys).toLong, rnd)): _*), shape.schema)
+
+  /** Multiset of a frame's rows. */
+  private def bag(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  /** Random LSM histories (upsert/append waves, DV deletes, compactions),
+    * then a latest-full stream: its rows must equal the batch read. */
+  private def latestFullFuzz(tag: String, shape: Shape, pk: Boolean): Unit = {
     import graft.core.RowOps._
     import org.apache.spark.sql.streaming.Trigger
     val rnd = new scala.util.Random(7L)
     for (round <- 0 until 3) {
-      val loc = tmpLoc(s"sfz$round")
-      val t = GraftTable.create(spark, loc,
-        Seq((1L, "a")).toDF("k", "v").schema,
-        TableConfig(primaryKeys = Seq("k"), numBuckets = 1 + rnd.nextInt(3)))
+      val loc = tmpLoc(s"sfz$tag$round")
+      val buckets = 1 + rnd.nextInt(3)
+      val t = GraftTable.create(spark, loc, shape.schema,
+        if (pk) TableConfig(primaryKeys = Seq("k"), numBuckets = buckets)
+        else TableConfig())
       val ops = 3 + rnd.nextInt(3)
       for (_ <- 0 until ops) {
         rnd.nextInt(10) match {
           case n if n < 6 => // upsert wave over a small key space
-            t.write((0 until (5 + rnd.nextInt(15)))
-              .map(_ => (rnd.nextInt(30).toLong, s"r${rnd.nextInt(1000)}"))
-              .toDF("k", "v"))
+            t.write(rows(shape, 5 + rnd.nextInt(15), 30, rnd))
           case n if n < 8 => // DV delete of a random key
             t.deleteDv(col("k") === rnd.nextInt(30).toLong)
           case _ => t.compact()
         }
       }
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-sfz$round").toString
-      val name = s"sfz_mem_$round"
+      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-sfz$tag$round").toString
+      val name = s"sfz_mem_$tag$round"
       val q = spark.readStream.format("graft").load(loc)
         .writeStream.trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt)
         .format("memory").queryName(name).start()
       q.awaitTermination(120000)
-      val streamed = spark.sql(s"SELECT k, v FROM $name")
-        .as[(Long, String)].collect().toSet
-      val batch = GraftTable.load(spark, loc).read()
-        .as[(Long, String)].collect().toSet
+      val streamed = bag(spark.table(name))
+      val batch = bag(GraftTable.load(spark, loc).read())
       assert(streamed == batch,
-        s"round $round:\nstream-only: ${(streamed -- batch).take(5)}" +
-          s"\nbatch-only: ${(batch -- streamed).take(5)}")
+        s"round $round:\nstream-only: ${(streamed.toSet -- batch).take(5)}" +
+          s"\nbatch-only: ${(batch.toSet -- streamed).take(5)}")
     }
   }
 
-  test("fuzz: from-snapshot delta replay into a second PK table reconstructs the state") {
-    // the other streaming direction: raw upsert deltas (changelog-producer
-    // =input semantics) replayed through the sink must converge to the
-    // source's merged state. DV deletes are excluded — a DV mutates
-    // history in place and is invisible to a delta-only replay by design
-    // (the reference replays them via audit_log/changelog, covered by
-    // q_binlog_stream); compactions must be invisible to the stream.
+  /** Random write histories with compactions replayed from snapshot 1
+    * through the stream into a second table, which must converge to the
+    * source's state. */
+  private def deltaReplayFuzz(tag: String, shape: Shape, pk: Boolean): Unit = {
     import graft.core.RowOps._
     import org.apache.spark.sql.streaming.Trigger
     val rnd = new scala.util.Random(11L)
     for (round <- 0 until 2) {
-      val srcLoc = tmpLoc(s"rpl_src$round")
-      val dstLoc = tmpLoc(s"rpl_dst$round")
-      val schema = Seq((1L, "a")).toDF("k", "v").schema
-      val src = GraftTable.create(spark, srcLoc, schema,
-        TableConfig(primaryKeys = Seq("k"), numBuckets = 2))
-      GraftTable.create(spark, dstLoc, schema,
-        TableConfig(primaryKeys = Seq("k"), numBuckets = 3))
+      val srcLoc = tmpLoc(s"rpl_src$tag$round")
+      val dstLoc = tmpLoc(s"rpl_dst$tag$round")
+      val src = GraftTable.create(spark, srcLoc, shape.schema,
+        if (pk) TableConfig(primaryKeys = Seq("k"), numBuckets = 2) else TableConfig())
+      GraftTable.create(spark, dstLoc, shape.schema,
+        if (pk) TableConfig(primaryKeys = Seq("k"), numBuckets = 3) else TableConfig())
       for (_ <- 0 until 4 + rnd.nextInt(3)) {
-        src.write((0 until (5 + rnd.nextInt(10)))
-          .map(_ => (rnd.nextInt(25).toLong, s"r${rnd.nextInt(1000)}"))
-          .toDF("k", "v"))
+        src.write(rows(shape, 5 + rnd.nextInt(10), 25, rnd))
         if (rnd.nextInt(3) == 0) src.compact()
       }
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-rpl$round").toString
+      val ckpt = java.nio.file.Files.createTempDirectory(s"graft-rpl$tag$round").toString
       val q = spark.readStream.format("graft")
         .option("scan.mode", "from-snapshot").option("scan.snapshot-id", "1")
         .load(srcLoc)
@@ -135,13 +159,64 @@ class StreamingSinkSpec extends SparkTestBase {
           GraftTable.load(spark, dstLoc).write(b); ()
         }.start()
       q.awaitTermination(120000)
-      val want = src.read().as[(Long, String)].collect().toSet
-      val got = GraftTable.load(spark, dstLoc).read()
-        .as[(Long, String)].collect().toSet
+      val want = bag(src.read())
+      val got = bag(GraftTable.load(spark, dstLoc).read())
       assert(got == want,
-        s"round $round:\nreplay-only: ${(got -- want).take(5)}" +
-          s"\nsource-only: ${(want -- got).take(5)}")
+        s"round $round:\nreplay-only: ${(got.toSet -- want).take(5)}" +
+          s"\nsource-only: ${(want.toSet -- got).take(5)}")
     }
+  }
+
+  test("fuzz: latest-full stream state equals the batch read across random LSM histories") {
+    latestFullFuzz("", plainShape, pk = true)
+    // streams decode through the batch scans' parquet readers, so every
+    // type a batch read serves streams too, from PK and append tables
+    latestFullFuzz("typk", typedShape, pk = true)
+    latestFullFuzz("tyap", typedShape, pk = false)
+  }
+
+  test("fuzz: from-snapshot delta replay into a second PK table reconstructs the state") {
+    // the other streaming direction: raw upsert deltas (changelog-producer
+    // =input semantics) replayed through the sink must converge to the
+    // source's merged state. DV deletes are excluded — a DV mutates
+    // history in place and is invisible to a delta-only replay by design
+    // (the reference replays them via audit_log/changelog, covered by
+    // q_binlog_stream); compactions must be invisible to the stream.
+    deltaReplayFuzz("", plainShape, pk = true)
+    // every column type, and an append table's deltas into an append table
+    deltaReplayFuzz("typk", typedShape, pk = true)
+    deltaReplayFuzz("tyap", typedShape, pk = false)
+  }
+
+  test("latest-full stream of an append table drops deletion-vector-deleted rows") {
+    import graft.core.RowOps._
+    import org.apache.spark.sql.streaming.Trigger
+    val loc = tmpLoc("sfull-append-dv")
+    val t = GraftTable.create(spark, loc, Seq((1L, "a")).toDF("k", "v").schema,
+      TableConfig())
+    t.write((1L to 6L).map(i => (i, s"v$i")).toDF("k", "v"))
+    t.deleteDv(col("k") === 2L || col("k") === 5L)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-sfull-adv").toString
+    val q = spark.readStream.format("graft").load(loc) // latest-full default
+      .writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("sfull_adv_mem").start()
+    q.awaitTermination(120000)
+    val got = spark.table("sfull_adv_mem").as[(Long, String)].collect().sorted.toSeq
+    val want = GraftTable.load(spark, loc).read().as[(Long, String)].collect().sorted.toSeq
+    assert(want == Seq((1L, "v1"), (3L, "v3"), (4L, "v4"), (6L, "v6")), s"batch read $want")
+    assert(got == want, s"got $got")
+  }
+
+  test("a stream over a non-parquet table fails when it is created, naming file.format") {
+    val loc = tmpLoc("stream-orc")
+    val t = GraftTable.create(spark, loc, Seq((1L, "a")).toDF("k", "v").schema,
+      TableConfig(options = Map("file.format" -> "orc")))
+    t.write(Seq((1L, "a")).toDF("k", "v"))
+    val e = intercept[IllegalArgumentException] {
+      new graft.dsv2.GraftMicroBatchStream(GraftTable.load(spark, loc), "unused")
+    }
+    assert(e.getMessage.contains("file.format=orc"), e.getMessage)
   }
 
   test("binlog streaming: per-commit changes pack as [before, after] arrays") {
